@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints one JSON line. A warmup action first so the first measured
   * query doesn't absorb JVM/codegen/file-listing warmup. */
@@ -9,47 +7,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_INITIAL_PARTS: opt-in shuffle over-planning for
-    // LARGE inputs (sf10 spot checks set 8x cores) — shuffles plan
-    // wide and AQE coalesces down, splitting spill across enough
-    // partitions to stay in memory (q60 at sf10: x10.3 -> x5.9 per
-    // decade; q68 x6.3 -> x2.2). NOT the default — and when absent
-    // the config stays genuinely UNSET: even initialPartitionNum ==
-    // shuffle.partitions changes AQE's coalesce behavior (measured
-    // ~2x on the window-heavy q54/q60 at sf1), so a deployment sizes
-    // this per input volume (SURVEY §5's shuffle-sizing posture).
-    // SPARK_GRAFT_CONF: semicolon-separated key=value session confs —
-    // the A/B lever for session-level tuning experiments (r17) and the
-    // deployment's knob for scale-dependent settings. Default: unset,
-    // so the driver's bench runs the exact configuration above.
-    val builder1 = sys.env.get("SPARK_GRAFT_CONF").fold(builder0) { s =>
-      s.split(';').filter(_.nonEmpty).foldLeft(builder0) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k.trim, v.trim)
-          case _ => sys.error(s"SPARK_GRAFT_CONF entry not key=value: '$kv'")
-        }
-      }
-    }
-    val spark = sys.env.get("SPARK_GRAFT_INITIAL_PARTS")
-      .fold(builder1)(v => builder1.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", v))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.all.foreach { t =>
-      // events is TIMESTAMP(NANOS) parquet — only Tables.events sets the
-      // legacy nanos conf, so a raw load would abort and skip the warmup.
-      try {
-        if (t == "events") graft.sources.Tables.events(spark, sfDir).count()
-        else graft.sources.Tables.load(spark, sfDir, t).count()
-      } catch { case e: Throwable => System.err.println(s"WARMUP FAIL $t: $e") }
-    }
+    val spark = GraftSession(cpus.toInt)
+    graft.sources.Tables.warm(spark, sfDir)
     // noop sink: forces every projection to actually compute (count()
     // would let Catalyst prune unused result columns).
     // min-of-3 runs per query: a transient environment stall (GC, noisy

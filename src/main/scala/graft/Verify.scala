@@ -1,30 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Verify <sfDir> <outDir> [name ...]: names restrict both the dump
+    // and oracle_sql.json to a subset (the single-query bisect tool)
+    val Array(sfDir, outDir, names @ _*) = args
+    val unknown = names.filterNot(SparkEntry.queries.keySet)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")} — valid names: " +
+      SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+    def selected(kv: (String, Any)) = names.isEmpty || names.contains(kv._1)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=<q1,q2> restricts the dump to a subset —
-    // the single-query bisect tool, mirroring SPARK_GRAFT_BENCH_ONLY.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ks) => SparkEntry.queries.view.filterKeys(ks).toMap
-      case None     => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(selected).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -43,7 +32,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(selected)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -28,8 +28,11 @@ object VectorFunctions {
   def dotD(a: Column, b: Column): Column = graft.plans.VecDot.vecDot(a, b)
 
   /** Cast an array<float> to array<double> once, at projection time.
-    * Pair-wise ops then avoid 2×dim casts per comparison. */
-  def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
+    * Pair-wise ops then avoid 2×dim casts per comparison. The built-in
+    * array cast is codegen'd (a `transform` lambda would run
+    * interpreted) and value- and type-identical to the per-element
+    * cast (SqlFunctionsSpec). */
+  def asDouble(a: Column): Column = a.cast("array<double>")
 
   /** Cosine from pre-projected double vectors and their pre-computed
     * norms: dot(a,b)/(na*nb) — identical arithmetic to [[cosine]]

@@ -499,7 +499,7 @@ object Similarity {
     * deployments retrain on drift schedules, not per delta).
     *
     * Scale shape — cost is O(delta + touched cells), never O(corpus):
-    *  - stale ids (removed/changed) find their OLD cells with one
+    *  - stale ids (every delta id) find their OLD cells with one
     *    broadcast semi-join against the code table (8-byte code words,
     *    never raw vectors);
     *  - fresh rows (added/changed) are the only vectors re-encoded
@@ -543,7 +543,9 @@ object Similarity {
     recoverIndex(spark, path) // roll forward a crashed swap first
     val (cents, codebook, blocks, blockDim) = loadArtifacts(spark, path)
     val cellsPath = s"$path/cells"
-    val stale = delta.filter(col("status").isin("removed", "changed"))
+    // added ids are stale too: on a re-apply they are already in cells/
+    // and must not survive next to their re-encoded row
+    val stale = delta.filter(col("status").isin("added", "removed", "changed"))
       .select(col(idCol).cast("long").as("nbr_id"))
     val freshIds = delta.filter(col("status").isin("added", "changed"))
       .select(col(idCol).cast("long").as("__fid"))

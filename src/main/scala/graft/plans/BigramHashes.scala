@@ -2,10 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.BridgeTypes.AbstractDataType
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-bigram (h1, h2) hash pairs of a token array in ONE native loop:
@@ -29,9 +31,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each token is hashed once (h1 of bigram i is reused as input state
   * for nothing — token hashes and window hashes are independent XXH64
   * runs, exactly as the two ShingleHashes calls produced them). */
-case class BigramHashes(child: Expression) extends UnaryExpression {
+case class BigramHashes(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = BigramHashes.outType
+
+  // `pairs` reads elements without a null check: a token array that may
+  // hold nulls is an analysis error, not an NPE in a task (Tokens and
+  // split both declare non-null elements)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_, true) => TypeCheckResult.TypeCheckFailure(
+      "bigram hashes need a token array with non-null elements")
+    case _ => super.checkInputDataTypes()
+  }
 
   private val sep = UTF8String.fromString(" ")
 

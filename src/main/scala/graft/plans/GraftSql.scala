@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * public precedent; the reference's analysts drive exactly these
   * verbs through SQL against its managed store).
   *
-  * Injected by [[GraftExtensions]] (`SparkSession.builder()
-  * .withExtensions(new GraftExtensions)`): a delegating
+  * Injected by [[GraftExtensions]] (every [[graft.GraftSession]]
+  * registers it): a delegating
   * [[ParserInterface]] that recognizes the graft statements below and
   * hands EVERYTHING else to Spark's parser untouched, plus
   * table-valued functions for reads with time travel. Tables are

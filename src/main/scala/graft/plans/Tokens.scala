@@ -1,9 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.BridgeTypes.AbstractDataType
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,7 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * is exactly splitting on the character. Parity with the HOF chain
   * (incl. multi-space runs, leading/trailing spaces, unicode, empty
   * and null inputs) is pinned by SqlFunctionsSpec. */
-case class Tokens(child: Expression) extends UnaryExpression {
+case class Tokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+
+  // a non-string child is an analysis error, not a ClassCastException
+  // inside a task
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   // containsNull matches `filter(split(...))`'s declared type exactly
   // (split declares non-null elements) — a different nullability here

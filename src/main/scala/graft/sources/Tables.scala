@@ -19,6 +19,14 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Count every table once so the first timed query does not absorb
+    * JVM, codegen and file-listing warm-up. `events` goes through
+    * [[events]], the only loader that reads its nanos timestamps. */
+  def warm(spark: SparkSession, sfDir: String): Unit = all.foreach { t =>
+    try (if (t == "events") events(spark, sfDir) else load(spark, sfDir, t)).count()
+    catch { case e: Throwable => System.err.println(s"WARMUP FAIL $t: $e") }
+  }
+
   /** JSON source with explicit schema (schema inference is a full
     * extra pass at 100 TB — never rely on it). The reference ingests
     * JSON API payloads (ingestion.py fetch_titles). */

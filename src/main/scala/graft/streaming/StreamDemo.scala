@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{Event, Tables}
 
 /** Runnable streaming demo: feeds the events table through the
@@ -15,14 +13,7 @@ object StreamDemo {
     // the demo collects its feed to drive MemoryStream — cap it so
     // pointing at a large sf stays a demo, not a driver-memory test
     val maxEvents = args.lift(2).map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 

@@ -3,40 +3,28 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.sources.Tables
 
 /** Measurement tool (optimization rounds only, never part of the
-  * driver contract): runs each query once through the noop sink and
-  * prints how many Spark JOBS and STAGES it submitted plus its wall
-  * time. At small scale factors most of the bench total is
+  * bench contract): runs each query through the noop sink and prints
+  * how many Spark JOBS, STAGES and TASKS one run submits plus its
+  * min-of-reps wall time. At small scale factors most of the bench total is
   * stage-scheduling floor, so #stages × stage-floor ≈ cost — this is
   * the profile that says WHICH queries pay a fixed overhead far above
   * their data size (guide §1.1: decide where the time goes first).
   *
-  * Usage: JobCount <sfDir> [namePrefixFilter]
+  * Usage: JobCount <sfDir> [namePrefixFilter] [reps=1] ("" = all)
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val filter = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach { t =>
-      try {
-        if (t == "events") Tables.events(spark, sfDir).count()
-        else Tables.load(spark, sfDir, t).count()
-      } catch { case _: Throwable => () }
-    }
+    val filter = args.lift(1).getOrElse("")
+    val reps = args.lift(2).fold(1)(_.toInt)
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Tables.warm(spark, sfDir)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -51,21 +39,24 @@ object JobCount {
     println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s")
     var totJ = 0; var totS = 0; var totSec = 0.0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (filter.forall(name.startsWith)) {
+      if (name.startsWith(filter)) {
         try {
-          // run 1 warms per-query setup fixtures (and JIT); run 2 is
-          // the number the bench's min-of-3 actually measures
+          // run 1 warms per-query setup fixtures (and JIT); the timed
+          // runs are what the bench's min-of-3 actually measures
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           jobs.set(0); stages.set(0); tasks.set(0)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
+          val sec = (1 to reps).map { _ =>
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }.min
           // listener events are async; give the bus a beat to drain
           // (private listenerBus — a bounded sleep is enough for a
           // measurement tool; counts are stable ±1 at these scales)
           Thread.sleep(150)
-          totJ += jobs.get(); totS += stages.get(); totSec += sec
-          println(f"$name%-28s $sec%7.2f ${jobs.get()}%5d ${stages.get()}%7d ${tasks.get()}%6d")
+          val (j, s, t) = (jobs.get() / reps, stages.get() / reps, tasks.get() / reps)
+          totJ += j; totS += s; totSec += sec
+          println(f"$name%-28s $sec%7.2f $j%5d $s%7d $t%6d")
         } catch {
           case e: Throwable => println(f"$name%-28s FAILED: ${e.toString.take(120)}")
         }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build a larger-scale BENCH dataset by key-shifted replication of a
@@ -39,16 +39,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new java.io.File(out).mkdirs()
 
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")

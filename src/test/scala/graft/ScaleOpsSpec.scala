@@ -222,12 +222,15 @@ class ScaleOpsSpec extends AnyFunSuite {
           d.getName -> d.listFiles().map(f => (f.getName, f.lastModified())).toSet
         }.toMap
     val before = cellFiles()
-    // a SMALL delta (2 removed, 2 changed of 500) so most cells stay
-    // untouched and the untouched-dir assertion has teeth
+    // a SMALL delta (2 removed, 2 changed, 2 added of 500) so most
+    // cells stay untouched and the untouched-dir assertion has teeth;
+    // the added rows are existing vectors under new (re-keyed) ids
     val v2 = v1.filter(col("vec_id") % 250 =!= 3)
       .withColumn("embedding",
         when(col("vec_id") % 250 === 7, transform(col("embedding"), x => -x))
           .otherwise(col("embedding")))
+      .unionByName(v1.filter(col("vec_id") % 250 === 11)
+        .withColumn("vec_id", col("vec_id") + 1000000))
     val content = concat_ws(",", col("embedding").cast("array<string>"))
     val delta = Versioning.datasetDiff(
       v1.withColumn("__c", content), v2.withColumn("__c", content), "vec_id", "__c")
@@ -249,9 +252,11 @@ class ScaleOpsSpec extends AnyFunSuite {
       .select(col("nbr_id"), col("cell").cast("long"), col("codes"))
     assert(updated.exceptAll(fresh).count() === 0)
     assert(fresh.exceptAll(updated).count() === 0)
+    assert(delta.filter(col("status") === "added").count() === 2)
     // idempotence: re-applying the same delta leaves the content
-    // unchanged (it touches fewer cells — removed ids are already gone,
-    // so only the changed ids' current homes rewrite)
+    // unchanged — no duplicate rows for the added ids (it touches
+    // fewer cells: removed ids are already gone, so only the changed
+    // and added ids' current homes rewrite)
     val touched2 = Similarity.applyIndexDelta(v2, delta, "vec_id", path)
     assert(touched2.toSet.subsetOf(touched.toSet),
       s"re-apply touched new cells: $touched2 vs $touched")

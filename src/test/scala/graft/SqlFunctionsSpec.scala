@@ -78,7 +78,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
     import graft.functions.{TextFunctions => TF}
     def hofTokens(text: org.apache.spark.sql.Column) =
       filter(split(text, " "), t => t =!= lit(""))
-    // corpus parity (the type must match too: nullable elements, like
+    // corpus parity (the type must match too: non-null elements, as
     // filter(split(...)) declares)
     val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
     val both = docs.select(TF.tokens(col("text")).as("native"),
@@ -92,6 +92,37 @@ class SqlFunctionsSpec extends AnyFunSuite {
       .toDF("t")
       .select(TF.tokens(col("t")).as("native"), hofTokens(col("t")).as("hof"))
     assert(edge.filter(!(col("native") <=> col("hof"))).count() === 0)
+  }
+
+  test("Tokens and BigramHashes reject wrong input types at analysis time") {
+    import org.apache.spark.sql.AnalysisException
+    import graft.plans.{BigramHashes, Tokens}
+    import spark.implicits._
+    // toDF declares the token array's elements nullable
+    val df = Seq((1L, Seq("a", null, "b"))).toDF("n", "toks")
+    for ((bad, expected) <- Seq(Tokens.tokens(col("n")) -> "DATATYPE_MISMATCH",
+        BigramHashes.bigramHashes(col("n")) -> "DATATYPE_MISMATCH",
+        BigramHashes.bigramHashes(col("toks")) -> "non-null elements")) {
+      val e = intercept[AnalysisException](df.select(bad).collect())
+      assert(e.getMessage.contains(expected), e.getMessage)
+    }
+    // split declares non-null elements, so the SQL-shaped input passes
+    assert(df.select(BigramHashes.bigramHashes(split(lit("a b c"), " ")))
+      .head().getSeq[Any](0).length === 2)
+  }
+
+  test("asDouble's built-in array cast matches the per-element transform") {
+    import graft.functions.{VectorFunctions => VF}
+    import spark.implicits._
+    // corpus vectors plus edges: empty, a null element, a null array
+    val edge = Seq(Seq[java.lang.Float](), Seq[java.lang.Float](1.5f, null, -0.1f), null)
+      .toDF("embedding")
+    for (df <- Seq(graft.sources.Tables.embeddings(spark, TestSpark.sf), edge)) {
+      val both = df.select(VF.asDouble(col("embedding")).as("cast"),
+        transform(col("embedding"), x => x.cast("double")).as("hof"))
+      assert(both.schema("cast").dataType === both.schema("hof").dataType)
+      assert(both.filter(!(col("cast") <=> col("hof"))).count() === 0)
+    }
   }
 
   test("native BigramHashes matches the paired ShingleHashes reference") {
