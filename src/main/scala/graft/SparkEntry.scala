@@ -2133,8 +2133,9 @@ object SparkEntry {
     * accumulated sidecar deletes over an UNSORTED base rewrites once
     * into a doc_id-clustered, zone-mapped generation; after it, reads
     * anti-join nothing AND range reads prune files by metadata
-    * (ScaleOpsSpec pins both on physical inputFiles). The query
-    * answers a range probe THROUGH the optimized layout; the oracle
+    * (ScaleOpsSpec pins both on the executed scan's files). The query
+    * answers a range probe ([[graft.operators.TableLog.snapshotWhere]])
+    * THROUGH the optimized layout; the oracle
     * is the plain range+deletes filter over the base table — the
     * rewrite must buy cost, never answers. */
   private val q138Cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2148,7 +2149,7 @@ object SparkEntry {
         p, "purge9") // v1 — sidecar only
       tl.optimizeTable(s, p, "doc_id", "doc_id", "opt1", parts = 16) // v2
     }
-    graft.operators.TableLog.snapshotRange(s, root, "doc_id", 100L, 299L)
+    graft.operators.TableLog.snapshotWhere(s, root, "doc_id", 100L, 299L)
       .orderBy(col("doc_id"))
   }
 
@@ -2371,9 +2372,7 @@ object SparkEntry {
     * range-clustered on the composite string key with typed per-file
     * (scol, kind, lo, hi) stats, and the prefix probe reads only the
     * files whose string interval intersects [prefix,
-    * successor(prefix)) — O(selectivity) at 100 TB, where the
-    * pre-typed cast-to-long sidecar could not serve string keys at
-    * all. The prefix 'src1:' also proves prefix SEMANTICS: 'src10'..
+    * successor(prefix)) — O(selectivity) at 100 TB. The prefix 'src1:' also proves prefix SEMANTICS: 'src10'..
     * 'src19' rows share the 'src1' run but not the delimited prefix,
     * and must not leak in. Oracle: the plain source filter. */
   private val q146Cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2393,7 +2392,7 @@ object SparkEntry {
   }
 
   /** DATE-KEYED TTL PURGE ([[graft.operators.TableLog
-    * .deleteWhereTyped]]) — the most common DELETE WHERE in
+    * .deleteWhere]] with LocalDate bounds) — the most common DELETE WHERE in
     * existence: "purge this date window" over a date-clustered table
     * (the reference's DynamoDB rows carry exactly such ingest dates;
     * consumer.py writes them per item). Typed per-file date stats
@@ -2412,7 +2411,7 @@ object SparkEntry {
           (col("doc_id") % 365).cast("int")))
       val (files, zm) = tl.stageWithZoneMap(dated, p, "base", "day", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
-      tl.deleteWhereTyped(s, p, "day",
+      tl.deleteWhere(s, p, "day",
         java.time.LocalDate.of(2020, 3, 1),
         java.time.LocalDate.of(2020, 6, 30), "ttl", 4)
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** A minimal TRANSACTION-LOG table format — versioned snapshots over
   * immutable parquet files, the storage discipline every reproducible
@@ -787,7 +787,7 @@ object TableLog {
     * ([[stageWithZoneMap]]) — the maintenance step that buys BOTH
     * bounded read-path cost (sidecar deletes fold in, reads anti-join
     * nothing afterwards) and stats-based file skipping
-    * ([[snapshotRange]] prunes by the fresh map) in one atomic
+    * ([[snapshotWhere]] prunes by the fresh map) in one atomic
     * commit: pay the rewrite once, on schedule, and every range read
     * after it is O(selectivity).
     *
@@ -1360,8 +1360,9 @@ object TableLog {
 
   /** The active file set of the most recent non-empty version at or
     * before `upTo` — the empty-snapshot schema fallback shared by
-    * [[snapshot]] and [[restoreTable]]. */
-  private def lastNonEmptyFiles(spark: SparkSession, root: String,
+    * [[snapshot]], [[restoreTable]] and
+    * [[TableLogRelation.snapshotDf]]. */
+  private[operators] def lastNonEmptyFiles(spark: SparkSession, root: String,
                                 upTo: Option[Long]): Option[Seq[String]] = {
     val vs = versions(spark, root)
     upTo.fold(vs)(v => vs.filter(_ <= v)).reverse
@@ -1552,17 +1553,7 @@ object TableLog {
                 nBuckets: Int, name: String,
                 tag: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(activeDeletes(spark, root).isEmpty,
-      s"TableLog.mergeInto: $root has delete sidecars in force — " +
-        "compactTable first so merge reads files, not filtered views")
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.mergeInto: empty log at $root"))
-    val active = activeFiles(spark, root, Some(readV))
-    val untagged = active.filterNot(bucketOf(_).isDefined)
-    require(untagged.isEmpty,
-      s"TableLog.mergeInto: un-bucketed active files at $root " +
-        s"(e.g. ${untagged.headOption.getOrElse("")}) — stage the " +
-        "table with stageBucketed for bucket-pruned merges")
+    val (readV, active) = mergeReadSet(spark, root, "mergeInto")
     val touched = upserts.select(idBucket(idCol, nBuckets).as("b"))
       .unionByName(deleteIds.select(
         idBucket(deleteIds.columns.head, nBuckets).as("b")))
@@ -1582,20 +1573,47 @@ object TableLog {
     val merged = base.join(doomedIds, Seq(idCol), "left_anti")
       .unionByName(upserts)
     val adds = stageBucketed(merged, root, name, idCol, nBuckets)
-    // conflict guards: (1) the touched buckets' files this merge read
-    // and rewrote must still be active at commit — a concurrent merge
-    // on an OVERLAPPING bucket set would otherwise be silently lost;
-    // (2) no concurrent commit may have ADDED a file tagged with one
-    // of this merge's buckets (rows with this merge's ids it never
-    // saw — duplicate ids beside its output). Disjoint-bucket merges
-    // pass both: their read sets stay active and their added paths
-    // carry other buckets.
+    commitMerge(spark, root, adds, oldTouched, touched, readV, tag)
+  }
+
+  /** The shared merge prologue: refuse in-force delete sidecars and
+    * un-bucketed active files (either would turn a bucket-scoped merge
+    * into a silent full rewrite), then pin the read version. Returns
+    * (readV, active files at readV). */
+  private def mergeReadSet(spark: SparkSession, root: String,
+                           face: String): (Long, Seq[String]) = {
+    require(activeDeletes(spark, root).isEmpty,
+      s"TableLog.$face: $root has delete sidecars in force — " +
+        "compactTable first so merge reads files, not filtered views")
+    val readV = versions(spark, root).lastOption.getOrElse(
+      sys.error(s"TableLog.$face: empty log at $root"))
+    val active = activeFiles(spark, root, Some(readV))
+    val untagged = active.filterNot(bucketOf(_).isDefined)
+    require(untagged.isEmpty,
+      s"TableLog.$face: un-bucketed active files at $root " +
+        s"(e.g. ${untagged.headOption.getOrElse("")}) — stage the " +
+        "table with stageBucketed for bucket-pruned merges")
+    (readV, active)
+  }
+
+  /** The shared merge commit: swap the touched buckets' files for the
+    * restaged ones. Conflict guards: (1) the files this merge read and
+    * rewrote must still be active — a concurrent merge on an
+    * OVERLAPPING bucket set would otherwise be silently lost; (2) no
+    * commit since `readV` may have ADDED a file tagged with one of
+    * this merge's buckets (rows with this merge's ids it never saw —
+    * duplicate ids beside its output). Disjoint-bucket merges pass
+    * both: their read sets stay active and their added paths carry
+    * other buckets. */
+  private def commitMerge(spark: SparkSession, root: String,
+                          adds: Seq[String], oldTouched: Seq[String],
+                          touched: Set[Int], readV: Long,
+                          tag: Option[String]): Long =
     commit(spark, root, add = adds, remove = oldTouched, tag = tag,
       op = Some("MERGE"),
       expectActive = oldTouched, expectDeletes = Some(Nil),
       expectNoConflictingAdds =
         Some((readV, p => bucketOf(p).forall(touched))))
-  }
 
   /** The TYPED-stats kind tag for a column, or None when the type has
     * no order-preserving string serialization (such a column simply
@@ -1650,39 +1668,67 @@ object TableLog {
     case _ => java.lang.Long.compare(a.toLong, b.toLong)
   }
 
-  /** Normalize a TYPED predicate bound to (kind, serialized repr) —
-    * the driver-side twin of [[zser]]. Accepts the natural Scala/Java
-    * types a caller holds: integral → long, String → string,
-    * LocalDate / sql.Date → date, Instant / sql.Timestamp →
-    * timestamp, Float/Double → double. */
-  private def zbound(v: Any): (String, String) = v match {
-    case l: Long => ("long", l.toString)
-    case i: Int => ("long", i.toString)
-    case s: Short => ("long", s.toString)
-    case b: Byte => ("long", b.toString)
-    case s: String => ("string", s)
-    case d: java.time.LocalDate => ("date", d.toEpochDay.toString)
-    case d: java.sql.Date => ("date", d.toLocalDate.toEpochDay.toString)
-    case t: java.time.Instant =>
-      ("timestamp", java.time.temporal.ChronoUnit.MICROS
-        .between(java.time.Instant.EPOCH, t).toString)
-    case t: java.sql.Timestamp =>
-      ("timestamp", java.time.temporal.ChronoUnit.MICROS
-        .between(java.time.Instant.EPOCH, t.toInstant).toString)
-    case d: Double => ("double", d.toString)
-    case f: Float => ("double", f.toDouble.toString)
-    case d: java.math.BigDecimal => ("decimal", d.toPlainString)
-    case d: BigDecimal => ("decimal", d.bigDecimal.toPlainString)
-    case other => sys.error(
-      s"TableLog: unsupported zone-predicate bound $other " +
-        s"(${other.getClass.getName}) — use Long/Int/String/LocalDate/" +
-        "sql.Date/Instant/sql.Timestamp/Double")
+  /** (stats kind, serialized repr) of a Catalyst literal — the
+    * driver-side twin of [[zser]], shared by [[zbound]] and
+    * [[TableLogFileIndex]]'s pushed-filter translation. None for a
+    * NULL literal (comparisons to NULL match nothing) and for types
+    * without a stats kind. */
+  private[operators] def kindRepr(dt: org.apache.spark.sql.types.DataType,
+                                  v: Any): Option[(String, String)] = {
+    import org.apache.spark.sql.types._
+    (dt, v) match {
+      case (_, null) => None
+      case (ByteType | ShortType | IntegerType | LongType, x) =>
+        Some(("long", x.toString))
+      case (DateType, days) => Some(("date", days.toString)) // Int epoch days
+      case (TimestampType, micros) => Some(("timestamp", micros.toString))
+      case (StringType, s) => Some(("string", s.toString)) // UTF8String
+      // FloatType: the sidecar stores float bounds WIDENED to double
+      // (zser casts through double before serializing), so the literal
+      // must widen the same way — Float.toString's short repr ("1.3")
+      // parses as the double 1.3, which sits ABOVE the widened stored
+      // bound 1.2999999523162842 and would wrongly prune a file whose
+      // rows satisfy `col >= 1.3f`. Double.toString round-trips.
+      case (FloatType, x: java.lang.Float) =>
+        Some(("double", x.toDouble.toString))
+      case (DoubleType, x) => Some(("double", x.toString))
+      // Decimal literals serialize to the same plain string form the
+      // sidecar stored (zser casts through string); zcmp compares
+      // numerically, so scale differences between the literal and the
+      // column never mis-order
+      case (_: DecimalType, d: Decimal) =>
+        Some(("decimal", d.toBigDecimal.bigDecimal.toPlainString))
+      case _ => None
+    }
   }
 
-  /** A DataFrame literal for a typed bound (the residual filter's
-    * side of [[zbound]]). */
-  private def zlit(v: Any): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.lit(v)
+  /** Normalize a TYPED predicate bound to (kind, serialized repr): the
+    * [[kindRepr]] of `lit(v)`'s literal, so a bound prunes in exactly
+    * the domain the row filter `col >= lit(v)` compares in. Accepts
+    * the natural Scala/Java types a caller holds: integral → long,
+    * String → string, LocalDate / sql.Date → date, Instant /
+    * sql.Timestamp → timestamp, Float/Double → double, BigDecimal →
+    * decimal. */
+  private def zbound(v: Any): (String, String) =
+    scala.util.Try(org.apache.spark.sql.catalyst.expressions.Literal(v))
+      .toOption.flatMap(l => kindRepr(l.dataType, l.value))
+      .getOrElse(sys.error(
+        s"TableLog: unsupported zone-predicate bound $v " +
+          s"(${Option(v).fold("null")(_.getClass.getName)}) — use " +
+          "Long/Int/String/LocalDate/sql.Date/Instant/sql.Timestamp/Double"))
+
+  /** The closed window `lo <= keyCol <= hi` as a one-interval stats
+    * conjunction for [[pruneWithStats]] / [[fullMatchWithStats]], and
+    * whether it is empty (lo > hi). Both bounds must share a kind. */
+  private def zwindow(face: String, keyCol: String, lo: Any, hi: Any)
+      : (Seq[ZPredicate], Boolean) = {
+    val (kind, qlo) = zbound(lo)
+    val (kindHi, qhi) = zbound(hi)
+    require(kind == kindHi,
+      s"TableLog.$face: bound kinds differ ($kind vs $kindHi)")
+    (Seq(ZIntervals(keyCol, kind, Seq((Some(qlo), Some(qhi))))),
+      zcmp(kind, qlo, qhi) > 0)
+  }
 
   /** Parse a serialized stats value back to the CATALYST-INTERNAL
     * value of the column's type — the inverse of [[zser]] for
@@ -1754,17 +1800,7 @@ object TableLog {
                            insertSet: Map[String, String] = Map.empty,
                            tag: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(activeDeletes(spark, root).isEmpty,
-      s"TableLog.mergeIntoConditional: $root has delete sidecars in force — " +
-        "compactTable first so merge reads files, not filtered views")
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.mergeIntoConditional: empty log at $root"))
-    val active = activeFiles(spark, root, Some(readV))
-    val untagged = active.filterNot(bucketOf(_).isDefined)
-    require(untagged.isEmpty,
-      s"TableLog.mergeIntoConditional: un-bucketed active files at $root " +
-        s"(e.g. ${untagged.headOption.getOrElse("")}) — stage the " +
-        "table with stageBucketed for bucket-pruned merges")
+    val (readV, active) = mergeReadSet(spark, root, "mergeIntoConditional")
     // the touched-bucket set covers updates, deletes AND inserts —
     // an inserted id's bucket is rewritten so its rows land beside
     // that bucket's files (≤ nBuckets collect, layout metadata)
@@ -1838,11 +1874,7 @@ object TableLog {
       .filter(col("__action") =!= "del" && col("__action") =!= "drop")
       .select(outCols: _*)
     val adds = stageBucketed(merged, root, name, idCol, nBuckets)
-    commit(spark, root, add = adds, remove = oldTouched, tag = tag,
-      op = Some("MERGE"),
-      expectActive = oldTouched, expectDeletes = Some(Nil),
-      expectNoConflictingAdds =
-        Some((readV, p => bucketOf(p).forall(touched))))
+    commitMerge(spark, root, adds, oldTouched, touched, readV, tag)
   }
 
   /** Stage `df` RANGE-CLUSTERED on `keyCol` WITH a TYPED ZONE-MAP
@@ -1852,12 +1884,13 @@ object TableLog {
     * owns a narrow key interval, and a sidecar parquet — one row per
     * (file, stats column): (file, scol, kind, lo_s, hi_s, n_rows,
     * n_nulls), bounds serialized order-preserving per [[zkindFor]]
-    * kind — lets [[snapshotRange]] / [[snapshotWhere]] /
-    * [[snapshotPrefix]] drop every file whose interval misses a
-    * predicate WITHOUT opening it. Keys may be LONG, STRING, DATE,
-    * TIMESTAMP or DOUBLE (the reference's own range keys are strings
-    * — web_api.py:50-76 `begins_with` prefix scans — and the most
-    * common DELETE WHERE in existence is over a date); `statsCols`
+    * kind — lets [[TableLogRelation.snapshotDf]] filters (and
+    * [[snapshotWhere]] / [[snapshotPrefix]] over it) drop every file
+    * whose interval misses a predicate WITHOUT opening it. Keys may
+    * be LONG, STRING, DATE, TIMESTAMP or DOUBLE (the reference's own
+    * range keys are strings — web_api.py:50-76 `begins_with` prefix
+    * scans — and the most common DELETE WHERE in existence is over a
+    * date); `statsCols`
     * adds per-file stats for FURTHER columns beyond the cluster key,
     * so any of them can prune reads too (the Delta
     * min/max-every-column posture at declared-column cost).
@@ -1960,12 +1993,11 @@ object TableLog {
         (if (sketched.contains(c)) {
           // native (bucket, rho) off the digest bytes: this child is
           // evaluated INTERPRETED inside the aggregate, where the
-          // md5-hex substring/conv/ltrim chain was the per-row cost
-          array_join(transform(
-            graft.plans.HllRegisters.hllRegisters(
-              graft.functions.Sketches.bucketRho(col(c)),
-              graft.functions.Sketches.M),
-            r => r.cast("string")), ",")
+          // md5-hex substring/conv/ltrim chain was the per-row cost;
+          // the element cast is a built-in array cast, not a lambda
+          array_join(graft.plans.HllRegisters.hllRegisters(
+            graft.functions.Sketches.bucketRho(col(c)),
+            graft.functions.Sketches.M).cast("array<string>"), ",")
         } else lit(null).cast("string")).as(s"__h__$c"))
     } :+ count(lit(1)).as("n_rows")
     val perFile = staged
@@ -1986,22 +2018,11 @@ object TableLog {
     (files, stageUnder(melted, root, "zmap", name))
   }
 
-  /** RANGE read with ZONE-MAP file skipping: the snapshot at `asOf`
-    * restricted to `lo <= keyCol <= hi`, reading ONLY the files whose
-    * zone-map interval intersects [lo, hi] — files committed with a
-    * [[stageWithZoneMap]] sidecar prune by metadata; files committed
-    * without one are conservatively read (correctness never depends
-    * on stats coverage). The zone-map join is O(#files) driver
-    * metadata — the same order as the active-file list itself. Pass
-    * `idCol` to apply delete sidecars exactly as [[snapshot]] does.
-    * The in-range residual filter is still applied (zone pruning is
-    * file-granular); Catalyst additionally pushes it into each
-    * surviving file's row groups. */
   /** The zone-map sidecar refs readable at `asOf` — every zmap ref a
     * surviving entry or checkpoint carries, existence-filtered
     * ([[vacuum]] reclaims maps whose data files are all gone; a
     * missing map degrades to a conservative unpruned read, never an
-    * error). Shared by [[rangeTouchedFiles]] and [[cloneTable]]. */
+    * error). Shared by [[collectZoneRows]] and [[cloneTable]]. */
   private def inForceZmaps(f: FileSystem, root: String,
                            asOf: Option[Long]): Seq[String] = {
     val (cp, replay) = replayPlan(f, root, asOf)
@@ -2011,28 +2032,24 @@ object TableLog {
       .filter(rel => f.exists(new Path(resolve(root, rel))))
   }
 
-  /** One parsed zone-stats row: which file, which column (None for
-    * the PRE-TYPED sidecar format, which recorded no column name —
-    * the caller's key discipline was its contract), the value kind,
-    * serialized bounds (None where stats are absent: a file of
-    * ALL-null keys has null min/max), the null count (None =
-    * unknown, written before the stat existed), and the file's total
-    * row count (None on legacy rows). `nNulls == nRows` is the
-    * ALL-NULL proof: no row of the file can satisfy any interval or
-    * IS NOT NULL predicate on the column. */
-  private[operators] final case class ZStat(file: String, scol: Option[String],
+  /** One parsed zone-stats row: which file, which column, the value
+    * kind, serialized bounds (None where stats are absent: a file of
+    * ALL-null keys has null min/max), the null count (None = unknown,
+    * written before the stat existed), and the file's total row count
+    * (None likewise). `nNulls == nRows` is the ALL-NULL proof: no row
+    * of the file can satisfy any interval or IS NOT NULL predicate on
+    * the column. */
+  private[operators] final case class ZStat(file: String, scol: String,
                                  kind: String, lo: Option[String],
                                  hi: Option[String], nNulls: Option[Long],
                                  nRows: Option[Long] = None,
                                  sum: Option[String] = None,
                                  hll: Option[String] = None)
 
-  /** One collected read of the in-force zone-map sidecars at `asOf`,
-    * both formats (mergeSchema unions their disjoint column sets:
-    * legacy rows carry long lo/hi, typed rows carry scol/kind +
-    * string lo_s/hi_s). O(#files × #statsCols) driver metadata —
-    * shared by [[rangeTouchedFiles]] and [[deleteWhere]] so one purge
-    * plans from ONE sidecar read. */
+  /** One collected read of the in-force zone-map sidecars at `asOf`.
+    * O(#files × #statsCols) driver metadata — shared by
+    * [[TableLogFileIndex]], [[replaceWhere]] and [[deleteWhere]] so
+    * each plans from ONE sidecar read. */
   private[operators] def collectZoneRows(spark: SparkSession, root: String,
                               asOf: Option[Long]): Array[ZStat] =
     collectZoneRowsFrom(spark, root,
@@ -2040,7 +2057,9 @@ object TableLog {
 
   /** [[collectZoneRows]] over a PRE-RESOLVED in-force zmap ref list —
     * the [[replayState]] composition path, so one replay serves both
-    * the ref discovery and this read. */
+    * the ref discovery and this read. A row that names no column or
+    * kind (a sidecar this writer never produced) is skipped: its file
+    * then has no stats and reads in full. */
   private def collectZoneRowsFrom(spark: SparkSession, root: String,
                                   zmaps: Seq[String]): Array[ZStat] = {
     if (zmaps.isEmpty) Array.empty
@@ -2049,21 +2068,16 @@ object TableLog {
         .parquet(zmaps.map(resolve(root, _)): _*)
       val have = zm.columns.toSet
       def opt(n: String, cast: String) =
-        if (have(n)) col(n).cast(cast)
-        else org.apache.spark.sql.functions.lit(null).cast(cast)
+        if (have(n)) col(n).cast(cast) else lit(null).cast(cast)
       zm.select(col("file"), opt("scol", "string"), opt("kind", "string"),
           opt("lo_s", "string"), opt("hi_s", "string"),
-          opt("lo", "long").cast("string"), opt("hi", "long").cast("string"),
           opt("n_nulls", "long"), opt("n_rows", "long"),
           opt("sum_s", "string"), opt("hll_s", "string"))
-        .collect().map { r =>
+        .collect().collect { case r if !r.isNullAt(1) && !r.isNullAt(2) =>
           def s(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
           def l(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-          if (!r.isNullAt(2)) // typed row
-            ZStat(r.getString(0), s(1), r.getString(2), s(3), s(4),
-              l(7), l(8), s(9), s(10))
-          else // legacy long row
-            ZStat(r.getString(0), None, "long", s(5), s(6), l(7), l(8))
+          ZStat(r.getString(0), r.getString(1), r.getString(2), s(3), s(4),
+            l(5), l(6), s(7), s(8))
         }
     }
   }
@@ -2195,7 +2209,7 @@ object TableLog {
     val want = cols.distinct.sorted
     val banks: Seq[(String, Seq[Long])] = want.flatMap { c =>
       val rows = zones.filter(z =>
-        activeSet(z.file) && z.scol.contains(c) && z.hll.isDefined)
+        activeSet(z.file) && z.scol == c && z.hll.isDefined)
       // coverage: every active file must speak for this column
       if (rows.iterator.map(_.file).toSet != activeSet) None
       else {
@@ -2239,16 +2253,13 @@ object TableLog {
     * duplicate bank rows CONFLICT (a foreign writer's sidecar) also
     * degrades to the scan, never merges an arbitrary pick. Output:
     * one (scol, est_distinct, nz, sum_rho) row, the q70 witness
-    * triple. Bounds are typed like [[snapshotWhere]]'s. */
+    * triple. Bounds are typed like [[replaceWhere]]'s. */
   def metadataDistinctRange(spark: SparkSession, root: String,
                             sketchCol: String, keyCol: String,
                             lo: Any, hi: Any,
                             asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (kind, qlo) = zbound(lo)
-    val (kindHi, qhi) = zbound(hi)
-    require(kind == kindHi,
-      s"TableLog.metadataDistinctRange: bound kinds differ ($kind vs $kindHi)")
+    val (window, _) = zwindow("metadataDistinctRange", keyCol, lo, hi)
     val (active, dels, zmaps) = replayState(spark, root, asOf)
     if (dels.nonEmpty) return None
     val zones = collectZoneRowsFrom(spark, root, zmaps)
@@ -2264,20 +2275,18 @@ object TableLog {
     }.getOrElse(Set.empty)
     def columnExists(c: String): Boolean = declared match {
       case Some(fields) => fields.contains(c)
-      case None => zones.exists(_.scol.contains(c)) || footerCols.contains(c)
+      case None => zones.exists(_.scol == c) || footerCols.contains(c)
     }
     if (!columnExists(sketchCol) || !columnExists(keyCol)) return None
     // every file a window row may live in; the provably-inside subset
     // can serve from banks, the rest must scan
-    val touched = touchedFrom(active, zones, keyCol, kind,
-      Some(qlo), Some(qhi))
-    val inside = droppableFrom(zones, keyCol, kind, qlo, qhi,
-      trustLegacy = false)
+    val touched = pruneWithStats(active, zones, window)
+    val inside = fullMatchWithStats(touched, zones, window)
     // last-wins toMap would let a foreign writer's conflicting bank
     // row mask the real one — a file with conflicting duplicates
     // serves from the SCAN instead (identical duplicates still serve)
     val banksByFile: Map[String, String] = zones.iterator
-      .filter(z => z.scol.contains(sketchCol) && z.hll.isDefined)
+      .filter(z => z.scol == sketchCol && z.hll.isDefined)
       .toSeq.groupBy(_.file).collect {
         case (f, ds) if ds.map(_.hll.get).distinct.length == 1 =>
           f -> ds.head.hll.get
@@ -2299,7 +2308,7 @@ object TableLog {
       val reader = logSchema(spark, root, asOf)
         .fold(spark.read)(st => spark.read.schema(st))
       val bank = reader.parquet(scanSet.map(resolve(root, _)): _*)
-        .filter(col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi))
+        .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
         .select(graft.plans.HllRegisters.hllRegisters(
           graft.functions.Sketches.bucketRho(col(sketchCol)),
           graft.functions.Sketches.M).as("regs"))
@@ -2344,10 +2353,7 @@ object TableLog {
                        cols: Seq[String],
                        asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (kind, qlo) = zbound(lo)
-    val (kindHi, qhi) = zbound(hi)
-    require(kind == kindHi,
-      s"TableLog.metadataAggRange: bound kinds differ ($kind vs $kindHi)")
+    val (window, _) = zwindow("metadataAggRange", keyCol, lo, hi)
     require(cols.nonEmpty, "TableLog.metadataAggRange: no columns asked")
     val (active, dels, zmaps) = replayState(spark, root, asOf)
     if (dels.nonEmpty) return None
@@ -2362,7 +2368,7 @@ object TableLog {
         spark.read.parquet(resolve(root, p)).schema)
     def columnExists(c: String): Boolean = declaredNames match {
       case Some(fields) => fields.contains(c)
-      case None => zones.exists(_.scol.contains(c)) ||
+      case None => zones.exists(_.scol == c) ||
         footerSchema.exists(_.fieldNames.contains(c))
     }
     if (!(keyCol +: want).forall(columnExists)) return None
@@ -2372,7 +2378,7 @@ object TableLog {
     // is undefined)
     val kindOf: Map[String, String] = {
       val pairs = want.map { c =>
-        val zkinds = zones.filter(_.scol.contains(c)).map(_.kind).distinct
+        val zkinds = zones.filter(_.scol == c).map(_.kind).distinct
         val k = zkinds.toSeq match {
           case Seq(one) => Some(one)
           case Seq() =>
@@ -2386,17 +2392,15 @@ object TableLog {
       if (pairs.exists(_._2.isEmpty)) return None
       pairs.map { case (c, k) => c -> k.get }.toMap
     }
-    val touched = touchedFrom(active, zones, keyCol, kind,
-      Some(qlo), Some(qhi))
-    val inside = droppableFrom(zones, keyCol, kind, qlo, qhi,
-      trustLegacy = false)
+    val touched = pruneWithStats(active, zones, window)
+    val inside = fullMatchWithStats(touched, zones, window)
     // a file serves from metadata only when it is provably all-inside
     // AND carries ONE consistent usable stats row per requested column
     // (n_rows + n_nulls known; bounds present or the all-null proof);
     // anything else scans — graceful degradation, never a wrong answer
     val zByFileCol: Map[(String, String), Seq[ZStat]] = zones.toSeq
-      .filter(z => z.scol.exists(want.contains))
-      .groupBy(z => (z.file, z.scol.get))
+      .filter(z => want.contains(z.scol))
+      .groupBy(z => (z.file, z.scol))
     def usableOne(z: ZStat, c: String): Option[ZStat] =
       Some(z).filter(z =>
         z.kind == kindOf(c) && z.nRows.isDefined && z.nNulls.isDefined &&
@@ -2422,7 +2426,7 @@ object TableLog {
         val reader = logSchema(spark, root, asOf)
           .fold(spark.read)(st => spark.read.schema(st))
         val windowed = reader.parquet(toScan.map(resolve(root, _)): _*)
-          .filter(col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi))
+          .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
         val aggs = want.flatMap { c =>
           val k = kindOf(c)
           Seq(zser(k, min(col(c))).as(s"__lo__$c"),
@@ -2519,7 +2523,7 @@ object TableLog {
     if (dels.nonEmpty) return None
     val activeSet = active.toSet
     val zones = collectZoneRowsFrom(spark, root, zmaps)
-      .filter(z => activeSet(z.file) && z.scol.isDefined)
+      .filter(z => activeSet(z.file))
     val m = graft.functions.Sketches.M
     // a bound must PARSE under its kind's comparator before the fold
     // touches it — a foreign row's garbage must skip the column, not
@@ -2533,7 +2537,7 @@ object TableLog {
       case _ =>
         try { s.toLong; true } catch { case _: NumberFormatException => false }
     }
-    val perCol = zones.groupBy(_.scol.get).toSeq.flatMap { case (c, rows0) =>
+    val perCol = zones.groupBy(_.scol).toSeq.flatMap { case (c, rows0) =>
       // one row per file: counts must not double on a re-listed
       // sidecar (bank merging is idempotent, sums are not) — and
       // CONFLICTING duplicates for one file skip the column entirely
@@ -2605,39 +2609,6 @@ object TableLog {
       .orderBy(col("col_name")))
   }
 
-  /** The active files a typed range predicate [qlo, qhi] on `scol`
-    * may touch, given `active` and pre-collected `zones`:
-    * zone-described files whose interval intersects, plus every
-    * active file WITHOUT a matching interval (conservative —
-    * correctness never depends on stats coverage). A stats row
-    * matches when its (scol, kind) equal the query's —
-    * `trustLegacy` additionally lets column-less legacy long rows
-    * match a long query (ONLY the legacy long entry points set it;
-    * the typed API never prunes by stats that don't name their
-    * column). `qhi = None` means an unbounded upper end (prefix scans
-    * whose successor overflows). */
-  private def touchedFrom(active: Seq[String], zones: Array[ZStat],
-                          scol: String, kind: String,
-                          qlo: Option[String], qhi: Option[String],
-                          trustLegacy: Boolean = false): Seq[String] = {
-    val matching = zones.filter(z => z.kind == kind &&
-      (z.scol.contains(scol) || (z.scol.isEmpty && trustLegacy)))
-    val activeSet = active.toSet
-    // a file prunes only when EVERY matching bounded row proves its
-    // interval misses (rows are facts; absent/unbounded rows prove
-    // nothing). Stale rows for removed files drop via the active set.
-    val byFile = matching.filter(z => activeSet(z.file)).groupBy(_.file)
-    val pruned = byFile.collect { case (p, zs)
-      if zs.forall(z => (z.lo, z.hi) match {
-        case (Some(l), Some(h)) =>
-          qlo.exists(q => zcmp(kind, h, q) < 0) ||
-            qhi.exists(q => zcmp(kind, l, q) > 0)
-        case _ => false
-      }) && zs.exists(z => z.lo.isDefined && z.hi.isDefined) => p
-    }.toSet
-    active.filterNot(pruned).sorted
-  }
-
   /** One pushed predicate [[TableLogFileIndex]] can prune with, in
     * typed-stats space. */
   private[operators] sealed trait ZPredicate
@@ -2670,13 +2641,16 @@ object TableLog {
   private[operators] final case class ZOr(left: Seq[ZPredicate],
       right: Seq[ZPredicate]) extends ZPredicate
 
-  /** Driver-side pruning hook for [[TableLogFileIndex]]: the files of
-    * `active` that a CONJUNCTION of [[ZPredicate]]s may touch, against
-    * PRE-COLLECTED `zones`. Interval predicates prune by
-    * [[touchedFrom]]'s rules (only stats rows naming the column, all
-    * bounds closed, absent stats read conservatively), disjunctions as
-    * the union of their disjuncts' survivor sets (files without stats
-    * survive every disjunct, so the union stays conservative).
+  /** THE file-pruning rule — [[TableLogFileIndex]]'s planning hook and
+    * the touched-set planner of [[replaceWhere]], [[deleteWhere]] and
+    * the metadata range faces: the files of `active` that a
+    * CONJUNCTION of [[ZPredicate]]s may touch, against PRE-COLLECTED
+    * `zones`. Interval predicates consult only stats rows naming the
+    * column with the predicate's kind (all bounds closed, absent stats
+    * read conservatively; stale rows for removed files never match an
+    * active file), disjunctions as the union of their disjuncts'
+    * survivor sets (files without stats survive every disjunct, so the
+    * union stays conservative).
     * IS NULL prunes only files with a PROVEN zero null count.
     * Predicates on columns without stats simply don't prune. Pure
     * driver-side interval checks — the index collects the state once
@@ -2694,9 +2668,8 @@ object TableLog {
         // point): a file prunes iff every matching row is bounded and
         // its interval misses EVERY disjunct — ∀row ∀disjunct miss,
         // which is exactly "pruned under each disjunct independently"
-        // since rows and disjuncts are independent. touchedFrom's
-        // exact rule at k = 1.
-        val matching = zones.filter(z => z.kind == kind && z.scol.contains(c))
+        // since rows and disjuncts are independent.
+        val matching = zones.filter(z => z.kind == kind && z.scol == c)
         val activeSet = files.toSet
         val byFile = matching.filter(z => activeSet(z.file)).groupBy(_.file)
         val pruned = byFile.collect { case (p, zs)
@@ -2717,14 +2690,14 @@ object TableLog {
         // row naming this column with n_nulls = 0 proves no row of the
         // file satisfies IS NULL
         val allNonNull = zones.collect {
-          case z if z.scol.contains(c) && z.nNulls.contains(0L) => z.file
+          case z if z.scol == c && z.nNulls.contains(0L) => z.file
         }.toSet
         files.filterNot(allNonNull)
       case (files, ZIsNotNull(c)) =>
         // dual of IS NULL: n_nulls == n_rows proves EVERY row is null
         // on the column, so no row satisfies IS NOT NULL
         val allNull = zones.collect {
-          case z if z.scol.contains(c) && z.nRows.isDefined &&
+          case z if z.scol == c && z.nRows.isDefined &&
             z.nNulls == z.nRows => z.file
         }.toSet
         files.filterNot(allNull)
@@ -2759,8 +2732,7 @@ object TableLog {
     // group ONCE: a per-(file, predicate) linear rescan of the zone
     // array would make this O(files × zones) inside an optimizer rule
     val byFileCol: Map[(String, String), Seq[ZStat]] = zones.toSeq
-      .filter(_.scol.isDefined)
-      .groupBy(z => (z.file, z.scol.get))
+      .groupBy(z => (z.file, z.scol))
     def rowsFor(file: String, c: String): Seq[ZStat] =
       byFileCol.getOrElse((file, c), Nil)
     def proven(file: String, p: ZPredicate): Boolean = p match {
@@ -2799,7 +2771,7 @@ object TableLog {
                                keyCol: String,
                                outCols: Seq[String]): Seq[String] = {
     val files = rewritten.toSet
-    zones.filter(z => files(z.file)).flatMap(_.scol).distinct
+    zones.filter(z => files(z.file)).map(_.scol).distinct
       .filterNot(_ == keyCol).filter(outCols.contains).toSeq
   }
 
@@ -2813,88 +2785,23 @@ object TableLog {
                                 outCols: Seq[String]): Seq[String] = {
     val files = rewritten.toSet
     zones.filter(z => files(z.file) && z.hll.isDefined)
-      .flatMap(_.scol).distinct.filter(outCols.contains).toSeq
+      .map(_.scol).distinct.filter(outCols.contains).toSeq
   }
 
-  /** Files PROVABLY all-inside [qlo, qhi] on `scol`: some matching
-    * stats row has its whole interval inside the range AND a
-    * KNOWN-zero null count (min/max skip NULLs, so the interval alone
-    * cannot speak for null-key rows — NULL is outside every range).
-    * [[deleteWhere]]'s metadata-only drop set. */
-  private def droppableFrom(zones: Array[ZStat], scol: String,
-                            kind: String, qlo: String, qhi: String,
-                            trustLegacy: Boolean): Set[String] =
-    zones.filter(z => z.kind == kind &&
-        (z.scol.contains(scol) || (z.scol.isEmpty && trustLegacy)))
-      .collect { case ZStat(p, _, _, Some(l), Some(h), Some(0L), _, _, _)
-        if zcmp(kind, l, qlo) >= 0 && zcmp(kind, h, qhi) <= 0 => p }
-      .toSet
-
-  private def rangeTouchedFiles(spark: SparkSession, root: String,
-                                keyCol: String, lo: Long, hi: Long,
-                                asOf: Option[Long]): Seq[String] =
-    touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, "long",
-      Some(lo.toString), Some(hi.toString), trustLegacy = true)
-
-  /** Read a PRUNED file subset of the snapshot at `asOf` with a
-    * residual filter — the shared tail of every zone-pruned read
-    * face. Delete sidecars apply exactly as in [[snapshot]]. */
-  private def readPruned(spark: SparkSession, root: String,
-                         files: Seq[String], residual: org.apache.spark.sql.Column,
-                         asOf: Option[Long], idCol: Option[String],
-                         face: String): DataFrame = {
-    val reader = logSchema(spark, root, asOf)
-      .fold(spark.read)(st => spark.read.schema(st))
-    val base =
-      if (files.isEmpty) snapshot(spark, root, asOf, idCol).limit(0)
-      else reader.parquet(files.map(resolve(root, _)): _*)
-    val ranged = base.filter(residual)
-    val dels = activeDeletes(spark, root, asOf)
-    if (dels.isEmpty) ranged
-    else idCol match {
-      case None => sys.error(
-        s"TableLog.$face: $root has delete sidecars; pass idCol")
-      case Some(id) =>
-        val doomed = spark.read.parquet(dels.map(resolve(root, _)): _*)
-        ranged.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
-  }
-
-  def snapshotRange(spark: SparkSession, root: String, keyCol: String,
-                    lo: Long, hi: Long, asOf: Option[Long] = None,
-                    idCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    readPruned(spark, root,
-      rangeTouchedFiles(spark, root, keyCol, lo, hi, asOf),
-      col(keyCol) >= lo && col(keyCol) <= hi, asOf, idCol, "snapshotRange")
-  }
-
-  /** TYPED range read with zone-map file skipping: the snapshot at
-    * `asOf` restricted to `lo <= keyCol <= hi` where the bounds are
-    * any [[zbound]]-supported type (String, LocalDate/sql.Date,
-    * Instant/sql.Timestamp, integral, Double) — the generalization
-    * [[snapshotRange]]'s cast-to-long contract couldn't serve (the
-    * reference's own keys are strings, web_api.py:50-76). Pruning
-    * consults ONLY stats rows that name this column with this kind
-    * ([[stageWithZoneMap]]'s typed sidecar; its `statsCols` make
-    * NON-cluster columns prunable too); files without matching stats
-    * read conservatively. */
+  /** RANGE read with ZONE-MAP file skipping: the snapshot at `asOf`
+    * restricted to `lo <= keyCol <= hi` — a plain filter over the
+    * planner-pruned [[TableLogRelation.snapshotDf]] relation, whose
+    * [[TableLogFileIndex]] drops every file whose stats interval on
+    * `keyCol` misses [lo, hi] inside Catalyst. Bounds are any type
+    * `lit` accepts (integral, String, LocalDate/sql.Date,
+    * Instant/sql.Timestamp, Double, decimal); files without matching
+    * stats read conservatively, and `idCol` applies delete sidecars
+    * exactly as [[snapshot]] does. */
   def snapshotWhere(spark: SparkSession, root: String, keyCol: String,
                     lo: Any, hi: Any, asOf: Option[Long] = None,
-                    idCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (kind, qlo) = zbound(lo)
-    val (kindHi, qhi) = zbound(hi)
-    require(kind == kindHi,
-      s"TableLog.snapshotWhere: bound kinds differ ($kind vs $kindHi)")
-    val files = touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, kind, Some(qlo), Some(qhi))
-    readPruned(spark, root, files,
-      col(keyCol) >= zlit(lo) && col(keyCol) <= zlit(hi),
-      asOf, idCol, "snapshotWhere")
-  }
+                    idCol: Option[String] = None): DataFrame =
+    TableLogRelation.snapshotDf(spark, root, asOf, idCol)
+      .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
 
   /** The smallest string STRICTLY greater than every string with
     * prefix `p`, if one is expressible: increment the last
@@ -2912,79 +2819,48 @@ object TableLog {
   /** PREFIX scan with zone-map file skipping — the `begins_with` key
     * read of the reference's web API (web_api.py:50-76 queries
     * DynamoDB with `Key(...).begins_with(prefix)`): the snapshot at
-    * `asOf` restricted to `startswith(keyCol, prefix)`, reading only
-    * files whose string zone interval intersects
-    * [prefix, successor(prefix)). On a table range-clustered on the
-    * string key this is an O(selectivity) read — the get_ref_data
-    * shape at 100 TB. */
+    * `asOf` restricted to `startswith(keyCol, prefix)`. The relation's
+    * index translates the predicate to the string interval
+    * [prefix, successor(prefix)) and reads only the files it
+    * intersects — on a table range-clustered on the string key an
+    * O(selectivity) read, the get_ref_data shape at 100 TB. */
   def snapshotPrefix(spark: SparkSession, root: String, keyCol: String,
                      prefix: String, asOf: Option[Long] = None,
-                     idCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val files = touchedFrom(activeFiles(spark, root, asOf),
-      collectZoneRows(spark, root, asOf), keyCol, "string",
-      Some(prefix), prefixSucc(prefix))
-    readPruned(spark, root, files,
-      col(keyCol).startsWith(prefix), asOf, idCol, "snapshotPrefix")
-  }
+                     idCol: Option[String] = None): DataFrame =
+    TableLogRelation.snapshotDf(spark, root, asOf, idCol)
+      .filter(col(keyCol).startsWith(prefix))
 
   /** REPLACE WHERE — atomically overwrite exactly the rows with
     * `lo <= keyCol <= hi` (the Delta `replaceWhere` shape, the
     * idempotent-backfill primitive: "recompute this day/key-range and
     * swap it in"): only files whose zone interval intersects the
-    * range are read ([[rangeTouchedFiles]] — at 100 TB a backfill of
+    * range are read ([[pruneWithStats]] — at 100 TB a backfill of
     * one key range rewrites O(selectivity) of the table, not all of
     * it); their OUT-of-range rows survive into a fresh
     * range-clustered, zone-mapped stage together with the
     * replacement, and one atomic commit swaps the touched files out.
     * Untouched files — and their zone maps — are never rewritten.
+    * Bounds are any [[zbound]]-supported type (integral, String,
+    * LocalDate/sql.Date, Instant/sql.Timestamp, Double, decimal) —
+    * the date-keyed "recompute this day" backfill included.
     * Refuses replacement rows OUTSIDE the range (they would silently
     * widen the overwrite — the classic replaceWhere footgun) and
     * outstanding delete sidecars (rewriting files while sidecars are
     * in force would resurrect deleted rows; [[compactTable]] first).
-    * Returns the new version. */
-  def replaceWhere(spark: SparkSession, root: String, keyCol: String,
-                   lo: Long, hi: Long, replacement: DataFrame,
-                   name: String, parts: Int,
-                   asOf: Option[Long] = None): Long =
-    replaceWhereCore(spark, root, keyCol, "long", lo.toString, hi.toString,
-      org.apache.spark.sql.functions.lit(lo),
-      org.apache.spark.sql.functions.lit(hi),
-      replacement, name, parts, trustLegacy = true, asOf = asOf)
-
-  /** TYPED [[replaceWhere]]: bounds of any [[zbound]]-supported type
-    * — the date-keyed "recompute this day and swap it in" backfill,
-    * or a string-key-range overwrite, with the same atomicity,
-    * pruning and conflict contract as the long form. */
-  def replaceWhereTyped(spark: SparkSession, root: String, keyCol: String,
-                        lo: Any, hi: Any, replacement: DataFrame,
-                        name: String, parts: Int,
-                        asOf: Option[Long] = None): Long = {
-    val (kind, qlo) = zbound(lo)
-    val (kindHi, qhi) = zbound(hi)
-    require(kind == kindHi,
-      s"TableLog.replaceWhereTyped: bound kinds differ ($kind vs $kindHi)")
-    replaceWhereCore(spark, root, keyCol, kind, qlo, qhi,
-      zlit(lo), zlit(hi), replacement, name, parts, trustLegacy = false,
-      asOf = asOf)
-  }
-
-  /** `asOf` pins the READ VERSION the replacement was derived from
+    *
+    * `asOf` pins the READ VERSION the replacement was derived from
     * (GraftSql's UPDATE builds its slice from a version-pinned
     * snapshot BEFORE calling in): the conflict guard then covers
     * every commit after that pin — without it, a commit landing
     * between the caller's read and this re-read would have its
     * in-range rows silently dropped by the rewrite (the guard only
-    * rejects adds after ITS OWN readV). */
-  private def replaceWhereCore(spark: SparkSession, root: String,
-                               keyCol: String, kind: String,
-                               qlo: String, qhi: String,
-                               loLit: org.apache.spark.sql.Column,
-                               hiLit: org.apache.spark.sql.Column,
-                               replacement: DataFrame, name: String,
-                               parts: Int, trustLegacy: Boolean,
-                               asOf: Option[Long] = None): Long = {
+    * rejects adds after ITS OWN readV). Returns the new version. */
+  def replaceWhere(spark: SparkSession, root: String, keyCol: String,
+                   lo: Any, hi: Any, replacement: DataFrame,
+                   name: String, parts: Int,
+                   asOf: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions._
+    val (window, _) = zwindow("replaceWhere", keyCol, lo, hi)
     require(activeDeletes(spark, root).isEmpty,
       s"TableLog.replaceWhere: $root has delete sidecars in force — " +
         "compactTable first so the rewrite cannot resurrect deleted rows")
@@ -2993,22 +2869,22 @@ object TableLog {
     // files they SURVIVE (isNull below) — a silent drop of null-key
     // rows is the classic three-valued-logic rewrite bug
     require(replacement.filter(col(keyCol).isNull ||
-        col(keyCol) < loLit || col(keyCol) > hiLit).isEmpty,
-      s"TableLog.replaceWhere: replacement rows outside [$qlo, $qhi] on " +
+        col(keyCol) < lit(lo) || col(keyCol) > lit(hi)).isEmpty,
+      s"TableLog.replaceWhere: replacement rows outside [$lo, $hi] on " +
         s"'$keyCol' (or with NULL key) — they would widen the " +
         "overwrite beyond the predicate")
     val readV = asOf.getOrElse(versions(spark, root).lastOption.getOrElse(
       sys.error(s"TableLog.replaceWhere: empty log at $root")))
     val zones = collectZoneRows(spark, root, Some(readV))
-    val touched = touchedFrom(activeFiles(spark, root, Some(readV)),
-      zones, keyCol, kind, Some(qlo), Some(qhi), trustLegacy)
+    val touched = pruneWithStats(activeFiles(spark, root, Some(readV)),
+      zones, window)
     val reader = logSchema(spark, root, Some(readV))
       .fold(spark.read)(st => spark.read.schema(st))
     val survivors =
       if (touched.isEmpty) replacement.limit(0)
       else reader.parquet(touched.map(resolve(root, _)): _*)
-        .filter(col(keyCol).isNull || col(keyCol) < loLit ||
-          col(keyCol) > hiLit)
+        .filter(col(keyCol).isNull || col(keyCol) < lit(lo) ||
+          col(keyCol) > lit(hi))
     val (files, zm) = stageWithZoneMap(
       survivors.unionByName(replacement), root, name, keyCol, parts,
       statsCols = rewriteStatsCols(zones, touched, keyCol,
@@ -3027,24 +2903,27 @@ object TableLog {
 
   /** DELETE WHERE — atomically remove exactly the rows with
     * `lo <= keyCol <= hi` (the Delta `DELETE WHERE` shape; the TTL /
-    * retention / compliance purge): files whose zone interval lies
-    * FULLY inside the range AND carry no NULL keys drop by PURE
-    * METADATA — zero I/O, the log entry just de-references them —
-    * while straddling (or stats-less) files rewrite their survivors
-    * only. At 100 TB, purging a retention window over a
-    * range-clustered table costs O(two boundary files), not O(window):
-    * every interior file is a metadata drop. NULL-key rows always
-    * survive (NULL is outside every range — [[replaceWhere]]'s
-    * three-valued contract), which is exactly why the interval alone
-    * cannot prove a file droppable: min/max skip NULLs, so the drop
-    * additionally requires the zone map's `n_nulls = 0` (maps written
-    * before that stat — or by [[cloneTable]] from such — read as
-    * unknown and rewrite conservatively; correctness never depends on
-    * stats coverage). Refuses outstanding delete sidecars like
-    * replaceWhere (rewriting files under in-force sidecars would
-    * resurrect their rows; [[compactTable]] first). Conflict-guarded
-    * on its read set. Returns the new version, or the current one
-    * untouched when no active file intersects the range.
+    * retention / compliance purge — usually DATE-keyed, e.g.
+    * `deleteWhere(..., LocalDate.of(2020,1,1), LocalDate.of(2020,12,31),
+    * ...)`; bounds are typed like [[replaceWhere]]'s): files whose
+    * zone interval lies FULLY inside the range AND carry no NULL keys
+    * drop by PURE METADATA ([[fullMatchWithStats]]) — zero I/O, the
+    * log entry just de-references them — while straddling (or
+    * stats-less) files rewrite their survivors only. At 100 TB,
+    * purging a retention window over a range-clustered table costs
+    * O(two boundary files), not O(window): every interior file is a
+    * metadata drop. NULL-key rows always survive (NULL is outside
+    * every range — [[replaceWhere]]'s three-valued contract), which
+    * is exactly why the interval alone cannot prove a file droppable:
+    * min/max skip NULLs, so the drop additionally requires the zone
+    * map's `n_nulls = 0` (maps written before that stat — or by
+    * [[cloneTable]] from such — read as unknown and rewrite
+    * conservatively; correctness never depends on stats coverage).
+    * Refuses outstanding delete sidecars like replaceWhere (rewriting
+    * files under in-force sidecars would resurrect their rows;
+    * [[compactTable]] first). Conflict-guarded on its read set.
+    * Returns the new version, or the current one untouched when no
+    * active file intersects the range.
     *
     * `feedIdCol`: when set, the purge commit carries a CHANGE-FEED
     * sidecar of the removed ids (status `removed`), so downstream
@@ -3056,42 +2935,10 @@ object TableLog {
     * metadata; pass None (the default) for the pure zero-I/O purge
     * when nothing tails the table. */
   def deleteWhere(spark: SparkSession, root: String, keyCol: String,
-                  lo: Long, hi: Long, name: String, parts: Int,
-                  feedIdCol: Option[String] = None): Long =
-    deleteWhereCore(spark, root, keyCol, "long", lo.toString, hi.toString,
-      org.apache.spark.sql.functions.lit(lo),
-      org.apache.spark.sql.functions.lit(hi),
-      name, parts, feedIdCol, trustLegacy = true,
-      emptyWindow = lo > hi)
-
-  /** TYPED [[deleteWhere]]: bounds of any [[zbound]]-supported type —
-    * the retention purge every real table runs is DATE-keyed
-    * (`deleteWhereTyped(..., LocalDate.of(2020,1,1),
-    * LocalDate.of(2020,12,31), ...)`), and string key ranges purge
-    * the same way. Same metadata-only interior-file drop, same
-    * conflict contract. */
-  def deleteWhereTyped(spark: SparkSession, root: String, keyCol: String,
-                       lo: Any, hi: Any, name: String, parts: Int,
-                       feedIdCol: Option[String] = None): Long = {
-    val (kind, qlo) = zbound(lo)
-    val (kindHi, qhi) = zbound(hi)
-    require(kind == kindHi,
-      s"TableLog.deleteWhereTyped: bound kinds differ ($kind vs $kindHi)")
-    deleteWhereCore(spark, root, keyCol, kind, qlo, qhi,
-      zlit(lo), zlit(hi), name, parts, feedIdCol, trustLegacy = false,
-      emptyWindow = zcmp(kind, qlo, qhi) > 0)
-  }
-
-  private def deleteWhereCore(spark: SparkSession, root: String,
-                              keyCol: String, kind: String,
-                              qlo: String, qhi: String,
-                              loLit: org.apache.spark.sql.Column,
-                              hiLit: org.apache.spark.sql.Column,
-                              name: String, parts: Int,
-                              feedIdCol: Option[String],
-                              trustLegacy: Boolean,
-                              emptyWindow: Boolean): Long = {
+                  lo: Any, hi: Any, name: String, parts: Int,
+                  feedIdCol: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
+    val (window, emptyWindow) = zwindow("deleteWhere", keyCol, lo, hi)
     val readV = versions(spark, root).lastOption.getOrElse(
       sys.error(s"TableLog.deleteWhere: empty log at $root"))
     // ONE zone-sidecar read plans the whole purge (touched set AND
@@ -3099,8 +2946,8 @@ object TableLog {
     val zones = collectZoneRows(spark, root, Some(readV))
     val touched =
       if (emptyWindow) Seq.empty[String] // an empty window deletes nothing
-      else touchedFrom(activeFiles(spark, root, Some(readV)), zones,
-        keyCol, kind, Some(qlo), Some(qhi), trustLegacy)
+      else pruneWithStats(activeFiles(spark, root, Some(readV)), zones,
+        window)
     if (touched.isEmpty) readV // provably nothing in range: NO-OP
     else {
       // the rewrite below would resurrect sidecar-deleted rows; the
@@ -3109,11 +2956,10 @@ object TableLog {
       require(activeDeletes(spark, root).isEmpty,
         s"TableLog.deleteWhere: $root has delete sidecars in force — " +
           "compactTable first so the rewrite cannot resurrect deleted rows")
-      // provably-all-in-range files: interval inside [qlo, qhi] and a
+      // provably-all-in-range files: interval inside [lo, hi] and a
       // KNOWN-zero null count (a None n_nulls — an older map — is
       // "unknown", never "zero")
-      val droppable: Set[String] =
-        droppableFrom(zones, keyCol, kind, qlo, qhi, trustLegacy)
+      val droppable = fullMatchWithStats(touched, zones, window)
       val rewrite = touched.filterNot(droppable)
       // lazy: an all-droppable purge without a feed must stay pure
       // metadata — not even the schema-ref replay runs
@@ -3124,8 +2970,8 @@ object TableLog {
         else {
           val survivors = reader
             .parquet(rewrite.map(resolve(root, _)): _*)
-            .filter(col(keyCol).isNull || col(keyCol) < loLit ||
-              col(keyCol) > hiLit)
+            .filter(col(keyCol).isNull || col(keyCol) < lit(lo) ||
+              col(keyCol) > lit(hi))
           // a straddler-by-stats file can still be all-in-range in
           // fact (stats-less, or interval-covered with unknown nulls
           // that turn out absent): nothing survives → pure drop
@@ -3142,7 +2988,7 @@ object TableLog {
         // included — the DATA path still never rewrites them)
         val removed = reader
           .parquet(touched.map(resolve(root, _)): _*)
-          .filter(col(keyCol) >= loLit && col(keyCol) <= hiLit)
+          .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
           .select(col(idc), lit("removed").as("status"))
         stageFeed(removed, root, name)
       }
@@ -3613,7 +3459,7 @@ object TableLog {
     val schemaSeq = logSchema(spark, srcRoot, Some(srcV))
       .map(st => stageSchema(spark, dstRoot, "clone", st)).toSeq
     // zone maps name their files ROOT-RELATIVE to the source; re-key
-    // them to the borrowed absolute refs so snapshotRange prunes on
+    // them to the borrowed absolute refs so range reads prune on
     // the clone from the first read (O(#files) metadata rewrite)
     val zmRefs = inForceZmaps(fSrc, srcRoot, Some(srcV))
     val zmapSeq =

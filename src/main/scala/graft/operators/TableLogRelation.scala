@@ -10,18 +10,18 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType,
-  IntegerType, LongType, ShortType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A CATALYST-VISIBLE snapshot relation over a [[TableLog]] table: the
   * log's active file set wrapped in a custom [[FileIndex]] whose
   * `listFiles` consults the typed zone-map sidecars — so ANY pushed
   * predicate on a stats-covered column prunes files INSIDE the
   * optimizer, on a plain `snapshotDf.filter(col between ...)`, with no
-  * special read face. This closes the gap [[TableLog.snapshotRange]]
-  * left open: there, pruning happened only when the caller remembered
-  * to use the blessed entry point; here the planner does it on every
-  * query (the Delta `TahoeFileIndex` design).
+  * special read face: the planner prunes on every query (the Delta
+  * `TahoeFileIndex` design). This is graft's ONE zone-pruned read
+  * path — [[TableLog.snapshotWhere]] and [[TableLog.snapshotPrefix]]
+  * are named filters over it, and the pruning rules themselves are
+  * [[TableLog.pruneWithStats]] / [[TableLog.fullMatchWithStats]].
   *
   * What the planner hands `listFiles` is the split conjunction of
   * pushed data filters; [[TableLogFileIndex.rangesOf]] translates the
@@ -54,6 +54,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
                         bucketBy: Option[(String, Int)] = None,
                         onlyBuckets: Option[Set[Int]] = None)
     extends FileIndex {
+  import TableLog.kindRepr
 
   /** The pinned snapshot version this index serves. */
   val version: Long = asOf.getOrElse(
@@ -132,7 +133,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
   private[graft] def statsNonNullCount(colName: String,
       files: Seq[String]): Option[Long] = {
     val byFile = zones
-      .filter(z => z.scol.contains(colName) && z.nNulls.isDefined)
+      .filter(z => z.scol == colName && z.nNulls.isDefined)
       .groupBy(_.file)
     val per = files.flatMap { f =>
       coveredRowCounts.get(f).flatMap { n =>
@@ -154,7 +155,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
       files: Seq[String]): Option[(Any, Any)] =
     TableLog.zkindFor(dt).flatMap { kind =>
       val byFile = zones
-        .filter(z => z.scol.contains(colName) && z.kind == kind)
+        .filter(z => z.scol == colName && z.kind == kind)
         .groupBy(_.file)
       // per file: Some(Some((lo, hi))) = bounded, Some(None) =
       // proven all-null, None = unknowable
@@ -206,7 +207,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     if (!integral) None
     else {
       val byFile = zones
-        .filter(z => z.scol.contains(colName) && z.kind == "long")
+        .filter(z => z.scol == colName && z.kind == "long")
         .groupBy(_.file)
       // Some(Some(sum)) = contributes, Some(None) = proven all-null
       // (contributes nothing), None = unknowable
@@ -271,7 +272,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
       files: Seq[String]): Option[Seq[(Any, Seq[String])]] =
     TableLog.zkindFor(dt).flatMap { kind =>
       val byFile = zones
-        .filter(z => z.scol.contains(colName) && z.kind == kind)
+        .filter(z => z.scol == colName && z.kind == kind)
         .groupBy(_.file)
       val per: Seq[Option[(String, String)]] = files.map { rel =>
         byFile.getOrElse(rel, Array.empty[TableLog.ZStat]).toSeq match {
@@ -322,7 +323,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
         // wholesale — an uncovered file simply fails its own match
         val rc = coveredRowCounts
         val byFile = zones
-          .filter(z => z.scol.contains(colName) && z.kind == kind)
+          .filter(z => z.scol == colName && z.kind == kind)
           .groupBy(_.file)
         final case class F(rel: String, lo: Option[String],
                            hi: Option[String], nonNull: Long, nulls: Long)
@@ -438,35 +439,6 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * untranslatable element abandons the whole predicate — pruning by
     * the translated subset alone could drop a file whose rows match
     * the untranslated value. */
-  /** (stats kind, serialized repr) of a pushed literal — shared by
-    * [[rangesOf]] (pruning) and [[fullRangesOf]] (full-match proofs). */
-  private def kindRepr(dt: org.apache.spark.sql.types.DataType,
-               v: Any): Option[(String, String)] = (dt, v) match {
-    case (_, null) => None // comparisons to NULL match nothing; skip
-    case (ByteType | ShortType | IntegerType | LongType, x) =>
-      Some(("long", x.toString))
-    case (DateType, days) => Some(("date", days.toString)) // Int epoch days
-    case (TimestampType, micros) => Some(("timestamp", micros.toString))
-    case (StringType, s) => Some(("string", s.toString)) // UTF8String
-    // FloatType: the sidecar stores float bounds WIDENED to double
-    // (zser casts through double before serializing), so the literal
-    // must widen the same way — Float.toString's short repr ("1.3")
-    // parses as the double 1.3, which sits ABOVE the widened stored
-    // bound 1.2999999523162842 and would wrongly prune a file whose
-    // rows satisfy `col >= 1.3f`. Double.toString round-trips.
-    case (FloatType, x: java.lang.Float) =>
-      Some(("double", x.toDouble.toString))
-    case (DoubleType, x) => Some(("double", x.toString))
-    // Decimal literals serialize to the same plain string form the
-    // sidecar stored (zser casts through string); zcmp compares
-    // numerically, so scale differences between the pushed literal
-    // and the column never mis-order
-    case (_: org.apache.spark.sql.types.DecimalType,
-          d: org.apache.spark.sql.types.Decimal) =>
-      Some(("decimal", d.toBigDecimal.bigDecimal.toPlainString))
-    case _ => None
-  }
-
   private[operators] def rangesOf(filters: Seq[Expression])
       : Seq[TableLog.ZPredicate] = {
     def one(name: String, k: String, lo: Option[String],
@@ -695,7 +667,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
           val fullSet = TableLog.fullMatchWithStats(survivors, zones,
             fullPreds)
           val byFile = zones
-            .filter(z => z.scol.contains(colName) && z.kind == kind)
+            .filter(z => z.scol == colName && z.kind == kind)
             .groupBy(_.file)
           final case class F(rel: String, lo: Option[String],
               hi: Option[String], nonNull: Long, nulls: Long, full: Boolean)
@@ -844,10 +816,14 @@ object TableLogRelation {
     val schema = TableLog.logSchema(spark, root, Some(index.version)).getOrElse {
       // no declared schema: take the files' own uniform schema from
       // ONE footer (files are immutable, a commit's files share one);
-      // the index already replayed the log — reuse its refs
-      val files = index.activeRefs
-      require(files.nonEmpty,
-        s"TableLogRelation: no active files at $root asOf=$asOf")
+      // the index already replayed the log — reuse its refs. A fully
+      // purged version has none: use the last non-empty version's, as
+      // [[TableLog.snapshot]] does
+      val files = Some(index.activeRefs).filter(_.nonEmpty)
+        .orElse(TableLog.lastNonEmptyFiles(spark, root, Some(index.version)))
+        .getOrElse(sys.error(
+          s"TableLogRelation: $root has no non-empty version at or before " +
+            index.version))
       spark.read.parquet(TableLog.resolve(root, files.head)).schema
     }
     (index, HadoopFsRelation(index, StructType(Nil), schema, None,

@@ -333,7 +333,7 @@ object GraftSql {
   }
 
   /** SQL literal → the typed bound [[graft.operators.TableLog
-    * .deleteWhereTyped]] expects (Long / String / LocalDate /
+    * .deleteWhere]] / [[graft.operators.TableLog.replaceWhere]] expect (Long / String / LocalDate /
     * Instant). TIMESTAMP accepts both the conventional SQL spelling
     * (`TIMESTAMP '2024-01-08 00:00:00'`, read as UTC — the session
     * timezone every graft session declares) and strict ISO-8601 with
@@ -380,16 +380,9 @@ object GraftSql {
       case Del(path, name, keyCol, loS, hiS, parts) =>
         resolveTarget(path, name).map { t => val root = t.root
         GraftVersionCommand(s"DELETE WHERE $root", t.refreshing(s =>
-          (sqlLit(loS), sqlLit(hiS)) match {
-            case (lo: Long, hi: Long) =>
-              graft.operators.TableLog.deleteWhere(s, root, keyCol, lo, hi,
-                name = "sqldelete",
-                parts = Option(parts).map(_.toInt).getOrElse(4))
-            case (lo, hi) =>
-              graft.operators.TableLog.deleteWhereTyped(s, root, keyCol,
-                lo, hi, name = "sqldelete",
-                parts = Option(parts).map(_.toInt).getOrElse(4))
-          })) }
+          graft.operators.TableLog.deleteWhere(s, root, keyCol,
+            sqlLit(loS), sqlLit(hiS), name = "sqldelete",
+            parts = Option(parts).map(_.toInt).getOrElse(4)))) }
       // UPDATE over a key range: REPLACE WHERE with the SET applied —
       // survivors outside the range keep their physical files, the
       // touched range rewrites once, atomically, zone-pruned
@@ -458,14 +451,8 @@ object GraftSql {
                 .getOrElse(col(c))
             }: _*)
             val nParts = Option(parts).map(_.toInt).getOrElse(4)
-            (sqlLit(loS), sqlLit(hiS)) match {
-              case (lo: Long, hi: Long) =>
-                tl.replaceWhere(s, root, keyCol, lo, hi, updated,
-                  name = "sqlupdate", parts = nParts, asOf = Some(readV))
-              case (lo, hi) =>
-                tl.replaceWhereTyped(s, root, keyCol, lo, hi, updated,
-                  name = "sqlupdate", parts = nParts, asOf = Some(readV))
-            }
+            tl.replaceWhere(s, root, keyCol, sqlLit(loS), sqlLit(hiS),
+              updated, name = "sqlupdate", parts = nParts, asOf = Some(readV))
           }))
         }
       // MERGE: the unconditional UPDATE SET * / INSERT * pair routes

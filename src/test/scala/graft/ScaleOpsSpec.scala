@@ -1286,7 +1286,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the range read equals the filtered snapshot AND opens strictly
     // fewer files than the table has
     val lo = 100L; val hi = 150L
-    val ranged = TableLog.snapshotRange(spark0, root, "doc_id", lo, hi)
+    val ranged = TableLog.snapshotWhere(spark0, root, "doc_id", lo, hi)
     val expect = TableLog.snapshot(spark0, root)
       .filter(col("doc_id") >= lo && col("doc_id") <= hi)
     // materialize NOW: later commits + vacuum retire the files this
@@ -1294,7 +1294,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val expectCount = expect.count()
     assert(ranged.exceptAll(expect).count() === 0)
     assert(expect.exceptAll(ranged).count() === 0)
-    val opened = ranged.inputFiles.filter(_.contains("/data/")).toSet
+    val opened = scannedPaths(ranged).filter(_.contains("/data/"))
     assert(opened.nonEmpty && opened.size < files.size,
       s"zone map opened ${opened.size} of ${files.size} files — no pruning")
     // a later commit WITHOUT stats: its rows must still be served
@@ -1305,16 +1305,16 @@ class ScaleOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     TableLog.commit(spark0, root,
       TableLog.stageWrite(extraRows, root, "nostats"), Nil)
-    val widened = TableLog.snapshotRange(spark0, root, "doc_id", lo, 10000L + lo)
+    val widened = TableLog.snapshotWhere(spark0, root, "doc_id", lo, 10000L + lo)
     assert(widened.filter(col("doc_id") === 10000L + lo).count() === 1L)
-    val narrow = TableLog.snapshotRange(spark0, root, "doc_id", lo, hi)
+    val narrow = TableLog.snapshotWhere(spark0, root, "doc_id", lo, hi)
     assert(narrow.count() === expectCount)
-    assert(narrow.inputFiles.filter(_.contains("/data/")).toSet.size
+    assert(scannedPaths(narrow).count(_.contains("/data/"))
       < files.size + 1)
     // delete sidecars compose: an in-range victim disappears
     TableLog.commitDeletes(docs.filter(col("doc_id") === lo)
       .select("doc_id"), root, "purge1")
-    val afterDel = TableLog.snapshotRange(spark0, root, "doc_id", lo, hi,
+    val afterDel = TableLog.snapshotWhere(spark0, root, "doc_id", lo, hi,
       idCol = Some("doc_id"))
     assert(afterDel.filter(col("doc_id") === lo).count() === 0L)
     assert(afterDel.count() === expectCount - 1)
@@ -1327,7 +1327,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     zmaps.foreach(rel => assert(
       !fsys.exists(new org.apache.hadoop.fs.Path(s"$root/$rel")),
       s"zone map $rel outlived every data file it describes"))
-    val postVac = TableLog.snapshotRange(spark0, root, "doc_id", lo, hi,
+    val postVac = TableLog.snapshotWhere(spark0, root, "doc_id", lo, hi,
       idCol = Some("doc_id"))
     assert(postVac.count() === expectCount - 1)
   }
@@ -1346,7 +1346,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         col("doc_id") % 9 =!= 0).count()
     // pre-optimize: a range read cannot prune (no stats) and must
     // anti-join the sidecar
-    val before = TableLog.snapshotRange(spark0, root, "doc_id", 100L, 150L,
+    val before = TableLog.snapshotWhere(spark0, root, "doc_id", 100L, 150L,
       idCol = Some("doc_id"))
     assert(before.count() === expectCount)
     val vOpt = TableLog.optimizeTable(spark0, root, "doc_id", "doc_id",
@@ -1356,15 +1356,15 @@ class ScaleOpsSpec extends AnyFunSuite {
     val total = TableLog.activeFiles(spark0, root).size
     assert(total > 1)
     // post-optimize: same rows, NO sidecar in the plan, pruned scan
-    val after = TableLog.snapshotRange(spark0, root, "doc_id", 100L, 150L)
+    val after = TableLog.snapshotWhere(spark0, root, "doc_id", 100L, 150L)
     assert(after.count() === expectCount)
-    val opened = after.inputFiles
-    assert(opened.nonEmpty && opened.forall(!_.contains("/deletes/")))
-    assert(opened.count(_.contains("/data/")) < total,
+    assert(after.inputFiles.forall(!_.contains("/deletes/")))
+    val opened = scannedPaths(after)
+    assert(opened.nonEmpty && opened.count(_.contains("/data/")) < total,
       "optimized layout must let the range read skip files")
     // the pre-optimize generation vacuums away; reads stay exact
     TableLog.vacuum(spark0, root, retainFrom = vOpt)
-    assert(TableLog.snapshotRange(spark0, root, "doc_id", 100L, 150L)
+    assert(TableLog.snapshotWhere(spark0, root, "doc_id", 100L, 150L)
       .count() === expectCount)
   }
 
@@ -1530,8 +1530,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(snap.except(expected).isEmpty && expected.except(snap).isEmpty)
     // the fresh generation is zone-mapped: a post-replace range read
     // still prunes files
-    val probe = TableLog.snapshotRange(spark0, root, "doc_id", 250L, 260L)
-    assert(probe.inputFiles.length < after.length,
+    val probe = TableLog.snapshotWhere(spark0, root, "doc_id", 250L, 260L)
+    assert(scannedPaths(probe).size < after.length,
       "post-replace range reads must still skip files by zone map")
     // rows outside the predicate are refused, not silently written
     val boom = intercept[IllegalArgumentException] {
@@ -1688,8 +1688,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(snap.except(docs).isEmpty && docs.except(snap).isEmpty,
       "restore must reinstate v0's exact content")
     // v0's zone maps still prune post-restore (its entry is intact)
-    val probe = TableLog.snapshotRange(spark0, root, "doc_id", 10L, 20L)
-    assert(probe.inputFiles.length <
+    val probe = TableLog.snapshotWhere(spark0, root, "doc_id", 10L, 20L)
+    assert(scannedPaths(probe).size <
       TableLog.activeFiles(spark0, root).size)
     // history intact: the bad version stays readable for audit
     assert(TableLog.snapshot(spark0, root, Some(1L))
@@ -1736,9 +1736,9 @@ class ScaleOpsSpec extends AnyFunSuite {
     val got = TableLog.snapshot(spark0, dst, None, Some("doc_id"))
     assert(got.except(expected).isEmpty && expected.except(got).isEmpty)
     // the carried zone maps prune range reads on the CLONE
-    val probe = TableLog.snapshotRange(spark0, dst, "doc_id", 10L, 20L,
+    val probe = TableLog.snapshotWhere(spark0, dst, "doc_id", 10L, 20L,
       idCol = Some("doc_id"))
-    assert(probe.inputFiles.length < TableLog.activeFiles(spark0, dst).size,
+    assert(scannedPaths(probe).size < TableLog.activeFiles(spark0, dst).size,
       "clone range read must prune via the re-keyed zone maps")
     // divergence: source commits after the clone point are invisible
     // to the clone, and clone commits never touch the source log
@@ -2111,7 +2111,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       statsCols = Seq("alt_key"))
     TableLog.commit(spark0, root2, files, Nil, zmap = zm)
     // purge a window whose boundary files rewrite
-    TableLog.deleteWhereTyped(spark0, root2, "doc_id", 120L, 180L, "p", 2)
+    TableLog.deleteWhere(spark0, root2, "doc_id", 120L, 180L, "p", 2)
     val snap = TableLogRelation.snapshotDf(spark0, root2)
     val q = snap.filter(col("alt_key") >= 0L && col("alt_key") <= 280L) // ids 0..40
     assert(q.count() === 41L)
@@ -2258,7 +2258,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       java.nio.file.Paths.get(root + "/" + p))),
       "a metadata drop must leave the bytes for time travel/vacuum")
     // post-purge range reads still prune through the fresh zone maps
-    assert(TableLog.snapshotRange(spark0, root, "doc_id", 0L, 10L)
+    assert(TableLog.snapshotWhere(spark0, root, "doc_id", 0L, 10L)
       .count() === 11L)
     // in-force delete sidecars refuse the rewrite (resurrection risk)
     TableLog.commitDeletes(Seq(0L).toDF("doc_id"), root, "sc")
@@ -2312,26 +2312,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "doc_id", 8,
       statsCols = Seq("skey", "day"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
-    // scan-side file count: the FileIndex's listFiles result is what
-    // FileSourceScanExec reads — df.inputFiles is the UNPRUNED index
-    // listing by contract, so the proof reads the scan metric
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    def findScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => findScans(a.executedPlan)
-      case q: QueryStageExec => findScans(q.plan)
-      case r: ReusedExchangeExec => findScans(r.child)
-      case f: FileSourceScanExec => Seq(f)
-      case o => (o.children ++ o.subqueries).flatMap(findScans)
-    }
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      val scans = findScans(df.queryExecution.executedPlan)
-        .filter(_.relation.location.isInstanceOf[graft.operators.TableLogFileIndex])
-      assert(scans.nonEmpty, "no TableLogFileIndex scan in the plan")
-      scans.map(_.metrics("numFiles").value).sum
-    }
+    // scan-side file count (scannedFiles): the FileIndex's listFiles
+    // result is what FileSourceScanExec reads
     val snap = TableLogRelation.snapshotDf(spark0, root)
     // 1) plain long range — the q136 shape
     val longQ = snap.filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
@@ -2481,9 +2463,9 @@ class ScaleOpsSpec extends AnyFunSuite {
       java.nio.file.Paths.get(root + "/" + p)), s"zmap $p deleted"))
     // and they still prune: a narrow range read opens ~1 of A's 4
     // clustered files (plus the stats-less B commit, conservatively)
-    val pruned = TableLog.snapshotRange(spark0, root, "doc_id", 0L, 50L)
-    assert(pruned.inputFiles.length < fA.length + 1,
-      s"range read stopped pruning: ${pruned.inputFiles.length} files")
+    val pruned = TableLog.snapshotWhere(spark0, root, "doc_id", 0L, 50L)
+    assert(scannedPaths(pruned).size < fA.length + 1,
+      s"range read stopped pruning: ${scannedPaths(pruned).size} files")
     assert(pruned.count() === 51L)
   }
 
@@ -2513,10 +2495,11 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "skey", 8,
       statsCols = Seq("doc_id"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
-    // prefix scan: correct AND pruned (s1: 100 of 400 rows, ~2 of 8 files)
+    // prefix scan: correct AND pruned (s1: 100 of 400 rows, ~2 of 8
+    // files) — a TableLogFileIndex scan, the one zone-pruned read path
     val got = TableLog.snapshotPrefix(spark0, root, "skey", "s1:")
     assert(got.count() === 100L)
-    assert(got.inputFiles.length < files.length,
+    assert(scannedFiles(got) < files.length,
       s"prefix scan read all ${files.length} files")
     assert(got.select("skey").collect().forall(_.getString(0).startsWith("s1:")))
     // an out-of-domain prefix reads NOTHING
@@ -2526,15 +2509,13 @@ class ScaleOpsSpec extends AnyFunSuite {
     // column prunes too
     val sec = TableLog.snapshotWhere(spark0, root, "doc_id", 0L, 40L)
     assert(sec.count() === 41L)
-    assert(sec.inputFiles.length < files.length,
+    assert(scannedFiles(sec) < files.length,
       "statsCols stats did not prune the secondary-column read")
-    // legacy column-less rows must NOT serve the typed API: a FRESH
-    // table whose ONLY stats are a handcrafted pre-typed sidecar
+    // column-less rows must NOT serve any read: a FRESH table whose
+    // ONLY stats are a handcrafted sidecar in a foreign format
     // (file, lo, hi, n_nulls — no scol) claiming an absurdly narrow
-    // interval for every file. The legacy face trusts it (the old
-    // contract: the caller's key discipline named the column) and
-    // prunes everything; the typed face must ignore rows that name no
-    // column and read conservatively.
+    // interval for every file. Rows that name no column are skipped,
+    // so the read stays conservative.
     val root2 = Files.createTempDirectory("graft_tablelog_leg").toString + "/t"
     val f2 = TableLog.stageWrite(
       (0L until 50L).map(i => (i, s"t$i")).toDF("doc_id", "text")
@@ -2547,11 +2528,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       .filter(f => f.getName.endsWith(".parquet"))
       .map(f => s"$legDir/${f.getName}").toSeq
     TableLog.commit(spark0, root2, f2, Nil, zmap = legRefs)
-    // legacy face believes the legacy rows (doc_id 0..40 "misses" the
-    // claimed [1000000, 1000001] interval): prunes the file
-    assert(TableLog.snapshotRange(spark0, root2, "doc_id", 0L, 40L)
-      .count() === 0L)
-    // typed face ignores column-less rows → conservative full read
     assert(TableLog.snapshotWhere(spark0, root2, "doc_id", 0L, 40L)
       .count() === 41L)
   }
@@ -2570,7 +2546,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val got = TableLog.snapshotWhere(spark0, root, "ts",
       t0.plusSeconds(100L * 3600), t0.plusSeconds(140L * 3600))
     assert(got.count() === 41L)
-    assert(got.inputFiles.length < files.length,
+    assert(scannedFiles(got) < files.length,
       s"timestamp window read all ${files.length} files")
     // sql.Timestamp bounds normalize identically to Instant bounds
     val got2 = TableLog.snapshotWhere(spark0, root, "ts",
@@ -2606,7 +2582,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         "not parquet".getBytes("UTF-8"))
     }
     val before = TableLog.versions(spark0, root).last
-    val v = TableLog.deleteWhereTyped(spark0, root, "day",
+    val v = TableLog.deleteWhere(spark0, root, "day",
       base.plusDays(80), base.plusDays(220), "ttl", 2)
     assert(v === before + 1)
     val snap = TableLog.snapshot(spark0, root).collect()
@@ -2625,15 +2601,38 @@ class ScaleOpsSpec extends AnyFunSuite {
     val rr = TableLog.snapshotWhere(spark0, root, "day",
       base.plusDays(0), base.plusDays(10))
     assert(rr.count() === 11L)
-    assert(rr.inputFiles.length < TableLog.activeFiles(spark0, root).length)
+    assert(scannedFiles(rr) < TableLog.activeFiles(spark0, root).length)
     // typed replaceWhere round-trip on the same table: recompute a day
     // range, swap it in, nothing outside moves
     val repl = rows(230 until 240).withColumn("text", upper(col("text")))
-    TableLog.replaceWhereTyped(spark0, root, "day",
+    TableLog.replaceWhere(spark0, root, "day",
       base.plusDays(230), base.plusDays(239), repl, "backfill", 2)
     val after = TableLog.snapshot(spark0, root)
     assert(after.filter(col("text").rlike("^T2[34]")).count() === 10L)
     assert(after.count() === (80L + 79L + 2L))
+  }
+
+  test("a fully purged table reads empty with its base schema through snapshotDf, snapshotWhere and the source face") {
+    import graft.operators.{TableLog, TableLogRelation}
+    val spark0 = spark
+    import spark0.implicits._
+    val root = Files.createTempDirectory("graft_tablelog_purged").toString + "/t"
+    val df = (0L until 100L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+    val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "doc_id", 4)
+    TableLog.commit(spark0, root, files, Nil, zmap = zm)
+    // a window covering every row drops every file by metadata: the
+    // head version is legal and EMPTY, with no declared schema
+    TableLog.deleteWhere(spark0, root, "doc_id", 0L, 99L, "purge", 2)
+    assert(TableLog.activeFiles(spark0, root).isEmpty)
+    val faces = Seq(
+      "snapshotDf" -> TableLogRelation.snapshotDf(spark0, root),
+      "snapshotWhere" -> TableLog.snapshotWhere(spark0, root, "doc_id", 0L, 99L),
+      "source" -> spark0.read.format("graft.sources.TableLogSource").load(root))
+    faces.foreach { case (face, got) =>
+      assert(got.schema.map(f => (f.name, f.dataType)) ===
+        df.schema.map(f => (f.name, f.dataType)), s"$face schema")
+      assert(got.count() === 0L, s"$face rows")
+    }
   }
 
   test("TableLogFileIndex builds from logged file metadata: zero per-data-file stats; checkpoints fold it; legacy entries fall back") {
@@ -2714,9 +2713,11 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(TableLogRelation.snapshotDf(spark0, root).count() === 450L)
   }
 
-  /** Scan-side pruned-file count for a TableLogFileIndex-backed frame
-    * (df.inputFiles is the UNPRUNED index listing by contract). */
-  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+  /** The executed TableLogFileIndex scans of `df`, after running it
+    * (df.inputFiles is the UNPRUNED index listing by contract, so
+    * pruning proofs read the scans). */
+  private def tableLogScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -2731,8 +2732,19 @@ class ScaleOpsSpec extends AnyFunSuite {
     val scans = findScans(df.queryExecution.executedPlan)
       .filter(_.relation.location.isInstanceOf[graft.operators.TableLogFileIndex])
     assert(scans.nonEmpty, "no TableLogFileIndex scan in the plan")
-    scans.map(_.metrics("numFiles").value).sum
+    scans
   }
+
+  /** Scan-side pruned-file count for a TableLogFileIndex-backed frame. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long =
+    tableLogScans(df).map(_.metrics("numFiles").value).sum
+
+  /** The data files those scans select after pruning — for specs that
+    * compare file identities, not just a count. */
+  private def scannedPaths(df: org.apache.spark.sql.DataFrame): Set[String] =
+    tableLogScans(df)
+      .flatMap(_.selectedPartitions.toPartitionArray.map(_.toPath.toString))
+      .toSet
 
   test("TableLogFileIndex: IN-list point pruning, the InSet rewrite, and IS NULL via n_nulls") {
     import graft.operators.{TableLog, TableLogRelation}

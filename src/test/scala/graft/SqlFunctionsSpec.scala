@@ -125,6 +125,23 @@ class SqlFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("the zone-map HLL bank's built-in array cast matches the per-element transform") {
+    import graft.functions.Sketches
+    import graft.plans.HllRegisters.hllRegisters
+    import spark.implicits._
+    // one group per language, plus an all-NULL group (an empty bank)
+    val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
+      .select(col("lang"), col("text"))
+      .unionByName(Seq(("none", null: String)).toDF("lang", "text"))
+    val regs = hllRegisters(Sketches.bucketRho(col("text")), Sketches.M)
+    val both = docs.groupBy("lang").agg(
+      array_join(regs.cast("array<string>"), ",").as("cast"),
+      array_join(transform(regs, r => r.cast("string")), ",").as("hof"))
+    assert(both.count() > 1)
+    assert(both.schema("cast").dataType === both.schema("hof").dataType)
+    assert(both.filter(!(col("cast") <=> col("hof"))).count() === 0)
+  }
+
   test("native BigramHashes matches the paired ShingleHashes reference") {
     import graft.functions.{TextFunctions => TF}
     val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
