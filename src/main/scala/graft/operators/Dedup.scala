@@ -23,7 +23,7 @@ import graft.functions.TextFunctions
   *    no interpreted per-element lambdas; posting-list joins key on
   *    64-bit shingle fingerprints, not strings.
   */
-object Dedup {
+object Dedup extends org.apache.spark.internal.Logging {
 
   /** Exact duplicate groups by full-text hash; keeps min(id) per group.
     * Grouping on xxhash64(text) (collision odds negligible at corpus
@@ -234,8 +234,12 @@ object Dedup {
     // measured 214s → 78s on the sf10 verify tail. The hint would
     // DISABLE the broadcast at small SF (hint priority beats size), so
     // it is applied only when lists cannot broadcast anyway.
-    val broadcastable = lists.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val listsBytes = lists.queryExecution.optimizedPlan.stats.sizeInBytes
+    val broadcastLimit = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val broadcastable = listsBytes <= broadcastLimit
+    logInfo(s"ngramJaccardPairsPrefix verify join: lists estimate " +
+      s"$listsBytes B, broadcast threshold $broadcastLimit B -> " +
+      (if (broadcastable) "broadcast" else "shuffle_hash"))
     def listsAs(id: String, arr: String): DataFrame = {
       val l = lists.toDF(id, arr)
       if (broadcastable) l else l.hint("shuffle_hash")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftbridge.ParquetMeta
 
 /** A minimal TRANSACTION-LOG table format — versioned snapshots over
   * immutable parquet files, the storage discipline every reproducible
@@ -1193,7 +1194,7 @@ object TableLog {
         val files = activeFiles(spark, root)
         require(files.nonEmpty,
           s"TableLog.evolveAppend: $root has no active files to evolve from")
-        spark.read.parquet(files.map(resolve(root, _)): _*).schema
+        ParquetMeta.schema(spark, files.map(resolve(root, _)): _*)
       }
     val byName = cur.map(fld => fld.name -> fld).toMap
     df.schema.foreach { fld =>
@@ -1245,7 +1246,7 @@ object TableLog {
         require(files.nonEmpty,
           s"TableLog.addColumns: $root has no schema ref and no active " +
             "files — nothing to derive the current schema from")
-        spark.read.parquet(files.map(resolve(root, _)): _*).schema
+        ParquetMeta.schema(spark, files.map(resolve(root, _)): _*)
       }
     // CASE-INSENSITIVE collision check (Delta's rule): Spark resolves
     // case-insensitively by default, so committing both `text` and
@@ -1344,8 +1345,7 @@ object TableLog {
           s"TableLog.restoreTable: version $toV is not restorable — " +
             "vacuum reclaimed every file its pre-evolution schema " +
             "could be derived from")
-        val st = spark.read.parquet(srcFiles.map(resolve(root, _)): _*)
-          .schema
+        val st = ParquetMeta.schema(spark, srcFiles.map(resolve(root, _)): _*)
         Seq(stageSchema(spark, root, s"restore$toV", st))
       case None => Nil
     }
@@ -1945,8 +1945,9 @@ object TableLog {
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
       .sorted
       .map(n => s"data/$dir/$n")
-    val staged = spark.read.parquet(s"$root/data/$dir")
-    val byName = staged.schema.map(fld => fld.name -> fld.dataType).toMap
+    val stagedSchema = ParquetMeta.schema(spark, s"$root/data/$dir")
+    val staged = spark.read.schema(stagedSchema).parquet(s"$root/data/$dir")
+    val byName = stagedSchema.map(fld => fld.name -> fld.dataType).toMap
     val covered = (keyCol +: statsCols).distinct.flatMap { c =>
       zkindFor(byName.getOrElse(c,
         sys.error(s"TableLog.stageWithZoneMap: no column '$c' in the " +
@@ -2064,8 +2065,7 @@ object TableLog {
                                   zmaps: Seq[String]): Array[ZStat] = {
     if (zmaps.isEmpty) Array.empty
     else {
-      val zm = spark.read.option("mergeSchema", "true")
-        .parquet(zmaps.map(resolve(root, _)): _*)
+      val zm = ParquetMeta.read(spark, zmaps.map(resolve(root, _)): _*)
       val have = zm.columns.toSet
       def opt(n: String, cast: String) =
         if (have(n)) col(n).cast(cast) else lit(null).cast(cast)
@@ -2271,7 +2271,7 @@ object TableLog {
     // on a fully-file-aligned empty window, silently estimate 0.
     val declared = logSchema(spark, root, asOf).map(_.fieldNames.toSet)
     lazy val footerCols: Set[String] = active.headOption.map { p =>
-      spark.read.parquet(resolve(root, p)).schema.fieldNames.toSet
+      ParquetMeta.schema(spark, resolve(root, p)).fieldNames.toSet
     }.getOrElse(Set.empty)
     def columnExists(c: String): Boolean = declared match {
       case Some(fields) => fields.contains(c)
@@ -2365,7 +2365,7 @@ object TableLog {
     val declaredNames = declared.map(_.fieldNames.toSet)
     lazy val footerSchema: Option[org.apache.spark.sql.types.StructType] =
       active.headOption.map(p =>
-        spark.read.parquet(resolve(root, p)).schema)
+        ParquetMeta.schema(spark, resolve(root, p)))
     def columnExists(c: String): Boolean = declaredNames match {
       case Some(fields) => fields.contains(c)
       case None => zones.exists(_.scol == c) ||

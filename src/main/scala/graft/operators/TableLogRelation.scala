@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.ParquetMeta
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A CATALYST-VISIBLE snapshot relation over a [[TableLog]] table: the
@@ -100,7 +101,8 @@ class TableLogFileIndex(spark: SparkSession, root: String,
   private[graft] def activeRefs: Seq[String] = active.map(_._1)
 
   /** Zone stats collected ONCE — listFiles must not re-read sidecars
-    * (a Spark job) inside every planning pass. */
+    * (one driver-side parquet read per sidecar) inside every planning
+    * pass. */
   protected lazy val zones: Array[TableLog.ZStat] =
     TableLog.collectZoneRows(spark, root, Some(version))
 
@@ -824,7 +826,7 @@ object TableLogRelation {
         .getOrElse(sys.error(
           s"TableLogRelation: $root has no non-empty version at or before " +
             index.version))
-      spark.read.parquet(TableLog.resolve(root, files.head)).schema
+      ParquetMeta.schema(spark, TableLog.resolve(root, files.head))
     }
     (index, HadoopFsRelation(index, StructType(Nil), schema, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark))

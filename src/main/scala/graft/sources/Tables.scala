@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetMeta
 
 /** Schema'd loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -8,16 +9,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * title/event stream, `sources`/`genres`-like dims are the small
   * reference tables (region/nation here), `documents`/`embeddings` are
   * the training-data-pipeline tables. Loaders keep the scan declarative
-  * (plain `spark.read.parquet`) so Catalyst retains predicate pushdown
-  * and column pruning on every downstream query.
+  * (`spark.read.parquet` with the file's own schema) so Catalyst
+  * retains predicate pushdown and column pruning on every downstream
+  * query. The schema comes from the footer, read on the driver
+  * ([[org.apache.spark.sql.graftbridge.ParquetMeta.schema]]): a plain
+  * `spark.read.parquet` would infer it with a Spark job on every load.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = s"$sfDir/$name.parquet"
+    spark.read.schema(ParquetMeta.schema(spark, p)).parquet(p)
+  }
 
   /** Count every table once so the first timed query does not absorb
     * JVM, codegen and file-listing warm-up. `events` goes through

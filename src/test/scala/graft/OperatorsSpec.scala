@@ -262,6 +262,50 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("the prefix join logs its plan-time verify-join strategy, and the plan follows it") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "graft.operators.Dedup"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("dedup-strategy-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val oldLevel = LogManager.getLogger(name).getLevel
+    Configurator.setLevel(name, Level.INFO)
+    val logger = LogManager.getLogger(name).asInstanceOf[CoreLogger]
+    logger.addAppender(probe)
+    def strategyOf(threshold: String): (String, Boolean) = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, threshold)
+      try {
+        seen.clear()
+        val pairs = Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", 3, 0.5)
+        val msgs = seen.toArray.map(_.toString).filter(_.contains("verify join"))
+        assert(msgs.length === 1, s"expected one strategy line, got ${msgs.toSeq}")
+        (msgs.head, pairs.queryExecution.optimizedPlan.toString.contains("strategy=shuffle_hash"))
+      } finally spark.conf.set(key, old)
+    }
+    try {
+      // sf0.001's shingle lists fit the default threshold: broadcast, no hint
+      val (small, smallHinted) = strategyOf("10485760")
+      assert(small.contains("threshold 10485760 B -> broadcast"), small)
+      assert(small.matches(".*lists estimate \\d+ B.*"), small)
+      assert(!smallHinted)
+      // broadcasting disabled: the shuffled-hash hint, and the log says so
+      val (big, bigHinted) = strategyOf("-1")
+      assert(big.endsWith("threshold -1 B -> shuffle_hash"), big)
+      assert(bigHinted)
+    } finally {
+      logger.removeAppender(probe)
+      Configurator.setLevel(name, oldLevel)
+    }
+  }
+
   test("simhash of near-duplicates is close in hamming distance") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
     val sh = Dedup.simhashTable(docs, "doc_id", "text")
