@@ -3269,9 +3269,13 @@ object SparkEntry {
     * pushes into the parquet scan. Output ≡ the plain filter over the
     * base table — the layout must not change results, it only deletes
     * the other 90+ directories from the scan. */
-  private val q114GsiCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val q114GsiCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
   private val q114: Q = (s, d) => {
-    val path = q114GsiCache.computeIfAbsent(d, _ => {
+    // the layout's schema (partition columns included) is inferred
+    // ONCE, when the layout is written: a probe that re-inferred it
+    // would submit a footer-reading job on every call
+    val (path, schema) = q114GsiCache.computeIfAbsent(d, _ => {
       val root = java.nio.file.Files.createTempDirectory("graft_q114_gsi")
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         val walk = java.nio.file.Files.walk(root)
@@ -3281,9 +3285,9 @@ object SparkEntry {
       }))
       val p = root.toString + "/documents_by_source_lang"
       graft.operators.Layout.writeGsi(Tables.documents(s, d), p, "source", "lang")
-      p
+      p -> s.read.parquet(p).schema
     })
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
       .filter(col("source").isin("src1", "src7", "src15") &&
         col("lang").isin("en", "zh") && col("n_chars") >= 200)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))

@@ -21,7 +21,8 @@ import org.apache.spark.sql.graftbridge.ParquetMeta
   *    (paths relative to the table root), plus optional delete
   *    SIDECARS ([[commitDeletes]]), a deletes-reset marker
   *    ([[compactTable]]), and optional row-lineage CHANGE-FEED
-  *    sidecars ([[commitWithFeed]]) that make [[changes]] O(delta);
+  *    sidecars ([[commitWithFeed]]) that make [[changes]] O(delta) —
+  *    an insert-only commit names its own adds as its feed instead;
   *  - the snapshot at version V = union of adds minus removes over
   *    entries ≤ V — reading never lists the data directory, only the
   *    log (O(#commits), not O(#files));
@@ -300,7 +301,10 @@ object TableLog {
     * [[commitDeletes]]; `resetDeletes` marks that sidecars committed
     * BEFORE this version no longer apply — see [[compactTable]];
     * `cdf` are root-relative ROW-LINEAGE sidecar files recording this
-    * commit's own (id, status) changes — see [[commitWithFeed]]).
+    * commit's own (id, status) changes — see [[commitWithFeed]]; an
+    * INSERT-ONLY commit passes its own adds instead, `cdf == add`,
+    * and its feed is then every row of those files as `added` (see
+    * [[changes]]) with no sidecar written at all).
     * Optimistic: claims max(version)+1 atomically; on a lost race,
     * re-reads and retries. Returns the version written.
     *
@@ -370,10 +374,10 @@ object TableLog {
     // practice — adds are staged before commit) records the unknown
     // sentinel; readers then fall back to a stat for IT alone.
     val addMeta = metaFor(f, root, add)
-    // feed sidecar sizes travel in the entry too — the byte-based
-    // stream admission cap (TableChangesSource maxBytesPerTrigger)
-    // then weighs a version with zero stat calls
-    val cdfMeta = metaFor(f, root, cdf)
+    // feed sizes travel in the entry too — the byte-based stream
+    // admission cap (TableChangesSource maxBytesPerTrigger) then
+    // weighs a version with zero stat calls
+    val cdfMeta = if (cdf == add) addMeta else metaFor(f, root, cdf)
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     var attempt = 0
     while (attempt < 64) {
@@ -503,9 +507,11 @@ object TableLog {
       op, cdfMeta)
   }
 
-  /** The change-feed sidecar BYTES of version `v` — the weight a
+  /** The change-feed BYTES of version `v` — the weight a
     * byte-based stream admission cap assigns the version
-    * ([[graft.streaming.TableChangesSource]]'s `maxBytesPerTrigger`).
+    * ([[graft.streaming.TableChangesSource]]'s `maxBytesPerTrigger`):
+    * its sidecars' lengths, or for an insert-only `cdf == add` commit
+    * its add files' lengths (the files [[changes]] reads for it).
     * Modern entries answer from their commit-time `cdfmeta` lengths
     * with ZERO stat calls; legacy/meta-less entries fall back to one
     * getFileStatus per cdf file, for those entries alone, counting a
@@ -1423,6 +1429,25 @@ object TableLog {
   def stageWrite(df: DataFrame, root: String, name: String): Seq[String] =
     stageUnder(df, root, "data", name)
 
+  /** [[stageWrite]] for a frame that may hold no rows (a streaming
+    * micro-batch a watermark advance produced), in ONE Spark job: the
+    * row count is observed on the write itself, never asked of a
+    * separate `isEmpty`/`count` action that would run the frame's
+    * plan twice. An empty frame's stage dir is deleted on the spot and
+    * Nil returned — there is nothing to commit (its manifest marker
+    * retires at the next [[gcOrphans]], like a committed stage's). */
+  def stageNonEmpty(df: DataFrame, root: String, name: String): Seq[String] = {
+    val obs = org.apache.spark.sql.Observation()
+    val (dir, files) = stageDir(
+      df.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("rows")),
+      root, "data", name)
+    if (obs.get("rows") != 0L) files
+    else {
+      fs(df.sparkSession, root).delete(new Path(s"$root/$dir"), true)
+      Nil
+    }
+  }
+
   /** Record an intended stage target in the `_log/_stages/` manifest
     * BEFORE its data is written — one tiny marker file whose content
     * is the target's root-relative path. [[gcOrphans]] sweeps FROM
@@ -1444,17 +1469,23 @@ object TableLog {
   }
 
   private def stageUnder(df: DataFrame, root: String, sub: String,
-                         name: String): Seq[String] = {
+                         name: String): Seq[String] =
+    stageDir(df, root, sub, name)._2
+
+  /** Stage `df` under a fresh `<sub>/<name>-<uuid>/` dir; returns the
+    * dir and its data files, all root-relative. */
+  private def stageDir(df: DataFrame, root: String, sub: String,
+                       name: String): (String, Seq[String]) = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    val dir = s"$name-${java.util.UUID.randomUUID().toString.take(8)}"
-    stageMarker(f, root, s"$sub/$dir")
-    df.write.mode("errorifexists").parquet(s"$root/$sub/$dir")
-    f.listStatus(new Path(s"$root/$sub/$dir")).toSeq
+    val dir = s"$sub/$name-${java.util.UUID.randomUUID().toString.take(8)}"
+    stageMarker(f, root, dir)
+    df.write.mode("errorifexists").parquet(s"$root/$dir")
+    dir -> f.listStatus(new Path(s"$root/$dir")).toSeq
       .map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
       .sorted
-      .map(n => s"$sub/$dir/$n")
+      .map(n => s"$dir/$n")
   }
 
   /** The id→bucket layout function shared by [[stageBucketed]] and
@@ -3059,7 +3090,14 @@ object TableLog {
     * ([[commitWithFeed]] / [[commitDeletesWithFeed]]) serve their
     * step by reading the sidecar — O(delta) per step, the table is
     * never re-read (ScaleOpsSpec asserts the plan's input files are
-    * sidecars only). Versions without one fall back to diffing the
+    * sidecars only). An INSERT-ONLY version whose `cdf` refs equal its
+    * `add` refs (non-empty) serves its step from those add files as
+    * `select(idCol, lit("added") as status)` — Delta's rule for
+    * insert-only commits, whose change feed is read from the add
+    * files: O(delta) too, and the sink never wrote a second copy of
+    * its ids. The rule is keyed on ref equality, never on column
+    * names, so a table with its own `status` column still reads
+    * `added` there. Versions without a feed fall back to diffing the
     * two adjacent snapshots with [[Versioning.datasetDiff]] —
     * O(#steps × table) worst case, O(changed files) when commits
     * replace few files — so pre-feed tables stay fully queryable.
@@ -3089,14 +3127,17 @@ object TableLog {
         "them) — this consumer lagged past the retention horizon and " +
         "must re-seed from a snapshot, not skip changes")
     vs.map { v =>
-      val cdf = readEntry(f, entryPath(root, v)).cdf
+      val e = readEntry(f, entryPath(root, v))
       val step =
-        if (cdf.nonEmpty) {
-          val sidecar = spark.read.parquet(cdf.map(resolve(root, _)): _*)
-          require(sidecar.columns.contains(idCol),
-            s"TableLog.changes: cdf sidecar of v$v lacks id column " +
-              s"'$idCol' (has ${sidecar.columns.mkString(",")})")
-          sidecar
+        if (e.cdf.nonEmpty) {
+          val paths = e.cdf.map(resolve(root, _))
+          val feed = spark.read.schema(ParquetMeta.schema(spark, paths: _*))
+            .parquet(paths: _*)
+          require(feed.columns.contains(idCol),
+            s"TableLog.changes: change feed of v$v lacks id column " +
+              s"'$idCol' (has ${feed.columns.mkString(",")})")
+          if (e.cdf == e.add) feed.select(col(idCol), lit("added").as("status"))
+          else feed
         } else if (requireFeed) sys.error(
           s"TableLog.changes: version $v of $root has no change-feed " +
             "sidecar and requireFeed is set — commit through " +

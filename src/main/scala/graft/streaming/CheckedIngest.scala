@@ -102,6 +102,7 @@ object CheckedIngest {
     val tags = new Ingest.TagCache(root, deadRoot)
     (batch, batchId) =>
       val sp = batch.sparkSession
+      Ingest.requireIdCol("CheckedIngest", batch, idCol)
       if (!batch.isEmpty) {
         val tag = s"$streamId-b$batchId"
         val deadTag = s"$streamId-dead-b$batchId"
@@ -133,21 +134,16 @@ object CheckedIngest {
           val cs = TableLog.constraintsFor(sp, root, refs)
             .toSeq.sortBy(_._1)
           // persist the VERDICT frame: good and bad must split from
-          // one evaluation, and both commits (plus the feed) read it
+          // one evaluation, and both commits read it
           val flagged = flag(batch, cs).persist()
           try {
-            val good = goodOf(flagged, cs)
             // commit even when good is EMPTY: the tag must land so
-            // a crash-replay re-judges under THIS version's rules
-            TableLog.commit(sp, root,
-              add = TableLog.stageWrite(good, root,
-                s"$streamId/b$batchId"),
-              remove = Nil,
-              cdf = TableLog.stageFeed(
-                good.select(col(idCol), lit("added").as("status")),
-                root, s"$streamId/b$batchId"),
-              tag = Some(tag),
-              expectChecks = Some(refs))
+            // a crash-replay re-judges under THIS version's rules.
+            // An append's feed is its own adds (cdf == add)
+            val files = TableLog.stageWrite(goodOf(flagged, cs), root,
+              s"$streamId/b$batchId")
+            TableLog.commit(sp, root, add = files, remove = Nil,
+              cdf = files, tag = Some(tag), expectChecks = Some(refs))
             tags.mark(tag)
             commitDead(badOf(flagged, cs, batchId), deadRoot,
               streamId, batchId, deadTag)

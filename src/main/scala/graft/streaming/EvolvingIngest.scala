@@ -44,29 +44,32 @@ object EvolvingIngest {
     var known: StructType = null // columns proven present in the table
     (batch, batchId) =>
       val sp = batch.sparkSession
+      Ingest.requireIdCol("EvolvingIngest", batch, idCol)
       if (!batch.isEmpty) {
         val tag = s"$streamId-b$batchId"
         if (!tags.known(sp, tag)) {
-          val b = batch.persist() // staged data + feed read it
+          val b = batch.persist() // retries and the widening path re-read it
           try {
             val covered = known != null && b.schema.forall(fld =>
               known.exists(k =>
                 k.name == fld.name && k.dataType == fld.dataType))
             Ingest.retryRaces("EvolvingIngest", batchId) {
-              // feed staged per attempt: a conflict-refused attempt's
-              // sidecar is an unreferenced orphan (gcOrphans reclaims)
-              val feed = TableLog.stageFeed(
-                b.select(col(idCol), lit("added").as("status")),
-                root, s"$streamId/b$batchId")
-              if (covered)
+              if (covered) {
                 // no widening possible: plain blind append — never
-                // reads the schema, never conflicts
-                TableLog.commit(sp, root,
-                  add = TableLog.stageWrite(b, root, s"$streamId/b$batchId"),
-                  remove = Nil, cdf = feed, tag = Some(tag))
-              else
+                // reads the schema, never conflicts; its feed is its
+                // own adds (cdf == add)
+                val files = TableLog.stageWrite(b, root, s"$streamId/b$batchId")
+                TableLog.commit(sp, root, add = files, remove = Nil,
+                  cdf = files, tag = Some(tag))
+              } else
+                // evolveAppend stages its adds itself, so the widening
+                // commit carries a sidecar feed, staged per attempt (a
+                // conflict-refused attempt's sidecar is an unreferenced
+                // orphan gcOrphans reclaims)
                 TableLog.evolveAppend(b, root, s"$streamId/b$batchId",
-                  tag = Some(tag), cdf = feed)
+                  tag = Some(tag), cdf = TableLog.stageFeed(
+                    b.select(col(idCol), lit("added").as("status")),
+                    root, s"$streamId/b$batchId"))
             }
             // the landed commit proves the table now holds b's columns
             known =

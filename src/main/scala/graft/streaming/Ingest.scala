@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.TableLog
 
@@ -32,6 +32,15 @@ private[streaming] object Ingest {
     }
     def mark(tag: String): Unit = seen += tag
   }
+
+  /** A sink whose commits name their own data files as the change
+    * feed (`cdf == add`) records no ids of its own: [[TableLog.changes]]
+    * reads them back from those files by `idCol`. Refuse a batch
+    * without the column before anything is written — its feed could
+    * never be served. */
+  def requireIdCol(label: String, batch: DataFrame, idCol: String): Unit =
+    require(batch.columns.contains(idCol),
+      s"$label: batch lacks id column '$idCol' (has ${batch.columns.mkString(",")})")
 
   /** Conflict-retry loop for sinks whose commits carry expect-pins
     * (constraint or schema sets): a

@@ -31,11 +31,12 @@ import graft.operators.TableLog
   *  - **Offsets are table versions** — monotone by construction (the
   *    log only grows), a single long in the checkpoint WAL. A batch
   *    (start, end] is served by [[TableLog.changes]] with
-  *    `requireFeed = true`: each version's O(delta) sidecar parquet,
-  *    NEVER a snapshot diff — a feed-less commit fails the stream
-  *    loudly instead of silently re-reading the table inside a
-  *    trigger (`fallback.diff=true` opts into the diff for
-  *    pre-feed history, with `contentCol` naming the diffed column).
+  *    `requireFeed = true`: each version's O(delta) sidecar parquet
+  *    (or, for an append, its own add files), NEVER a snapshot diff —
+  *    a feed-less commit fails the stream loudly instead of silently
+  *    re-reading the table inside a trigger (`fallback.diff=true`
+  *    opts into the diff for pre-feed history, with `contentCol`
+  *    naming the diffed column).
   *  - **Exactly-once replay**: sidecar files are immutable and the
   *    batch for a (start, end] pair is deterministic, so a crashed
   *    batch re-planned from the WAL re-reads identical rows; with an
@@ -142,7 +143,11 @@ class TableChangesSource(sqlContext: SQLContext, root: String,
     * maxVersionsPerTrigger`, and/or at the last version whose
     * CUMULATIVE feed bytes (the entries' commit-time `cdfmeta`
     * lengths — [[TableLog.feedBytes]], zero stat calls on modern
-    * logs) still fit `maxBytesPerTrigger` — so a backlog drains in
+    * logs) still fit `maxBytesPerTrigger`. A sidecar version weighs
+    * its sidecar; an append ([[TableIngest]]'s `cdf == add` commits)
+    * weighs its ADD files, which is what its step reads — whole rows,
+    * so a byte cap admits fewer append versions per trigger than it
+    * would sidecars of the same ids. So a backlog drains in
     * bounded steps AND one fat commit can't blow a trigger: a version
     * exceeding the budget alone is admitted by itself (progress),
     * never together with others. None until the table has a version

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.operators.TableLog
 
@@ -35,10 +34,18 @@ import graft.operators.TableLog
   * CONCURRENT committers on the same table: the optimistic version
   * claim retries until this batch's entry lands at some version.
   *
-  * At 100 TB: per batch, one parquet write of the batch + one KB-sized
-  * log entry + one constant-size feed sidecar write. The log grows
-  * O(#batches) — compact with [[TableLog.compactTable]] + vacuum on
-  * the retention schedule like any other committer. */
+  * An EMPTY batch (a watermark-only trigger) stages nothing it keeps
+  * and commits nothing: its row count comes from the staging write
+  * itself ([[TableLog.stageNonEmpty]]), and its stage dir is deleted
+  * before the sink returns.
+  *
+  * At 100 TB: per batch, ONE Spark job — the parquet write of the
+  * batch — plus one KB-sized log entry. The feed costs no write: an
+  * append's change feed IS its add files (the commit's `cdf` refs
+  * equal its adds; [[TableLog.changes]] reads every row there as
+  * `added`). The log grows O(#batches) — compact with
+  * [[TableLog.compactTable]] + vacuum on the retention schedule like
+  * any other committer. */
 object TableIngest {
 
   /** The foreachBatch sink (append-only ingest; id'd rows):
@@ -49,7 +56,9 @@ object TableIngest {
     * }}}
     * Every batch row is recorded in the feed as `added` — the
     * ingest's contract is append (dedup/upsert belong to downstream
-    * consumers of the feed, or to [[DedupIngest]] upstream).
+    * consumers of the feed, or to [[DedupIngest]] upstream) — so the
+    * commit names its own data files as its feed (`cdf == add`); no
+    * second copy of the ids is written.
     *
     * `streamId` scopes the idempotence tags: batch ids are only
     * unique PER CHECKPOINT, so a reset checkpoint (or a second query
@@ -66,25 +75,8 @@ object TableIngest {
     * committers with OTHER streamIds never collide, so the cache
     * cannot go stale for this stream's own tags.) */
   def sink(root: String, idCol: String,
-           streamId: String = "ingest"): (DataFrame, Long) => Unit = {
-    val tags = new Ingest.TagCache(root)
-    (batch, batchId) =>
-      val sp = batch.sparkSession
-      if (!batch.isEmpty) {
-        val tag = s"$streamId-b$batchId"
-        if (!tags.known(sp, tag)) {
-          val b = batch.persist() // staged data + feed read it
-          try {
-            val files = TableLog.stageWrite(b, root, s"$streamId/b$batchId")
-            val feed = b.select(col(idCol), lit("added").as("status"))
-            TableLog.commit(sp, root, files, Nil,
-              cdf = TableLog.stageFeed(feed, root, s"$streamId/b$batchId"),
-              tag = Some(tag))
-            tags.mark(tag)
-          } finally b.unpersist()
-        }
-      }
-  }
+           streamId: String = "ingest"): (DataFrame, Long) => Unit =
+    ingest(root, Some(idCol), streamId)
 
   /** [[sink]] without a change feed — append-only ingest of frames
     * that carry no row identity (raw event landing). Same
@@ -92,16 +84,24 @@ object TableIngest {
     * table still time-travels per batch boundary, there is just no
     * O(delta) feed for downstream maintainers to consume. */
   def appendSink(root: String,
-                 streamId: String = "ingest"): (DataFrame, Long) => Unit = {
+                 streamId: String = "ingest"): (DataFrame, Long) => Unit =
+    ingest(root, None, streamId)
+
+  /** Both sinks: the tag check, then one staging job, then — for a
+    * non-empty batch — one commit whose feed is its own adds when
+    * `idCol` is given. */
+  private[streaming] def ingest(root: String, idCol: Option[String],
+                                streamId: String): (DataFrame, Long) => Unit = {
     val tags = new Ingest.TagCache(root)
     (batch, batchId) =>
       val sp = batch.sparkSession
-      if (!batch.isEmpty) {
-        val tag = s"$streamId-b$batchId"
-        if (!tags.known(sp, tag)) {
-          TableLog.commit(sp, root,
-            TableLog.stageWrite(batch, root, s"$streamId/b$batchId"), Nil,
-            tag = Some(tag))
+      idCol.foreach(Ingest.requireIdCol("TableIngest", batch, _))
+      val tag = s"$streamId-b$batchId"
+      if (!tags.known(sp, tag)) {
+        val files = TableLog.stageNonEmpty(batch, root, s"$streamId/b$batchId")
+        if (files.nonEmpty) {
+          TableLog.commit(sp, root, files, Nil,
+            cdf = if (idCol.isDefined) files else Nil, tag = Some(tag))
           tags.mark(tag)
         }
       }
@@ -117,11 +117,10 @@ object TableIngest {
 private[graft] class TableLogStreamSink(root: String, idCol: Option[String],
     streamId: String)
     extends org.apache.spark.sql.execution.streaming.Sink {
-  private val fn = idCol.map(id => TableIngest.sink(root, id, streamId))
-    .getOrElse(TableIngest.appendSink(root, streamId))
+  private val fn = TableIngest.ingest(root, idCol, streamId)
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the Dataset a V1 Sink receives is incrementally planned:
-    // re-planning ops (persist, isEmpty, a second action) would
+    // re-planning ops (observe, persist, a second action) would
     // re-trigger the source. Lift its physical rows into a plain
     // frame ONCE; everything downstream is then ordinary batch code.
     val spark = data.sparkSession

@@ -1199,6 +1199,66 @@ class ScaleOpsSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 12 =!= 0).filter(col("doc_id") % 7 =!= 0).count())
   }
 
+  test("TableLog: an insert-only commit's feed is its own add files (cdf == add)") {
+    import graft.operators.TableLog
+    val spark0 = spark
+    import spark0.implicits._
+    val root = Files.createTempDirectory("graft_tablelog_addfeed").toString + "/t"
+    def abs(rel: String) = new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
+    def read(feed: org.apache.spark.sql.DataFrame) =
+      feed.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    // the table has its OWN `status` column: the add-feed rule is keyed
+    // on ref equality, so these values must never leak into the feed
+    def rows(ids: Range) = ids.map(i => (i.toLong, s"t$i", "removed"))
+      .toDF("doc_id", "text", "status").coalesce(1)
+    def append(ids: Range, name: String): (Long, Seq[String]) = {
+      val files = TableLog.stageWrite(rows(ids), root, name)
+      (TableLog.commit(spark0, root, files, Nil, cdf = files), files)
+    }
+    val (v0, a0) = append(0 until 40, "a0")
+    // v1: a sidecar version — rewrite a0, dropping ids %4 and changing %5
+    val before = rows(0 until 40)
+    val after = before.filter(col("doc_id") % 4 =!= 0)
+      .withColumn("text",
+        when(col("doc_id") % 5 === 0, upper(col("text"))).otherwise(col("text")))
+    val v1 = TableLog.commitWithFeed(spark0, root,
+      TableLog.stageWrite(after, root, "a0v2"), a0, before, after,
+      "doc_id", "text", "r1")
+    val (v2, a2) = append(40 until 60, "a2")
+    val v3 = TableLog.commitDeletesWithFeed(Seq(41L, 42L).toDF("doc_id"),
+      root, "purge")
+    val (v4, a4) = append(60 until 70, "a4")
+    def added(v: Long, ids: Range) = ids.map(i => (v, i.toLong, "added")).toSet
+    val expected = added(v0, 0 until 40) ++
+      (0 until 40).filter(_ % 4 == 0).map(i => (v1, i.toLong, "removed")) ++
+      (0 until 40).filter(i => i % 4 != 0 && i % 5 == 0)
+        .map(i => (v1, i.toLong, "changed")) ++
+      added(v2, 40 until 60) ++ Set((v3, 41L, "removed"), (v3, 42L, "removed")) ++
+      added(v4, 60 until 70)
+    // a range mixing add-feed and sidecar versions serves every step
+    // from its feed — requireFeed holds, no snapshot is diffed
+    val all = TableLog.changes(spark0, root, -1L, v4, "doc_id", "text",
+      requireFeed = true)
+    assert(read(all) === expected)
+    // an add-feed step reads exactly that version's add files
+    val step2 = TableLog.changes(spark0, root, v1, v2, "doc_id", "text")
+    assert(step2.inputFiles.map(new org.apache.hadoop.fs.Path(_).toUri.getPath).toSet ===
+      a2.map(abs).toSet)
+    // its weight for byte admission is the adds' logged lengths
+    Seq(v2 -> a2, v4 -> a4).foreach { case (v, files) =>
+      assert(TableLog.feedBytes(spark0, root, v) ===
+        files.map(f => new java.io.File(abs(f)).length).sum)
+    }
+    // compaction removes every add; vacuum from v2 reclaims v0's files
+    // and v1's sidecar, yet every retained add-feed version still serves
+    val vc = TableLog.compactTable(spark0, root, "doc_id", "compacted")
+    val reclaimed = TableLog.vacuum(spark0, root, retainFrom = v2)
+    assert(a0.forall(reclaimed.contains), s"pre-horizon adds must go: $reclaimed")
+    assert((a2 ++ a4).forall(f => new java.io.File(abs(f)).exists))
+    assert(read(TableLog.changes(spark0, root, v1, vc, "doc_id", "text")) ===
+      expected.filter(_._1 >= v2))
+  }
+
   test("TableLog.mergeInto rewrites ONLY touched buckets; compaction retires the sidecar read path") {
     import graft.operators.TableLog
     val spark0 = spark

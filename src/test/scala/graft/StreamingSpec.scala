@@ -27,6 +27,20 @@ class StreamingSpec extends AnyFunSuite {
 
   private def late(id: Long, t: String) = Event(id, ts(t), 999, "view", 0.0, "{}")
 
+  private def localPath(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  /** The files a frame's plan reads, as local paths. */
+  private def inputs(df: DataFrame): Set[String] = df.inputFiles.map(localPath).toSet
+
+  /** The data files versions (fromV, toV] of an append-only TableLog
+    * table added, as local paths. */
+  private def addedFiles(root: String, fromV: Long, toV: Long): Set[String] = {
+    def active(v: Long) =
+      if (v < 0) Set.empty[String]
+      else graft.operators.TableLog.activeFiles(spark, root, Some(v)).toSet
+    (active(toV) -- active(fromV)).map(rel => localPath(s"$root/$rel"))
+  }
+
   /** Run a streaming df to a memory sink, feeding `batches` one
     * micro-batch at a time. */
   private def runBatches(mkDf: MemoryStream[Event] => DataFrame, name: String,
@@ -769,16 +783,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(full.select("doc_id").as[Long].collect().toSet ===
       Set(1L, 2L, 3L, 4L))
     // the change feed attributes every row to its batch's version and
-    // serves from commit-time sidecars ONLY (O(delta), never the table)
+    // serves from those versions' own add files ONLY (O(delta), never
+    // the table): each commit's feed refs are its adds
     val feed = TableLog.changes(spark, root, fromV = -1L, toV = 1L,
       "doc_id", "text")
     assert(feed.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet ===
       Set((0L, 1L, "added"), (0L, 2L, "added"),
         (1L, 3L, "added"), (1L, 4L, "added")))
-    assert(feed.inputFiles.nonEmpty)
-    assert(feed.inputFiles.forall(_.contains("/cdf/")),
-      "ingest feed must read sidecars, not snapshots")
+    assert(addedFiles(root, -1L, 1L).nonEmpty)
+    assert(inputs(feed) === addedFiles(root, -1L, 1L),
+      "ingest feed must read exactly the batches' add files, never a snapshot")
     // replay of an already-committed batch (the worst crash point:
     // commit landed, checkpoint didn't) must be a no-op — the
     // idempotence tag, not luck, prevents the duplicate commit
@@ -795,6 +810,64 @@ class StreamingSpec extends AnyFunSuite {
     assert(TableLog.changes(spark, root, 1L, 2L, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet ===
       Set((2L, 5L, "added")))
+  }
+
+  test("TableIngest: one Spark job per batch, none for a replay; an empty batch keeps nothing") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import graft.operators.TableLog
+    import org.apache.spark.graftspec.JobProbe
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs")
+      .toFile.getAbsolutePath
+    def stageDirs(root: String, id: Long): Seq[String] =
+      Option(new java.io.File(s"$root/data/ingest").list()).toSeq.flatten
+        .filter(_.startsWith(s"b$id-"))
+    val root = s"$dir/table"
+    val snk = graft.streaming.TableIngest.sink(root, "doc_id")
+    // a planned (non-local) frame: its plan runs only inside a job
+    val batch = spark.range(0, 50, 1, 2)
+      .select(col("id").as("doc_id"), concat(lit("t"), col("id")).as("text"))
+    val (_, nBatch) = JobProbe.jobs(spark.sparkContext)(snk(batch, 0L))
+    assert(nBatch === 1, "a batch must cost exactly its staging write")
+    assert(TableLog.versions(spark, root) === Seq(0L))
+    assert(TableLog.snapshot(spark, root).count() === 50L)
+    assert(TableLog.changes(spark, root, -1L, 0L, "doc_id", "text").count() === 50L)
+    // a replay of the committed batch is answered from the tag cache
+    val (_, nReplay) = JobProbe.jobs(spark.sparkContext)(snk(batch, 0L))
+    assert(nReplay === 0)
+    // an empty batch: still one job (the batch's plan must run), but
+    // no version and no stage dir survive it
+    val (_, nEmpty) = JobProbe.jobs(spark.sparkContext)(
+      snk(batch.filter(col("doc_id") < 0L), 1L))
+    assert(nEmpty === 1)
+    assert(TableLog.versions(spark, root) === Seq(0L))
+    assert(stageDirs(root, 1L).isEmpty)
+    // the same through a live stream: once the late event advances
+    // the dedup watermark, the engine runs a watermark-only (empty)
+    // batch to evict state — it must commit nothing and leave no
+    // stage dir
+    val sroot = s"$dir/stream"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val ssnk = graft.streaming.TableIngest.sink(sroot, "event_id")
+    val events = MemoryStream[Event]
+    val q = EventPipeline.dedupStream(events.toDF()).writeStream
+      .foreachBatch { (b: DataFrame, id: Long) => ssnk(b, id); seen.add(id); () }
+      .option("checkpointLocation", s"$dir/ckpt").start()
+    events.addData(sample: _*); q.processAllAvailable()
+    events.addData(late(90, "2024-01-01 12:00:00")); q.processAllAvailable()
+    def emptyIds = {
+      val tags = TableLog.committedTags(spark, sroot)
+      seen.asScala.toSeq.filterNot(id => tags(s"ingest-b$id"))
+    }
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (emptyIds.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    q.stop()
+    assert(emptyIds.nonEmpty, s"no watermark-only batch ran (batches ${seen.asScala})")
+    assert(TableLog.versions(spark, sroot).size === seen.size - emptyIds.size)
+    emptyIds.foreach(id => assert(stageDirs(sroot, id).isEmpty,
+      s"empty batch $id left a stage dir"))
+    assert(TableLog.snapshot(spark, sroot).count() === 6L)
   }
 
   test("CheckedIngest: constraints gate the stream, violations dead-letter, replay exactly-once") {
@@ -959,8 +1032,17 @@ class StreamingSpec extends AnyFunSuite {
       fromV = refsBefore.head, toV = TableLog.versions(spark, root).last,
       "doc_id", "text")
     assert(feed.select("doc_id").as[Long].collect().toSet === Set(2L, 3L))
-    assert(feed.inputFiles.forall(_.contains("/cdf/")),
-      "drift ingest must keep serving the feed from sidecars")
+    // the widening batch 0 committed through evolveAppend with a
+    // sidecar feed; the reverted batch took the fast path, whose feed
+    // is its own adds — the plan reads exactly those, never the table
+    // (the refused batch 2 staged a sidecar too, which no commit names)
+    val sidecars = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "cdf"))
+      .toArray.toSeq.map(_.toString).filter(_.endsWith(".parquet"))
+      .filter(_.contains("/cdf/evolving/b0-")).map(localPath).toSet
+    assert(sidecars.nonEmpty)
+    assert(inputs(feed) === sidecars ++ addedFiles(root, refsBefore.last,
+        TableLog.versions(spark, root).last),
+      "drift ingest must serve the feed from its sidecar and add files")
     // post-drift, a batch carrying the WIDENED shape rides the
     // zero-schema-read fast path (all its columns are proven present)
     snk(Seq((5L, "ee", "fr")).toDF("doc_id", "text", "lang"), 3L)

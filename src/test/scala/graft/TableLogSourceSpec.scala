@@ -221,12 +221,16 @@ class TableLogSourceSpec extends AnyFunSuite {
     assert(TableLog.versions(spark0, root) === Seq(0L, 1L))
     assert(TableLog.snapshot(spark0, root, Some(0L)).count() === 2L)
     assert(TableLog.snapshot(spark0, root).count() === 3L)
-    // idCol produced a change feed: O(delta) sidecars, not re-scans
+    // idCol produced a change feed: each batch's own add files,
+    // O(delta) — the plan reads exactly those, never a re-scan
     val feed = TableLog.changes(spark0, root, fromV = -1L, toV = 1L,
       "doc_id", "text")
     assert(feed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((0L, 1L), (0L, 2L), (1L, 3L)))
-    assert(feed.inputFiles.forall(_.contains("/cdf/")))
+    def local(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val adds = TableLog.activeFiles(spark0, root, Some(1L)).map(f => local(s"$root/$f"))
+    assert(adds.nonEmpty)
+    assert(feed.inputFiles.map(local).toSet === adds.toSet)
     // REPLAY of a committed batch id must no-op (the worst crash
     // point: commit landed, checkpoint didn't) — drive the V1 Sink
     // directly with the same batch id
