@@ -1184,10 +1184,10 @@ object TableLog {
     * widening is refused loudly, the one evolution this format does
     * not do), the new rows land as ordinary immutable files, and
     * every read at or past the commit null-fills the new columns for
-    * pre-evolution files. Returns the new version. */
+    * pre-evolution files. Insert-only, so the commit's change feed is
+    * its own add files (`cdf == add`). Returns the new version. */
   def evolveAppend(df: DataFrame, root: String, name: String,
-                   tag: Option[String] = None,
-                   cdf: Seq[String] = Nil): Long = {
+                   tag: Option[String] = None): Long = {
     val spark = df.sparkSession
     // pin the schema ref this widening derives from: two concurrent
     // evolutions would otherwise each widen the SAME base and the
@@ -1223,7 +1223,7 @@ object TableLog {
       else Seq(stageSchema(spark, root, name, merged))
     val files = stageWrite(df, root, name)
     commit(spark, root, add = files, remove = Nil,
-      cdf = cdf, tag = tag, schema = schemaSeq,
+      cdf = files, tag = tag, schema = schemaSeq,
       op = Some("EVOLVE_APPEND"), expectSchema = Some(refAtRead))
   }
 

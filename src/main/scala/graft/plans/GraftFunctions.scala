@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.SortedCollect
 
 /** SQL surface for ALL of graft's native expressions and aggregates.
   *
@@ -29,6 +30,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Aggregate builders return the bare `AggregateFunction`; the
   * analyzer wraps it in an AggregateExpression (same contract as the
   * built-in registry).
+  *
+  * Besides the functions, `GraftExtensions` injects the graft SQL
+  * parser and table functions ([[GraftSql]]), the metadata-tier
+  * optimizer rules [[MetadataOnlyAgg]] and [[MetadataTopK]],
+  * [[InsertIntoTableLogRule]], and the AQE query-stage preparation
+  * rule [[org.apache.spark.sql.graftbridge.SortedCollect]] (a
+  * collected root ORDER BY without its range shuffle).
   */
 object GraftFunctions {
 
@@ -113,5 +121,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // rule Spark's raw V1 file-write path drops unlogged parquet
     // into the table dir (invisible to every snapshot read)
     e.injectPostHocResolutionRule(s => InsertIntoTableLogRule(s))
+    // a collected root ORDER BY sorts per partition and merges on the
+    // driver: one job instead of a range exchange's three (AQE only;
+    // every non-collect consumer still range-shuffles) — see
+    // [[org.apache.spark.sql.graftbridge.SortedCollectExec]]
+    e.injectQueryStagePrepRule(_ => SortedCollect)
   }
 }

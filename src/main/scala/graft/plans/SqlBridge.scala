@@ -43,6 +43,13 @@ object BridgePlans {
     spark.internalCreateDataFrame(rows, schema)
 }
 
+/** Waits until every listener event posted so far is delivered, so a
+  * count taken from a listener is exact — `listenerBus` is
+  * `private[spark]`. */
+object ListenerBus {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
+
 /** Parquet metadata read on the driver, in-process: the footer schema
   * inference and small sidecar reads a query plans from, with NO Spark
   * job. `spark.read.parquet` infers its schema with a job (Spark's

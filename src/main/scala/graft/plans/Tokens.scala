@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.BridgeTypes.AbstractDataType
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace tokenization in ONE native loop — semantically identical
@@ -38,25 +39,31 @@ case class Tokens(child: Expression) extends UnaryExpression with ExpectsInputTy
     split(input.asInstanceOf[UTF8String])
 
   def split(s: UTF8String): GenericArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
+    // scan the string where it lives (an UnsafeRow's buffer, a column
+    // vector, a substring's array) instead of copying it per row; each
+    // token points into the same memory, as `UnsafeRow.getUTF8String`
+    // does — consumers that keep a value past the row copy it
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
     var count = 0
     var i = 0
     // first pass: count tokens (avoids a growable buffer per row)
     while (i < n) {
-      if (bytes(i) != 0x20) {
+      if (at(i) != 0x20) {
         count += 1
-        while (i < n && bytes(i) != 0x20) i += 1
+        while (i < n && at(i) != 0x20) i += 1
       } else i += 1
     }
     val out = new Array[Any](count)
     var k = 0
     i = 0
     while (i < n) {
-      if (bytes(i) != 0x20) {
+      if (at(i) != 0x20) {
         val start = i
-        while (i < n && bytes(i) != 0x20) i += 1
-        out(k) = UTF8String.fromBytes(bytes, start, i - start)
+        while (i < n && at(i) != 0x20) i += 1
+        out(k) = UTF8String.fromAddress(base, off + start, i - start)
         k += 1
       } else i += 1
     }

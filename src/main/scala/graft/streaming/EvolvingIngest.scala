@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TableLog
@@ -54,22 +53,17 @@ object EvolvingIngest {
               known.exists(k =>
                 k.name == fld.name && k.dataType == fld.dataType))
             Ingest.retryRaces("EvolvingIngest", batchId) {
+              // both paths are insert-only: the commit's feed is its
+              // own adds (cdf == add)
               if (covered) {
                 // no widening possible: plain blind append — never
-                // reads the schema, never conflicts; its feed is its
-                // own adds (cdf == add)
+                // reads the schema, never conflicts
                 val files = TableLog.stageWrite(b, root, s"$streamId/b$batchId")
                 TableLog.commit(sp, root, add = files, remove = Nil,
                   cdf = files, tag = Some(tag))
               } else
-                // evolveAppend stages its adds itself, so the widening
-                // commit carries a sidecar feed, staged per attempt (a
-                // conflict-refused attempt's sidecar is an unreferenced
-                // orphan gcOrphans reclaims)
                 TableLog.evolveAppend(b, root, s"$streamId/b$batchId",
-                  tag = Some(tag), cdf = TableLog.stageFeed(
-                    b.select(col(idCol), lit("added").as("status")),
-                    root, s"$streamId/b$batchId"))
+                  tag = Some(tag))
             }
             // the landed commit proves the table now holds b's columns
             known =

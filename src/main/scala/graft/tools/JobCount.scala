@@ -3,6 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.ListenerBus
 
 import graft.GraftSession
 import graft.sources.Tables
@@ -44,16 +45,15 @@ object JobCount {
           // run 1 warms per-query setup fixtures (and JIT); the timed
           // runs are what the bench's min-of-3 actually measures
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          ListenerBus.drain(spark.sparkContext)
           jobs.set(0); stages.set(0); tasks.set(0)
           val sec = (1 to reps).map { _ =>
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
           }.min
-          // listener events are async; give the bus a beat to drain
-          // (private listenerBus — a bounded sleep is enough for a
-          // measurement tool; counts are stable ±1 at these scales)
-          Thread.sleep(150)
+          // listener events are async: count only once all are delivered
+          ListenerBus.drain(spark.sparkContext)
           val (j, s, t) = (jobs.get() / reps, stages.get() / reps, tasks.get() / reps)
           totJ += j; totS += s; totSec += sec
           println(f"$name%-28s $sec%7.2f $j%5d $s%7d $t%6d")

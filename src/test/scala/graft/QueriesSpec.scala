@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,8 +27,14 @@ class QueriesSpec extends AnyFunSuite {
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs" + (if (mayBeEmpty(name)) "" else " and returns rows")) {
       val df = fn(spark, TestSpark.sf)
-      val n = df.count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+      val rows = df.collect().toSeq
+      if (!mayBeEmpty(name)) assert(rows.nonEmpty, s"$name returned 0 rows")
+      // collect() may plan a root ORDER BY as a per-partition sort
+      // merged on the driver; toLocalIterator() runs execute(), which
+      // keeps the range exchange: both must give the same rows in the
+      // same order
+      val iterated = df.toLocalIterator().asScala.toSeq
+      assert(rows === iterated, s"$name: collect() and toLocalIterator() differ")
     }
   }
 

@@ -94,6 +94,38 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(edge.filter(!(col("native") <=> col("hof"))).count() === 0)
   }
 
+  test("Tokens scans strings that do not span their backing array") {
+    import graft.functions.{TextFunctions => TF}
+    import graft.plans.Tokens
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
+    import org.apache.spark.sql.types.{DataType, LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
+    def reference(t: String) = t.split(" ").filter(_.nonEmpty).toSeq
+    def split(u: UTF8String) =
+      Tokens(Literal("")).split(u).array.map(_.toString).toSeq
+    val texts = Seq("a  b", " héllo wörld ", "   ", "", "日本 語 x", "one")
+    val toRow = UnsafeProjection.create(Array[DataType](LongType, StringType, StringType))
+    texts.foreach { t =>
+      // a substring view: the middle of a larger array
+      val padded = s"xx $t yy".getBytes("UTF-8")
+      val view = UTF8String.fromBytes(padded, 3, padded.length - 6)
+      assert(view.toString === t)
+      assert(split(view) === reference(t), s"substring view of '$t'")
+      // a field read from an UnsafeRow points into the row's buffer
+      val row = toRow(InternalRow(7L, UTF8String.fromString("pre"), UTF8String.fromString(t)))
+      assert(split(row.getUTF8String(2)) === reference(t), s"UnsafeRow field '$t'")
+    }
+    // the same through plans: a substring result, and a struct field
+    val df = texts.map(t => s"xx $t yy").toDF("p")
+      .select(expr("substring(p, 4, length(p) - 6)").as("t"))
+      .select(col("t"), struct(lit(1L).as("n"), col("t").as("t")).as("s"))
+    val got = df.select(TF.tokens(col("t")).as("a"), TF.tokens(col("s.t")).as("b"))
+      .as[(Seq[String], Seq[String])].collect().toSeq
+    assert(got === texts.map(t => (reference(t), reference(t))))
+  }
+
   test("Tokens and BigramHashes reject wrong input types at analysis time") {
     import org.apache.spark.sql.AnalysisException
     import graft.plans.{BigramHashes, Tokens}

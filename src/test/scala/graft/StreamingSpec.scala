@@ -1032,17 +1032,16 @@ class StreamingSpec extends AnyFunSuite {
       fromV = refsBefore.head, toV = TableLog.versions(spark, root).last,
       "doc_id", "text")
     assert(feed.select("doc_id").as[Long].collect().toSet === Set(2L, 3L))
-    // the widening batch 0 committed through evolveAppend with a
-    // sidecar feed; the reverted batch took the fast path, whose feed
-    // is its own adds — the plan reads exactly those, never the table
-    // (the refused batch 2 staged a sidecar too, which no commit names)
-    val sidecars = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "cdf"))
-      .toArray.toSeq.map(_.toString).filter(_.endsWith(".parquet"))
-      .filter(_.contains("/cdf/evolving/b0-")).map(localPath).toSet
-    assert(sidecars.nonEmpty)
-    assert(inputs(feed) === sidecars ++ addedFiles(root, refsBefore.last,
+    // both batches are insert-only commits whose feed is their own
+    // adds (cdf == add) — the widening batch 0 through evolveAppend,
+    // the reverted batch 1 through the fast path: the plan reads
+    // exactly those files, never the table, and no sidecar is written
+    // (the refused batch 2 stages nothing either)
+    assert(inputs(feed) === addedFiles(root, refsBefore.head,
         TableLog.versions(spark, root).last),
-      "drift ingest must serve the feed from its sidecar and add files")
+      "drift ingest must serve the feed from both batches' add files")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "cdf")),
+      "drift ingest must write no change-feed sidecar")
     // post-drift, a batch carrying the WIDENED shape rides the
     // zero-schema-read fast path (all its columns are proven present)
     snk(Seq((5L, "ee", "fr")).toDF("doc_id", "text", "lang"), 3L)
