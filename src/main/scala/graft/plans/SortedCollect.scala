@@ -3,7 +3,9 @@ package org.apache.spark.sql.graftbridge
 import java.io.{DataInputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
-import org.apache.spark.SparkEnv
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.{MapOutputStatistics, SparkEnv}
 import org.apache.spark.io.CompressionCodec
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,8 +13,12 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression, So
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, LocalTableScanExec, ProjectExec, ShufflePartitionSpec, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{QueryStageExec, ShufflePartitionsUtil}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.util.ThreadUtils
 import org.apache.spark.util.io.{ChunkedByteBuffer, ChunkedByteBufferOutputStream}
 
 /** A collected root `ORDER BY` without its range shuffle.
@@ -30,13 +36,15 @@ import org.apache.spark.util.io.{ChunkedByteBuffer, ChunkedByteBufferOutputStrea
   * that tie on the keys come out in partition order; a range shuffle
   * leaves their order to its fetch order.
   *
+  * A `LocalTableScan` child is sorted on the driver with no job at all.
+  *
   * Every other consumer — `execute()` for a noop or V2 write,
-  * `toLocalIterator`, a cache build — gets the operators the
-  * replaced pair would have run: a range exchange plus a global sort
-  * over the same child, then the absorbed projection. That exchange is
-  * planned here, outside AQE's stages, so AQE does not coalesce its
-  * `numPartitions` partitions. `outputPartitioning`/`outputOrdering`
-  * say what that path delivers.
+  * `toLocalIterator`, a cache build — gets what the replaced pair ran:
+  * a range exchange over the same child, its reduce partitions
+  * coalesced by their map-output sizes as AQE's
+  * `CoalesceShufflePartitions` does for a final stage, each sorted, then
+  * the absorbed projection. `outputPartitioning`/`outputOrdering` say
+  * what that path delivers.
   *
   * `projectList` is the deterministic `Project` the rule absorbed from
   * above the sort (its output is the node's output), evaluated on the
@@ -63,24 +71,53 @@ case class SortedCollectExec(sortOrder: Seq[SortOrder],
 
   // built on first use from the node's own session: execution may run
   // on a thread with no active session, and SparkPlans capture it
-  @transient private lazy val localSort: SparkPlan =
+  @transient private lazy val localSort: SortExec =
     session.withActive(SortExec(sortOrder, global = false, child))
 
-  /** The plan every non-collect consumer runs. */
-  @transient lazy val rangeSorted: SparkPlan = session.withActive {
-    val sorted = SortExec(sortOrder, global = true, ShuffleExchangeExec(
-      RangePartitioning(sortOrder, numPartitions), child, ENSURE_REQUIREMENTS))
-    if (projects) ProjectExec(projectList, sorted) else sorted
+  /** The range exchange every non-collect consumer runs. */
+  @transient lazy val rangeExchange: ShuffleExchangeExec = session.withActive(
+    ShuffleExchangeExec(RangePartitioning(sortOrder, numPartitions), child, ENSURE_REQUIREMENTS))
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val stats = ThreadUtils.awaitResult(rangeExchange.submitShuffleJob(), Duration.Inf)
+    val (sort, list, in) = (localSort, projectList, child.output)
+    val project = projects
+    rangeExchange.getShuffleRDD(coalesced(Option(stats)).toArray).mapPartitionsInternal { it =>
+      val sorted = sort.createSorter().sort(it.asInstanceOf[Iterator[UnsafeRow]])
+      if (project) sorted.map(UnsafeProjection.create(list, in)) else sorted
+    }
   }
 
-  override protected def doExecute(): RDD[InternalRow] = rangeSorted.execute()
+  /** The exchange's reduce partitions as AQE's `CoalesceShufflePartitions`
+    * reads them in a final stage: contiguous ranges, so still in order;
+    * every partition on its own where AQE would not coalesce. */
+  private def coalesced(stats: Option[MapOutputStatistics]): Seq[ShufflePartitionSpec] = {
+    // the range partitioner may cut fewer partitions than it was asked for
+    val each = (0 until rangeExchange.numPartitions).map(i => CoalescedPartitionSpec(i, i + 1))
+    if (!conf.coalesceShufflePartitionsEnabled ||
+        !conf.getConf(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS)) each
+    else {
+      val minNum = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse(
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) {
+          sparkContext.defaultParallelism
+        } else 1)
+      ShufflePartitionsUtil.coalescePartitions(Seq(stats), Seq(None),
+        conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), math.max(minNum, 1),
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)).headOption.getOrElse(each)
+    }
+  }
 
   override def executeCollect(): Array[InternalRow] = executeQuery {
-    val runs = localSort.execute()
-      .mapPartitionsInternal(it => Iterator(SortedCollectExec.encode(it))).collect()
-    val nFields = child.output.length
-    val out = SortedCollectExec.merge(runs.map(r => (r._1, SortedCollectExec
-      .decode(r._2, nFields))), new LazilyGeneratedOrdering(sortOrder, child.output))
+    val ord = new LazilyGeneratedOrdering(sortOrder, child.output)
+    val out = child match {
+      // rows already on the driver: a stable sort keeps ties in input order
+      case local: LocalTableScanExec => local.executeCollect().sorted(ord)
+      case _ =>
+        val runs = localSort.execute()
+          .mapPartitionsInternal(it => Iterator(SortedCollectExec.encode(it))).collect()
+        val nFields = child.output.length
+        SortedCollectExec.merge(runs.map(r => (r._1, SortedCollectExec.decode(r._2, nFields))), ord)
+    }
     if (projects) {
       val proj = UnsafeProjection.create(projectList, child.output)
       var i = 0
@@ -167,6 +204,8 @@ object SortedCollectExec {
   * AQE's re-planning after each stage meets the same shape again. */
 object SortedCollect extends Rule[SparkPlan] {
 
+  private val Planned = TreeNodeTag[Unit]("graft.sortedCollect")
+
   override def apply(plan: SparkPlan): SparkPlan = plan match {
     case p @ ProjectExec(list, s: SortExec) if list.forall(_.deterministic) =>
       replace(s, list).map(linked(_, p)).getOrElse(plan)
@@ -178,10 +217,23 @@ object SortedCollect extends Rule[SparkPlan] {
     s match {
       case SortExec(order, true,
           ShuffleExchangeExec(RangePartitioning(keys, n), child, ENSURE_REQUIREMENTS, _), _)
-          if keys == order && order.forall(_.deterministic) =>
+          if keys == order && order.forall(_.deterministic) && firstOrPlanned(s, child) =>
         Some(SortedCollectExec(order, list, n, child))
       case _ => None
     }
+
+  /** At AQE's first planning (no query stage yet) the rule marks the
+    * sort's logical node, and re-planning after a stage matches only a
+    * marked sort. A root sort that first appears on re-planning — AQE
+    * dropping a `Limit` its stage statistics show to be redundant — keeps
+    * the plan AQE already runs: the node hides its exchange from AQE's
+    * cost check, so AQE would adopt it, and a write would then pay the
+    * range exchange that the kept `TakeOrderedAndProject` does not. */
+  private def firstOrPlanned(s: SortExec, child: SparkPlan): Boolean = {
+    val first = child.find(_.isInstanceOf[QueryStageExec]).isEmpty
+    if (first) s.logicalLink.foreach(_.setTagValue(Planned, ()))
+    first || s.logicalLink.exists(_.getTagValue(Planned).isDefined)
+  }
 
   private def linked(node: SparkPlan, from: SparkPlan): SparkPlan = {
     from.logicalLink.foreach(node.setLogicalLink)

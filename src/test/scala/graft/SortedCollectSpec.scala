@@ -9,7 +9,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SortedCollectExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -76,10 +75,10 @@ class SortedCollectSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def hasNode(df: DataFrame): Boolean =
     find(df.queryExecution.executedPlan)(_.isInstanceOf[SortedCollectExec]).isDefined
 
-  private def withConf[A](k: String, v: String)(body: => A): A = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** Keys with nulls, ties, NaN, -0.0 and 0.0, over `parts` partitions. */
@@ -163,8 +162,8 @@ class SortedCollectSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       parquetFrame.filter(col("k") > 3).collect().map(_.getLong(0)).sorted.toSeq)
   }
 
-  test("a noop write keeps the range exchange and a globally ordered output") {
-    val df = parquetFrame.filter(col("k") > 3).select("id", "k", "d").orderBy(col("id").desc)
+  /** A noop write of `df`: the plan it ran and the jobs it submitted. */
+  private def noopWrite(df: DataFrame): (SparkPlan, Int) = {
     val written = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -173,26 +172,84 @@ class SortedCollectSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
                              e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try JobProbe.jobs(spark.sparkContext)(df.write.format("noop").mode("overwrite").save())
+    val jobs = try JobProbe.jobs(spark.sparkContext)(
+      df.write.format("noop").mode("overwrite").save())._2
     finally spark.listenerManager.unregister(listener)
-    val node = Option(written.get).flatMap(collectFirst(_) { case n: SortedCollectExec => n })
-    assert(node.isDefined, s"no SortedCollect under the write:\n${written.get}")
-    assert(collectFirst(node.get.rangeSorted) {
-      case e: ShuffleExchangeExec => e.outputPartitioning
-    }.exists(_.isInstanceOf[RangePartitioning]),
-      s"the write path must plan a rangepartitioning exchange:\n${node.get.rangeSorted}")
-    // execute() — what a write runs — yields range partitions in order
-    val parts = df.queryExecution.toRdd
-      .mapPartitions(it => Iterator(it.map(_.getLong(0)).toArray)).collect()
+    (written.get, jobs)
+  }
+
+  test("a noop write keeps the range exchange and a globally ordered output") {
+    val df = parquetFrame.filter(col("k") > 3).select("id", "k", "d").orderBy(col("id").desc)
+    val (plan, _) = noopWrite(df)
+    val node = Option(plan).flatMap(collectFirst(_) { case n: SortedCollectExec => n })
+    assert(node.isDefined, s"no SortedCollect under the write:\n$plan")
+    assert(node.get.rangeExchange.outputPartitioning.isInstanceOf[RangePartitioning],
+      s"the write path must plan a rangepartitioning exchange:\n${node.get.rangeExchange}")
+    // execute() — what a write runs — yields range partitions in order;
+    // a small advisory size keeps several of them after coalescing
+    val parts = withConf(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      df.queryExecution.toRdd
+        .mapPartitions(it => Iterator(it.map(_.getLong(0)).toArray)).collect()
+    }
     assert(parts.count(_.nonEmpty) > 1, "the range exchange must spread rows")
     assert(parts.flatten.toSeq === parts.flatten.sorted.reverse.toSeq)
+  }
+
+  test("a root sort that appears only when AQE drops a redundant limit keeps AQE's plan") {
+    // 13 keys from 2 partitions: once the partial aggregate's stage has
+    // run, its 26 rows prove the limit redundant and AQE re-plans a bare
+    // root sort; the write keeps TakeOrderedAndProject, with no range exchange
+    def df = spark.range(0, 2000, 1, 2).groupBy((col("id") % 13).as("k")).count()
+      .orderBy(col("count").desc, col("k")).limit(50)
+    val (plan, jobs) = noopWrite(df)
+    assert(find(plan)(_.isInstanceOf[SortedCollectExec]).isEmpty, s"re-planned into\n$plan")
+    assert(jobs <= 2, s"the write submitted $jobs jobs")
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      (0L until 13L).map(k => (k, if (k < 2000 % 13) 2000L / 13 + 1 else 2000L / 13))
+        .sortBy { case (k, n) => (-n, k) })
+  }
+
+  test("the non-collect path coalesces the range exchange as AQE does") {
+    withConf("spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "64") {
+      def sorted = parquetFrame.filter(col("k") > 3).orderBy(col("d"), col("id"))
+      // a non-deterministic projection keeps the rule off: AQE's own plan
+      val reference = sorted.withColumn("r", rand(1)).queryExecution.toRdd.getNumPartitions
+      assert(reference < 64, "AQE must coalesce the 64 initial partitions")
+      val df = sorted
+      assert(hasNode(df))
+      assert(df.queryExecution.toRdd.getNumPartitions === reference, "execute()")
+      // a cache build plans in its own session: compare it with AQE's
+      def cachedParts(df: DataFrame): Int = {
+        val cached = df.cache()
+        try { cached.count(); cached.queryExecution.toRdd.getNumPartitions }
+        finally cached.unpersist(blocking = true)
+      }
+      assert(cachedParts(sorted) === cachedParts(sorted.withColumn("r", rand(1))),
+        "cache build")
+    }
+  }
+
+  test("a local relation sorts on the driver with no job") {
+    val rows = frame(500, 3).collect().toSeq
+    val local = spark.createDataFrame(rows.asJava, frame(1, 1).schema)
+    orders.foreach { keys =>
+      val clue = s"local orderBy ${keys.mkString(", ")}"
+      val df = local.orderBy(keys.map(_.column): _*)
+      val (got, jobs) = JobProbe.jobs(spark.sparkContext)(df.collect())
+      assert(hasNode(df), s"$clue: no SortedCollect in\n${df.queryExecution.executedPlan}")
+      assert(jobs === 0, s"$clue: collect submitted $jobs jobs")
+      assertSameOrder(got.toSeq, rows.sortWith(cmp(keys)(_, _) < 0), keys, clue)
+    }
   }
 
   test("non-AQE plans and a user repartitionByRange keep their sort") {
     val in = frame(2000, 7)
     val keys = Seq(Key("d", asc = true, nullsFirst = true), Key("id", asc = true, nullsFirst = true))
     val expected = in.collect().toSeq.sortWith(cmp(keys)(_, _) < 0)
-    withConf("spark.sql.adaptive.enabled", "false") {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = in.orderBy(keys.map(_.column): _*)
       assert(!hasNode(df))
       assert(df.queryExecution.executedPlan.toString.contains("rangepartitioning"))
