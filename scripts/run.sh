@@ -1,5 +1,6 @@
 #!/bin/bash
-# Run a graft main class against the compiled classes without sbt startup.
+# Run a graft main class against the compiled classes (plus src/main/resources,
+# which `sbt compile` does not copy) without sbt startup.
 # Usage: scripts/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 set -e
 cd "$(dirname "$0")/.."
@@ -13,4 +14,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" "$@"

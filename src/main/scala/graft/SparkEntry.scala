@@ -2449,7 +2449,7 @@ object SparkEntry {
           when(col("doc_id") % 14 === 3, lit(null).cast("string"))
             .otherwise(upper(col("text"))).as("enriched"),
           lit(1).as("quality"))
-      tl.mergeIntoConditional(s, p, "doc_id",
+      tl.mergeIntoConditional(s, p, Seq("doc_id"),
         updates.unionByName(inserts), nBuckets = 16, name = "mc",
         matched = Seq(
           tl.MatchedDelete(Some("s.quality < 0")),

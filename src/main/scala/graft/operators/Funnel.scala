@@ -95,9 +95,10 @@ object Funnel {
   /** The z-score half of [[rateAnomalies]] over an ALREADY-hourly
     * (event_type, hour, n) frame — shared by the batch operator and
     * the streaming alerting loop, where the hourly counts come from a
-    * watermarked window aggregate materialized into a
-    * [[graft.streaming.KeyedTable]] (update-mode counts are monotone
-    * per window, so last-writer-wins by n keeps the latest). */
+    * watermarked window aggregate materialized by
+    * [[graft.streaming.MergeIngest.latestSink]] (update-mode counts
+    * are monotone per window, so last-writer-wins by n keeps the
+    * latest). */
   def anomaliesFromHourly(hourly: DataFrame,
                           lookback: Int = 24, zThresh: Double = 3.0): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

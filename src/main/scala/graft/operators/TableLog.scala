@@ -1819,12 +1819,17 @@ object TableLog {
     * sidecar set, and refuses concurrent adds into its buckets —
     * disjoint-bucket merges commit concurrently. `insertSet` maps
     * table columns to insert-value exprs (default `s.<col>`); update
-    * and insert values are cast to the table column's type. `source`
-    * must carry `idCol` plus every column the defaulted inserts need;
-    * ids must be unique in `source` (two source rows matching one
-    * target row would apply an arbitrary one — the same restriction
-    * Delta enforces). Returns the new version. */
-  def mergeIntoConditional(spark: SparkSession, root: String, idCol: String,
+    * and insert values are cast to the table column's type.
+    *
+    * `keys` is the merge key, matched on every column; its HEAD picks
+    * the bucket (DynamoDB's partition-key/sort-key split), so every
+    * row of one full key lands in one bucket and a one-key merge keeps
+    * the one-column layout. `source` must carry every key plus every
+    * column the defaulted inserts need; full keys must be unique in
+    * `source` (two source rows matching one target row would apply an
+    * arbitrary one — the same restriction Delta enforces). Returns the
+    * new version. */
+  def mergeIntoConditional(spark: SparkSession, root: String, keys: Seq[String],
                            source: DataFrame, nBuckets: Int, name: String,
                            matched: Seq[MergeClause],
                            insertWhen: Option[String],
@@ -1836,26 +1841,30 @@ object TableLog {
     // an inserted id's bucket is rewritten so its rows land beside
     // that bucket's files (≤ nBuckets collect, layout metadata)
     // ONE aggregation serves both the touched-bucket set and the
-    // unique-source-id contract (Delta raises
+    // unique-source-key contract (Delta raises
     // MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW): with duplicates, the
     // full-outer join below would silently apply BOTH source rows to
     // one target — e.g. delete it through one and re-emit it through
-    // the other. Reserved aliases, so an idCol named "count"/"b"
-    // cannot collide.
-    val perBucket = source.groupBy(col(idCol))
-      .agg(count(lit(1)).as("__n"))
-      .groupBy(idBucket(idCol, nBuckets).as("__b"))
+    // the other. Reserved aliases, so a key named "count"/"b" cannot
+    // collide.
+    require(keys.nonEmpty, "TableLog.mergeIntoConditional: no merge key")
+    val byKey = source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+    val perBucket = byKey
+      .groupBy(idBucket(keys.head, nBuckets).as("__b"))
       .agg(max(col("__n")).as("__mx"))
       .collect()
+    require(!perBucket.exists(_.isNullAt(0)),
+      s"TableLog.mergeIntoConditional: a source row has a NULL " +
+        s"'${keys.head}' — the bucket key must be non-null")
     val touched = perBucket.map(_.getLong(0).toInt).toSet
     if (perBucket.exists(_.getLong(1) > 1)) {
-      // failure path only: name one offending id for the error
-      val bad = source.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).limit(1).collect()
+      // failure path only: name one offending key for the error
+      val bad = byKey.filter(col("__n") > 1).limit(1).collect()
       throw new IllegalArgumentException(
-        s"TableLog.mergeIntoConditional: ${bad.headOption.map(_.get(0))
-          .getOrElse("")} appears more than once in the source — merge " +
-          "clauses need one source row per id; pre-aggregate the source")
+        s"TableLog.mergeIntoConditional: ${bad.headOption.map(r =>
+          keys.indices.map(r.get).mkString("(", ",", ")")).getOrElse("")} " +
+          "appears more than once in the source — merge clauses need " +
+          "one source row per key; pre-aggregate the source")
     }
     val (oldTouched, _) = active.partition(p => bucketOf(p).exists(touched))
     // same pinned, bucket-restricted relation as mergeInto's read-back
@@ -1869,8 +1878,10 @@ object TableLog {
       insertSet.keys).foreach(c => require(cols.contains(c),
         s"TableLog.mergeIntoConditional: SET column '$c' is not a table " +
           s"column (table has ${cols.mkString(",")})"))
-    val joined = base.as("t")
-      .join(source.as("s"), col(s"t.$idCol") === col(s"s.$idCol"), "full_outer")
+    // null-safe, as the uniqueness group-by above is: a key with a
+    // null part, e.g. (hour, NULL type), still names one row
+    val joined = base.as("t").join(source.as("s"),
+      keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _), "full_outer")
     def held(c: Option[String]) =
       c.map(x => coalesce(expr(x).cast("boolean"), lit(false)))
         .getOrElse(lit(true))
@@ -1884,9 +1895,11 @@ object TableLog {
         }
         when(held(cl.cond), lit(act)).otherwise(els)
       }
+    // the unmatched side of a full-outer row is all null
+    def absent(side: String) = keys.map(k => col(s"$side.$k").isNull).reduce(_ && _)
     val action =
-      when(col(s"s.$idCol").isNull, lit("keep"))          // target-only
-        .when(col(s"t.$idCol").isNull,                     // source-only
+      when(absent("s"), lit("keep"))                        // target-only
+        .when(absent("t"),                                  // source-only
           when(held(insertWhen), lit("ins")).otherwise(lit("drop")))
         .otherwise(matchedChain)                           // matched
     val outCols = cols.map { c =>
@@ -1904,7 +1917,7 @@ object TableLog {
     val merged = joined.withColumn("__action", action)
       .filter(col("__action") =!= "del" && col("__action") =!= "drop")
       .select(outCols: _*)
-    val adds = stageBucketed(merged, root, name, idCol, nBuckets)
+    val adds = stageBucketed(merged, root, name, keys.head, nBuckets)
     commitMerge(spark, root, adds, oldTouched, touched, readV, tag)
   }
 

@@ -31,19 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each token is hashed once (h1 of bigram i is reused as input state
   * for nothing — token hashes and window hashes are independent XXH64
   * runs, exactly as the two ShingleHashes calls produced them). */
-case class BigramHashes(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+case class BigramHashes(child: Expression) extends UnaryExpression with TokenArrayInput {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = BigramHashes.outType
-
-  // `pairs` reads elements without a null check: a token array that may
-  // hold nulls is an analysis error, not an NPE in a task (Tokens and
-  // split both declare non-null elements)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_, true) => TypeCheckResult.TypeCheckFailure(
-      "bigram hashes need a token array with non-null elements")
-    case _ => super.checkInputDataTypes()
-  }
 
   private val sep = UTF8String.fromString(" ")
 
@@ -77,6 +67,20 @@ case class BigramHashes(child: Expression) extends UnaryExpression with ExpectsI
 
   override protected def withNewChildInternal(newChild: Expression): BigramHashes =
     copy(child = newChild)
+}
+
+/** Input contract of the native token-array loops (bigram hashes,
+  * MinHash, SimHash): `array<string>` with non-null elements. The
+  * loops read elements without a null check, so an array that may
+  * hold nulls is an analysis error, not an NPE in a task (Tokens,
+  * split and filter over either all declare non-null elements). */
+trait TokenArrayInput extends ExpectsInputTypes { self: UnaryExpression =>
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_, true) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs a token array with non-null elements")
+    case _ => super.checkInputDataTypes()
+  }
 }
 
 object BigramHashes {

@@ -490,7 +490,7 @@ object GraftSql {
                   case Some(None) => None    // unconditional insert
                   case Some(Some(c)) => Some(c)
                 }
-              tl.mergeIntoConditional(s, root, idCol, source,
+              tl.mergeIntoConditional(s, root, Seq(idCol), source,
                 buckets.toInt, "sqlmerge", matched, insertWhen)
             }
           }))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * viable on a 100 TB corpus: signatures stream out of the scan stage.
   */
 case class MinHashTokens(child: Expression, k: Int, numPerms: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with TokenArrayInput {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -69,7 +69,7 @@ case class MinHashTokens(child: Expression, k: Int, numPerms: Int)
 object MinHashTokens {
   import org.apache.spark.sql.graftbridge.Bridge
 
-  /** Column builder: tokens must be array<string>. */
+  /** Column builder: tokens must be array<string> with non-null elements. */
   def minhashTokens(tokens: Column, k: Int, numPerms: Int): Column =
     Bridge.toColumn(MinHashTokens(Bridge.toExpression(tokens), k, numPerms))
 }

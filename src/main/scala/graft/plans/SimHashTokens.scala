@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * fingerprint bit b = sign(counter b). Replaces the 64-interpreted-
   * aggregates formulation (one pass, no per-bit lambda dispatch). */
 case class SimHashTokens(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with TokenArrayInput {
 
   override def dataType: DataType = LongType
 

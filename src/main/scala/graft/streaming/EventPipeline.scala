@@ -147,13 +147,13 @@ object EventPipeline {
 
   /** Streaming half of the rate-anomaly alerting loop: watermarked
     * per-(type, hour) counts in UPDATE mode. Pair with
-    * `KeyedTable.sink(root, Seq("event_type", "hour"), "n")` in
+    * `MergeIngest.latestSink(root, Seq("hour", "event_type"), "n")` in
     * `foreachBatch` — a window's count only grows as late rows
-    * arrive, so last-writer-wins by n materializes the latest count —
-    * then alert with
+    * arrive, so last-writer-wins by n materializes the latest count,
+    * and a batch rewrites only the hours it touched — then alert with
     * [[graft.operators.Funnel.anomaliesFromHourly]] over
-    * `KeyedTable.read`. State per open window is one count; history
-    * lives in the keyed table, not the stream. */
+    * `TableLog.snapshot`. State per open window is one count; history
+    * lives in the table, not the stream. */
   def hourlyTypeCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
@@ -170,7 +170,7 @@ object EventPipeline {
     * watermark across both stateful operators (dedup state and open
     * windows evict on the same horizon). Append-mode: each closed
     * (hour, type) emits exactly once — pair with
-    * `KeyedTable.sink(root, Seq("event_type", "hour"), "n")`. */
+    * `MergeIngest.latestSink(root, Seq("hour", "event_type"), "n")`. */
   def dedupedHourlyTypeCounts(events: DataFrame,
                               watermark: String = "10 minutes"): DataFrame =
     events

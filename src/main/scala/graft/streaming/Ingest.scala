@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.TableLog
 
 /** Shared exactly-once plumbing for the [[graft.operators.TableLog]]-
-  * backed streaming sinks ([[TableIngest]], [[MergeIngest]],
-  * [[CheckedIngest]], [[EvolvingIngest]]): the committed-tag cache
+  * backed streaming sinks ([[TableIngest]], [[MergeIngest]]'s CDC
+  * and last-writer-wins sinks, [[CheckedIngest]], [[EvolvingIngest]]):
+  * the committed-tag cache
   * that turns at-least-once foreachBatch replays into no-ops, and the
   * conflict-retry loop for commits that carry expect-pins. One owner
   * for the discipline — a fix to the tag scheme or the retry bound

@@ -64,12 +64,12 @@ object StreamDemo {
     locally {
       val mem = MemoryStream[Event]
       val q = mem.toDF().writeStream
-        .foreachBatch(KeyedTable.sink(upsertRoot, Seq("user_id", "event_type"), "ts"))
+        .foreachBatch(MergeIngest.latestSink(upsertRoot, Seq("user_id", "event_type"), "ts"))
         .start()
       events.grouped(batchSize).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
       q.stop()
     }
-    val up = KeyedTable.read(spark, upsertRoot).map(_.count()).getOrElse(0L)
+    val up = graft.operators.TableLog.snapshot(spark, upsertRoot).count()
     println(s"""{"events":${events.size},"hourly_windows":$hm,"deduped":$dd,"session_windows":$sw,"stateful_sessions":$ss,"enriched":$en,"rate_source_groups":$rateRows,"upserted_keys":$up}""")
     spark.stop()
   }

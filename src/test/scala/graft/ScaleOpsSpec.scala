@@ -2156,7 +2156,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val dupSrc = Seq((7L, "a", "A", 1), (7L, "b", null, -1))
       .toDF("doc_id", "text", "enriched", "quality")
     val e = intercept[IllegalArgumentException] {
-      TableLog.mergeIntoConditional(spark0, root, "doc_id", dupSrc, 8, "m",
+      TableLog.mergeIntoConditional(spark0, root, Seq("doc_id"), dupSrc, 8, "m",
         matched = Seq(TableLog.MatchedUpdate(None, Map("text" -> "s.text"))),
         insertWhen = None)
     }
@@ -2431,7 +2431,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         if (i % 4 == 1) null else s"ENR$i",
         if (i % 4 == 2) -1 else 1)
     }.toDF("doc_id", "text", "enriched", "quality")
-    val v = TableLog.mergeIntoConditional(spark0, root, "doc_id", src, nB, "m",
+    val v = TableLog.mergeIntoConditional(spark0, root, Seq("doc_id"), src, nB, "m",
       matched = Seq(
         TableLog.MatchedDelete(Some("s.quality < 0")),
         TableLog.MatchedUpdate(Some("s.enriched IS NOT NULL"),
@@ -2466,6 +2466,55 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(untouchedBefore.nonEmpty)
     untouchedBefore.foreach(p => assert(after(p),
       s"untouched bucket file $p was rewritten"))
+  }
+
+  test("mergeIntoConditional on a composite key: rows sharing the bucket key stay distinct, " +
+       "a repeated full key is refused, untouched buckets keep their files") {
+    import graft.operators.TableLog
+    val spark0 = spark
+    import spark0.implicits._
+    val root = Files.createTempDirectory("graft_tablelog_ck").toString + "/t"
+    val nB = 8
+    val keys = Seq("user", "kind")
+    // 40 users x 2 kinds: each user's two rows share the bucket key
+    val base = (0L until 40L).flatMap(u => Seq((u, "a", 0L), (u, "b", 0L)))
+      .toDF("user", "kind", "v")
+    TableLog.commit(spark0, root,
+      TableLog.stageBucketed(base, root, "base", "user", nB), Nil)
+    val before = TableLog.activeFiles(spark0, root)
+    def merge(src: org.apache.spark.sql.DataFrame) =
+      TableLog.mergeIntoConditional(spark0, root, keys, src, nB, "m",
+        matched = Seq(TableLog.MatchedUpdate(None, Map("v" -> "s.v"))),
+        insertWhen = None)
+    // update (3, a) only, insert (3, c): (3, b) must keep its row; a
+    // null second part is one key like any other, as in the group-by
+    merge(Seq((3L, "a", 7L), (3L, "c", 9L), (3L, null, 1L)).toDF("user", "kind", "v"))
+    merge(Seq((3L, null: String, 2L)).toDF("user", "kind", "v"))
+    val got = TableLog.snapshot(spark0, root).collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(TableLog.snapshot(spark0, root).count() === 82)
+    assert(got((3L, "a")) === 7L && got((3L, "b")) === 0L && got((3L, "c")) === 9L)
+    assert(got((3L, null)) === 2L && got((4L, "a")) === 0L)
+    // every row of user 3 lives in the one bucket its head key hashes to
+    val b3 = TableLog.bucketOfKey("3", nB)
+    val after = TableLog.activeFiles(spark0, root)
+    val rewritten = after.toSet -- before
+    assert(rewritten.nonEmpty && rewritten.forall(_.contains(s"_gb=$b3/")),
+      s"only user 3's bucket may be rewritten: $rewritten")
+    before.filterNot(_.contains(s"_gb=$b3/")).foreach(p =>
+      assert(after.contains(p), s"untouched bucket file $p was rewritten"))
+    // the same user under two kinds is one key each; a repeated FULL
+    // key is two source rows for one target row
+    val e = intercept[IllegalArgumentException] {
+      merge(Seq((5L, "a", 1L), (5L, "a", 2L)).toDF("user", "kind", "v"))
+    }
+    assert(e.getMessage.contains("(5,a)") && e.getMessage.contains("more than once"),
+      e.getMessage)
+    // a NULL bucket key has no bucket to land in
+    val e2 = intercept[IllegalArgumentException] {
+      merge(Seq((null: java.lang.Long, "a", 1L)).toDF("user", "kind", "v"))
+    }
+    assert(e2.getMessage.contains("NULL 'user'"), e2.getMessage)
   }
 
   test("TableLog: time travel into an expired inter-checkpoint gap errors; the checkpoint's own version still serves") {

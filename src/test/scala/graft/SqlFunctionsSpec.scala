@@ -138,6 +138,15 @@ class SqlFunctionsSpec extends AnyFunSuite {
       val e = intercept[AnalysisException](df.select(bad).collect())
       assert(e.getMessage.contains(expected), e.getMessage)
     }
+    // the MinHash and SimHash loops share the contract, from SQL too
+    for ((bad, expected) <- Seq(
+        "minhash_tokens(array('a', CAST(NULL AS STRING), 'b'), 2, 3)" -> "non-null elements",
+        "simhash_tokens(array('a', CAST(NULL AS STRING)))" -> "non-null elements",
+        "minhash_tokens(array(1, 2, 3), 2, 3)" -> "DATATYPE_MISMATCH",
+        "simhash_tokens(array(1, 2))" -> "DATATYPE_MISMATCH")) {
+      val e = intercept[AnalysisException](spark.sql(s"SELECT $bad").collect())
+      assert(e.getMessage.contains(expected), e.getMessage)
+    }
     // split declares non-null elements, so the SQL-shaped input passes
     assert(df.select(BigramHashes.bigramHashes(split(lit("a b c"), " ")))
       .head().getSeq[Any](0).length === 2)

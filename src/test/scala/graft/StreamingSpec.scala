@@ -321,7 +321,8 @@ class StreamingSpec extends AnyFunSuite {
   test("anomaly alerting loop: streamed hourly counts + keyed table + batch z-score") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.KeyedTable
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
     val table = java.nio.file.Files.createTempDirectory("graft_anom").toString + "/t"
     // 10 steady hours (3 events, slight wobble) then a 30-event burst
     val base = ts("2024-01-01 00:00:00").getTime
@@ -332,14 +333,14 @@ class StreamingSpec extends AnyFunSuite {
     val burst = hourEvents(10, 30)
     val mem = MemoryStream[Event]
     val q = EventPipeline.hourlyTypeCounts(mem.toDF()).writeStream
-      .foreachBatch(KeyedTable.sink(table, Seq("event_type", "hour"), "n"))
+      .foreachBatch(MergeIngest.latestSink(table, Seq("hour", "event_type"), "n"))
       .outputMode("update").start()
     // two batches splitting an hour: the keyed table must end with the
     // FULL count for the split hour (update-mode rows are monotone)
     mem.addData(steady.take(2): _*); q.processAllAvailable()
     mem.addData(steady.drop(2) ++ burst: _*); q.processAllAvailable()
     q.stop()
-    val hourly = KeyedTable.read(spark, table).get
+    val hourly = TableLog.snapshot(spark, table)
     // streamed counts equal the batch aggregation of the same events
     val batchHourly = (steady ++ burst).toDF()
       .groupBy(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hour"))
@@ -358,7 +359,8 @@ class StreamingSpec extends AnyFunSuite {
   test("anomaly alerting freshness: late rows update an emitted hour and correct the z") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.KeyedTable
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
     val table = java.nio.file.Files.createTempDirectory("graft_late").toString + "/t"
     val base = ts("2024-01-01 00:00:00").getTime
     def hourEvents(h: Int, k: Int, off: Int = 0) = (0 until k).map(i =>
@@ -366,10 +368,10 @@ class StreamingSpec extends AnyFunSuite {
         7L, "click", 1.0, "{}"))
     val mem = MemoryStream[Event]
     val q = EventPipeline.hourlyTypeCounts(mem.toDF(), watermark = "2 hours").writeStream
-      .foreachBatch(KeyedTable.sink(table, Seq("event_type", "hour"), "n"))
+      .foreachBatch(MergeIngest.latestSink(table, Seq("hour", "event_type"), "n"))
       .outputMode("update").start()
     def zOfBurstHour(): Option[Double] = {
-      val hourly = KeyedTable.read(spark, table).get
+      val hourly = TableLog.snapshot(spark, table)
       graft.operators.Funnel.anomaliesFromHourly(hourly, lookback = 8, zThresh = 2.0)
         .collect().find(_.getLong(1) === base / 3600000L + 10)
         .map(_.getAs[Double]("z"))
@@ -381,7 +383,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(steady ++ hourEvents(10, 4): _*); q.processAllAvailable()
     val zBefore = zOfBurstHour()
     assert(zBefore.isEmpty, s"partial hour should be sub-threshold, got z=$zBefore")
-    val hourly1 = KeyedTable.read(spark, table).get
+    val hourly1 = TableLog.snapshot(spark, table)
       .filter(col("hour") === base / 3600000L + 10).collect()
     assert(hourly1.head.getAs[Long]("n") === 4, "partial hour must be materialized")
     // batch 2: 26 LATE events for hour 10 arrive (inside the 2h
@@ -389,7 +391,7 @@ class StreamingSpec extends AnyFunSuite {
     // and last-writer-wins by n replaces the stale row
     mem.addData(hourEvents(10, 26, off = 4): _*); q.processAllAvailable()
     q.stop()
-    val hourly2 = KeyedTable.read(spark, table).get
+    val hourly2 = TableLog.snapshot(spark, table)
       .filter(col("hour") === base / 3600000L + 10).collect()
     assert(hourly2.head.getAs[Long]("n") === 30, "late rows must correct the emitted hour")
     val zAfter = zOfBurstHour()
@@ -403,14 +405,15 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hour"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val got = KeyedTable.read(spark, table).get.collect()
+    val got = TableLog.snapshot(spark, table).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("hour")) -> r.getAs[Long]("n")).toMap
     assert(got === want)
   }
 
   test("keyed-upsert sink: last-writer-wins across micro-batches and checkpoint restart") {
     import spark.implicits._
-    import graft.streaming.KeyedTable
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
     val base = java.nio.file.Files.createTempDirectory("graft_upsert").toString
     val inDir = s"$base/in"; val table = s"$base/table"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
@@ -421,12 +424,12 @@ class StreamingSpec extends AnyFunSuite {
 
     def startQuery() = spark.readStream.schema(rowSchema).parquet(inDir)
       .writeStream
-      .foreachBatch(KeyedTable.sink(table, Seq("k"), "version"))
+      .foreachBatch(MergeIngest.latestSink(table, Seq("k"), "version"))
       .option("checkpointLocation", ckpt)
       .start()
 
     def tableState(): Map[String, (Long, Double)] =
-      KeyedTable.read(spark, table).get.collect()
+      TableLog.snapshot(spark, table).collect()
         .map(r => r.getAs[String]("k") -> (r.getAs[Long]("version"), r.getAs[Double]("value")))
         .toMap
 
@@ -444,49 +447,90 @@ class StreamingSpec extends AnyFunSuite {
     assert(tableState() === Map(
       "A" -> (2L, 11.0), "B" -> (3L, 21.0), "C" -> (1L, 30.0)))
 
-    // replay of an ALREADY-COMMITTED batch (crash between snapshot
-    // commit and stream checkpoint) must be a no-op — in particular it
-    // must not read snap_N while overwriting snap_N
+    // replay of an ALREADY-COMMITTED batch (crash between the log
+    // commit and the stream checkpoint) through a fresh sink instance
+    // must be a no-op: its tag is in the log
     val replayed = Seq(("B", 99L, 999.0)).toDF("k", "version", "value")
-    KeyedTable.sink(table, Seq("k"), "version")(replayed, 1L) // batchId 1 already committed
+    val vBefore = TableLog.versions(spark, table)
+    MergeIngest.latestSink(table, Seq("k"), "version")(replayed, 1L) // batchId 1 already committed
+    assert(TableLog.versions(spark, table) === vBefore)
     assert(tableState() === Map(
       "A" -> (2L, 11.0), "B" -> (3L, 21.0), "C" -> (1L, 30.0)))
   }
 
-  test("keyed table prunes old snapshots but keeps the committed state") {
+  test("keyed table: vacuum keeps only the active files and the latest row") {
+    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    import graft.streaming.KeyedTable
-    val root = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/t"
-    val sink = KeyedTable.sink(root, Seq("k"), "version")
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
+    val root = java.nio.file.Files.createTempDirectory("graft_retain").toString + "/t"
+    val sink = MergeIngest.latestSink(root, Seq("k"), "version")
     (0L until 5L).foreach { b =>
       sink(Seq(("X", b, b * 1.0)).toDF("k", "version", "value"), b)
     }
-    // storage stays bounded at `keep`=2 snapshots...
-    val dirs = new java.io.File(root).listFiles().filter(_.isDirectory)
-    assert(dirs.length <= 2, dirs.map(_.getName).mkString(","))
-    // ...and the surviving state is the latest version
-    val row = KeyedTable.read(spark, root).get.collect()
+    // one version per batch, each merge replacing the key's one file
+    assert(TableLog.versions(spark, root) === (0L until 5L))
+    def dataFiles(): Set[String] = {
+      val top = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(top.resolve("data"))
+      try walk.iterator().asScala.toSeq
+        .map(top.relativize(_).toString)
+        .filter(p => p.endsWith(".parquet") && !p.split('/').last.startsWith("."))
+        .toSet
+      finally walk.close()
+    }
+    assert(dataFiles().size === 5)
+    // retaining only the latest version reclaims every replaced file
+    TableLog.vacuum(spark, root, retainFrom = 4L)
+    assert(dataFiles() === TableLog.activeFiles(spark, root).toSet)
+    assert(dataFiles().size === 1)
+    val row = TableLog.snapshot(spark, root).collect()
     assert(row.map(r => (r.getAs[String]("k"), r.getAs[Long]("version"))).toSeq === Seq(("X", 4L)))
+  }
+
+  test("keyed table: an empty batch commits no version and keeps no stage dir") {
+    import spark.implicits._
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
+    val root = java.nio.file.Files.createTempDirectory("graft_lww_empty").toString + "/t"
+    val sink = MergeIngest.latestSink(root, Seq("k"), "version")
+    val empty = Seq.empty[(String, Long, Double)].toDF("k", "version", "value")
+    // before the bootstrap: nothing at all lands
+    sink(empty, 0L)
+    assert(TableLog.versions(spark, root).isEmpty)
+    assert(!new java.io.File(root).exists(), "an empty first batch must not create the table")
+    sink(Seq(("X", 1L, 1.0)).toDF("k", "version", "value"), 1L)
+    val dataDirs = new java.io.File(root, "data").list().toSet
+    // after it: a watermark-only trigger neither commits nor stages
+    sink(empty, 2L)
+    assert(TableLog.versions(spark, root) === Seq(0L))
+    assert(new java.io.File(root, "data").list().toSet === dataDirs)
+    // the batch id stays unclaimed: data arriving under it commits
+    sink(Seq(("X", 2L, 2.0)).toDF("k", "version", "value"), 2L)
+    assert(TableLog.versions(spark, root) === Seq(0L, 1L))
+    assert(TableLog.snapshot(spark, root).collect()
+      .map(r => r.getAs[Long]("version")).toSeq === Seq(2L))
   }
 
   test("windowed metrics materialize into the keyed table (README pattern)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.KeyedTable
+    import graft.operators.TableLog
+    import graft.streaming.MergeIngest
     val root = java.nio.file.Files.createTempDirectory("graft_metrics").toString + "/t"
     val mem = MemoryStream[Event]
     // update mode: every batch re-emits a window's CURRENT totals, so
     // n_events is monotone per window — a valid upsert version
     val q = EventPipeline.hourlyMetrics(mem.toDF())
       .writeStream.outputMode("update")
-      .foreachBatch(KeyedTable.sink(root, Seq("hour_start"), "n_events"))
+      .foreachBatch(MergeIngest.latestSink(root, Seq("hour_start"), "n_events"))
       .start()
     // in event-time order: out-of-order feeds would cross the 10-min
     // watermark and legitimately drop late rows in update mode
     sample.sortBy(_.ts.getTime).grouped(2)
       .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     q.stop()
-    val table = KeyedTable.read(spark, root).get
+    val table = TableLog.snapshot(spark, root)
       .select(col("hour_start"), col("n_events")).collect()
       .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
     // keyed table state == the batch aggregation over all events
@@ -497,7 +541,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("live socket-JSON seam end-to-end: dedup → hourly counts → keyed table, " +
        "crash/resume with at-least-once redelivery stays exactly-once") {
-    import graft.streaming.{EventStreams, KeyedTable, SocketSpool}
+    import graft.operators.TableLog
+    import graft.streaming.{EventStreams, MergeIngest, SocketSpool}
     // The full consumer-loop shape (consumer.py:57-92: receive JSON
     // records at-least-once, dedup by event id, aggregate, persist)
     // over a LIVE transport: a real TCP server feeds frames to a
@@ -522,17 +567,16 @@ class StreamingSpec extends AnyFunSuite {
         EventStreams.EventSource.FileTail(spoolDir, "json"))
       .transform(EventPipeline.dedupedHourlyTypeCounts(_))
       .writeStream
-      .foreachBatch(KeyedTable.sink(table, Seq("event_type", "hour"), "n"))
+      .foreachBatch(MergeIngest.latestSink(table, Seq("hour", "event_type"), "n"))
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .start()
 
     // "tick" events only run batches / advance the clock — assert on clicks
-    def tableState(): Map[Long, Long] = KeyedTable.read(spark, table) match {
-      case Some(df) => df.filter(col("event_type") === "click").collect()
+    def tableState(): Map[Long, Long] =
+      if (TableLog.versions(spark, table).isEmpty) Map.empty
+      else TableLog.snapshot(spark, table).filter(col("event_type") === "click").collect()
         .map(r => r.getAs[Long]("hour") -> r.getAs[Long]("n")).toMap
-      case None => Map.empty
-    }
 
     /** Send frames over the live socket, then poll processAllAvailable
       * until the keyed table satisfies `want` — transport + relay are
@@ -598,7 +642,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("live socket → spool → streaming JsonlSource (DSv2 micro-batch): " +
        "dedup → hourly counts → keyed table, crash/resume stays exactly-once") {
-    import graft.streaming.{EventStreams, KeyedTable, SocketSpool}
+    import graft.operators.TableLog
+    import graft.streaming.{EventStreams, MergeIngest, SocketSpool}
     // Same consumer-loop shape as the FileTail e2e above, but the
     // replayable leg is graft's OWN DSv2 streaming source — the
     // checkpointable message-bus analog (consumer.py:30-52): offsets
@@ -620,16 +665,15 @@ class StreamingSpec extends AnyFunSuite {
         EventStreams.EventSource.JsonlDir(spoolDir, maxBytesPerTrigger = 256))
       .transform(EventPipeline.dedupedHourlyTypeCounts(_))
       .writeStream
-      .foreachBatch(KeyedTable.sink(table, Seq("event_type", "hour"), "n"))
+      .foreachBatch(MergeIngest.latestSink(table, Seq("hour", "event_type"), "n"))
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .start()
 
-    def tableState(): Map[Long, Long] = KeyedTable.read(spark, table) match {
-      case Some(df) => df.filter(col("event_type") === "click").collect()
+    def tableState(): Map[Long, Long] =
+      if (TableLog.versions(spark, table).isEmpty) Map.empty
+      else TableLog.snapshot(spark, table).filter(col("event_type") === "click").collect()
         .map(r => r.getAs[Long]("hour") -> r.getAs[Long]("n")).toMap
-      case None => Map.empty
-    }
 
     def feedUntil(out: java.io.PrintWriter, q: org.apache.spark.sql.streaming.StreamingQuery,
                   frames: Seq[String], want: Map[Long, Long] => Boolean): Unit = {
