@@ -2070,7 +2070,7 @@ object SparkEntry {
 
   /** ZONE-MAP FILE SKIPPING, CATALYST-VISIBLE ([[graft.operators
     * .TableLog.stageWithZoneMap]] → [[graft.operators
-    * .TableLogRelation.snapshotDf]]) — the stats-based data-skipping
+    * .TableLog.snapshot]]) — the stats-based data-skipping
     * layer of the table format (the Delta/Iceberg per-file min/max
     * story): the corpus lands range-clustered on doc_id with a typed
     * stats sidecar committed in the log entry's `zmap` list, and the
@@ -2092,7 +2092,7 @@ object SparkEntry {
         Tables.documents(s, d), p, "base", "doc_id", parts = 16)
       tl.commit(s, p, files, Nil, zmap = zmaps)
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("doc_id") >= 100L && col("doc_id") <= 299L)
       .orderBy(col("doc_id"))
   }
@@ -2485,7 +2485,7 @@ object SparkEntry {
   }
 
   /** BATCH-OF-KEYS probe through the planner-pruned relation
-    * ([[graft.operators.TableLogRelation.snapshotDf]] + `isin`) — the
+    * ([[graft.operators.TableLog.snapshot]] + `isin`) — the
     * reference's HOTTEST read shape: web_api.py:147-190 loops one
     * DynamoDB Query per preference key and consumer.py batch-gets by
     * id; here the whole key batch is ONE plain
@@ -2507,7 +2507,7 @@ object SparkEntry {
       tl.commit(s, p, files, Nil, zmap = zm)
     }
     val keys = Seq(7L, 42L, 123L, 200L, 249L).map(i => f"k$i%09d")
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("skey").isin(keys: _*))
       .select(col("skey"), col("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars"))
@@ -2522,7 +2522,7 @@ object SparkEntry {
     * ABOVE the widened stored bound 1.2999999523162842, and would
     * WRONGLY PRUNE the file whose max is 1.3f (missing rows, not a
     * missed optimization). This query range-clusters documents on a
-    * float score and probes a float interval through snapshotDf;
+    * float score and probes a float interval through TableLog.snapshot;
     * ScaleOpsSpec additionally pins the exact 1.3f boundary file.
     * Oracle: the plain REAL range filter. */
   private val q151Cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2534,7 +2534,7 @@ object SparkEntry {
       val (files, zm) = tl.stageWithZoneMap(scored, p, "base", "score", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("score") >= lit(1.3f) && col("score") <= lit(20.7f))
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"), col("score"))
@@ -2566,7 +2566,7 @@ object SparkEntry {
       tl.optimizeTable(s, p, "doc_id", "gx", "zopt", parts = 16,
         zorderWith = Some("gy")) // v2: compaction ∘ Z-order ∘ stats
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("gx") >= 16L && col("gx") <= 47L &&
         col("gy") >= 32L && col("gy") <= 95L)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -2598,7 +2598,7 @@ object SparkEntry {
   }
 
   /** OUTSIDE-A-WINDOW disjunction through the planner-pruned relation
-    * ([[graft.operators.TableLogRelation.snapshotDf]] + `OR`): the
+    * ([[graft.operators.TableLog.snapshot]] + `OR`): the
     * quarantine/backfill shape — "everything EXCEPT this id window,
     * plus a tagged slice inside it" — as ONE plain filter whose OR
     * tree prunes files: same-column branches collapse into a single
@@ -2617,7 +2617,7 @@ object SparkEntry {
         Tables.documents(s, d), p, "base", "doc_id", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("doc_id") < 100L || col("doc_id") > 400L ||
         (col("lang") === "de" && col("doc_id").between(200L, 220L)))
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -2647,15 +2647,15 @@ object SparkEntry {
         statsCols = Seq("backfill"))
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("backfill").isNotNull && col("backfill") <= "m000000300")
       .select(col("doc_id"), col("backfill"), col("lang"), col("source"),
         col("n_chars"))
       .orderBy(col("doc_id"))
   }
 
-  /** METADATA-ONLY AGGREGATES ([[graft.plans.MetadataOnlyAgg]] via
-    * [[graft.operators.TableLogRelation.enableMetadataOnlyAggregates]]):
+  /** METADATA-ONLY AGGREGATES ([[graft.plans.MetadataOnlyAgg]], which
+    * every session carries through [[graft.plans.GraftExtensions]]):
     * the high-water-mark/sanity probes every pipeline runs —
     * `count(*)`, `count(col)`, `min`/`max` of ids, strings and a
     * stats column — answered from the log's zone-map sidecars as a
@@ -2679,8 +2679,7 @@ object SparkEntry {
         statsCols = Seq("n_chars", "source", "backfill"))
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.enableMetadataOnlyAggregates(s)
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .agg(count(lit(1)).as("n_rows"),
         count(col("backfill")).as("n_backfilled"),
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"),
@@ -2691,8 +2690,8 @@ object SparkEntry {
         max(col("source")).as("max_source"))
   }
 
-  /** TOP-K FILE PRUNING ([[graft.plans.MetadataTopK]] via
-    * [[graft.operators.TableLogRelation.enableMetadataTopK]]): "the
+  /** TOP-K FILE PRUNING ([[graft.plans.MetadataTopK]], which every
+    * session carries through [[graft.plans.GraftExtensions]]): "the
     * latest 50 events" — every dashboard's and every incremental
     * consumer's first query — as a plain `ORDER BY ts DESC, event_id
     * DESC LIMIT 50` over the planner-pruned relation of a
@@ -2712,8 +2711,7 @@ object SparkEntry {
         Tables.events(s, d), p, "base", "ts", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.enableMetadataTopK(s)
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .orderBy(col("ts").desc, col("event_id").desc)
       .limit(50)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -2726,7 +2724,7 @@ object SparkEntry {
     * writer options, append a second commit, then TIME-TRAVEL back to
     * version 0 with `versionAsOf` and range-probe it. The reader
     * returns the SAME planner-pruned TableLogFileIndex relation as
-    * snapshotDf (one read path, spec-pinned), so skipping and the
+    * TableLog.snapshot (one read path, spec-pinned), so skipping and the
     * metadata rules apply to a user who never imports graft code.
     * Oracle: version 0's content (the %3≠0 subset) under the same
     * range filter. */
@@ -2758,7 +2756,7 @@ object SparkEntry {
     * sidecar bounds (serialized as plain decimal strings, compared
     * NUMERICALLY in BigDecimal — exact at any precision, so one kind
     * covers every (p, s) and a pushed literal of any scale orders
-    * correctly), and a price-band filter through snapshotDf prunes
+    * correctly), and a price-band filter through TableLog.snapshot prunes
     * files. The warehouse's "orders in this price band" read at
     * 100 TB costs O(band), not O(history). ScaleOpsSpec pins
     * point/range/IN pruning and the metadata min/max on a controlled
@@ -2774,7 +2772,7 @@ object SparkEntry {
       val (files, zm) = tl.stageWithZoneMap(li, p, "base", "price", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("price") >= lit("1000.00").cast("decimal(12,2)") &&
         col("price") <= lit("9999.99").cast("decimal(12,2)"))
       // Emit the price as exact integer cents: the DECIMAL stays
@@ -2863,8 +2861,7 @@ object SparkEntry {
         Tables.events(s, d), p, "base", "ts", 16)
       tl.commit(s, p, files, Nil, zmap = zm)
     }
-    graft.operators.TableLogRelation.enableMetadataTopK(s)
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
         col("ts") <= lit("2024-01-22 00:00:00").cast("timestamp"))
       .orderBy(col("ts").desc, col("event_id").desc)
@@ -3057,7 +3054,7 @@ object SparkEntry {
         tl.commit(s, p, f, Nil, zmap = zm)
       }
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_events"),
         count(col("user_id")).as("n_user_rows"),
@@ -3238,7 +3235,7 @@ object SparkEntry {
       tl.compactSmallFiles(s, p, "bin", targetBytes = 512L * 1024 * 1024,
         keyCol = Some("doc_id"))
     }
-    graft.operators.TableLogRelation.snapshotDf(s, root)
+    graft.operators.TableLog.snapshot(s, root)
       .filter(col("doc_id") >= 120L && col("doc_id") <= 480L)
       .orderBy(col("doc_id"))
   }

@@ -804,7 +804,7 @@ object TableLog {
     * [[Layout.zValue]] over [[Layout.quantize]]d coordinates, the
     * same integer rule as q99's layout — so EACH file owns a tight
     * rectangle in BOTH dimensions and a 2-D box predicate through
-    * [[TableLogRelation.snapshotDf]] prunes on x AND y
+    * [[snapshot]] prunes on x AND y
     * simultaneously (1-D range clustering makes only the key's stats
     * bite; the second dimension's per-file intervals span everything).
     * Typed stats are declared on both dimensions automatically; the
@@ -922,9 +922,7 @@ object TableLog {
       s"TableLog.compactSmallFiles: candidates at $root carry zone-map " +
         "stats — pass keyCol so the rewrite re-clusters and re-declares " +
         "them (silently dropping stats would degrade every later read)")
-    val reader = logSchema(spark, root, Some(readV))
-      .fold(spark.read)(st => spark.read.schema(st))
-    val rows = reader.parquet(candidatePaths.map(resolve(root, _)): _*)
+    val rows = readActive(spark, root, Some(readV), candidatePaths)
     val parts = math.max(1L,
       (candidates.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
     val (files, zm) = keyCol match {
@@ -1366,8 +1364,8 @@ object TableLog {
 
   /** The active file set of the most recent non-empty version at or
     * before `upTo` — the empty-snapshot schema fallback shared by
-    * [[snapshot]], [[restoreTable]] and
-    * [[TableLogRelation.snapshotDf]]. */
+    * [[snapshot]] (through [[TableLogRelation.relationAt]]) and
+    * [[restoreTable]]. */
   private[operators] def lastNonEmptyFiles(spark: SparkSession, root: String,
                                 upTo: Option[Long]): Option[Seq[String]] = {
     val vs = versions(spark, root)
@@ -1377,34 +1375,44 @@ object TableLog {
   }
 
   /** TIME-TRAVEL read: the table exactly as of version `asOf`
-    * (default: latest). Reads only the log plus the active files —
-    * never a directory listing of the data dir, so stale files from
-    * in-flight or replaced writes are invisible. Pass `idCol` to
-    * apply delete sidecars ([[commitDeletes]]) — a left-anti join
-    * against the (small) deleted-id union; without it, sidecar
-    * deletes are NOT applied (and the call refuses rather than
-    * silently over-reading). A version whose commits removed every
-    * file reads as an EMPTY frame with the schema of the last
-    * non-empty version. When a schema ref is in force
-    * ([[evolveAppend]]), all files are read WITH it — older files
-    * null-fill columns they predate. */
+    * (default: latest), as a PLANNER-PRUNED relation over
+    * [[TableLogFileIndex]] — graft's one read path. Reads only the log
+    * plus the active files — never a directory listing of the data
+    * dir, so stale files from in-flight or replaced writes are
+    * invisible — and plans with no Spark job: the schema comes from
+    * the log or from ONE footer read on the driver. Filters on any
+    * stats-covered column skip files inside Catalyst (the
+    * `.explain`-visible form — the scan's file count shrinks with the
+    * predicate), and the metadata rules ([[graft.plans.MetadataOnlyAgg]],
+    * [[graft.plans.MetadataTopK]]) answer from it. `asOf = None` PINS
+    * the latest committed version at build time — every later action
+    * serves exactly that snapshot, however many commits land meanwhile
+    * (build a new frame to see them).
+    *
+    * Pass `idCol` to apply delete sidecars ([[commitDeletes]]) — a
+    * left-anti join against the (small) deleted-id union, with
+    * pruning still underneath it; without it, sidecar deletes are NOT
+    * applied (and the call refuses rather than silently
+    * over-reading). A version whose commits removed every file reads
+    * as an EMPTY frame with the schema of the last non-empty version.
+    * When a schema ref is in force ([[evolveAppend]]), all files are
+    * read WITH it — older files null-fill columns they predate.
+    *
+    * `bucketBy = Some((col, n))` ATTESTS the table is a
+    * [[stageBucketed]] layout on `col` with `n` buckets (the same
+    * attestation [[mergeInto]] takes): point predicates on that column
+    * then prune to the matching bucket directories by path alone — the
+    * DynamoDB-style point read, one bucket of a 100 TB table. A wrong
+    * attestation (different column or bucket count than the writer
+    * used) prunes WRONGLY — same contract as passing the wrong
+    * nBuckets to mergeInto. */
   def snapshot(spark: SparkSession, root: String,
                asOf: Option[Long] = None,
-               idCol: Option[String] = None): DataFrame = {
-    val files = activeFiles(spark, root, asOf).map(resolve(root, _))
-    val declared = logSchema(spark, root, asOf)
-    val reader = declared.fold(spark.read)(st => spark.read.schema(st))
-    val base =
-      if (files.nonEmpty) reader.parquet(files: _*)
-      else {
-        // legal state (a full-purge commit): serve the empty frame
-        // with the schema of the most recent non-empty version
-        val lastNonEmpty = lastNonEmptyFiles(spark, root, asOf)
-          .getOrElse(sys.error(
-            s"TableLog: $root has no non-empty version at or before $asOf"))
-        reader.parquet(resolve(root, lastNonEmpty.head)).limit(0)
-      }
-    val dels = activeDeletes(spark, root, asOf)
+               idCol: Option[String] = None,
+               bucketBy: Option[(String, Int)] = None): DataFrame = {
+    val (index, rel) = TableLogRelation.relationAt(spark, root, asOf, bucketBy)
+    val base = TableLogRelation.rows(spark, rel)
+    val dels = activeDeletes(spark, root, Some(index.version))
     if (dels.isEmpty) base
     else idCol match {
       case None => sys.error(
@@ -1415,6 +1423,19 @@ object TableLog {
           Seq(id), "left_anti")
     }
   }
+
+  /** The named active files of version `asOf` (root-relative refs; a
+    * name not active there is not read) as the same Catalyst-visible
+    * relation [[snapshot]] plans — the one read
+    * of a table's own maintenance passes (merge read-back, replaceWhere
+    * and deleteWhere survivors, the range faces' boundary scans,
+    * compaction candidates). Delete sidecars are NOT applied: every
+    * caller either refuses them or rewrites files under them. */
+  private[graft] def readActive(spark: SparkSession, root: String,
+                                asOf: Option[Long],
+                                files: Seq[String]): DataFrame =
+    TableLogRelation.rows(spark, TableLogRelation.relationAt(spark, root,
+      asOf, only = Some(files.toSet))._2)
 
   /** Write `df` as new immutable data files under a FRESH
     * `data/<name>-<uuid>/` directory and return their root-relative
@@ -1510,7 +1531,7 @@ object TableLog {
   /** DRIVER-SIDE twin of [[idBucket]]: the bucket of one key value,
     * given its Spark `cast(string)` representation — md5 of the UTF-8
     * bytes, first 8 hex chars as a long, mod n. This is what lets a
-    * POINT READ through [[TableLogRelation.snapshotDf]] prune a
+    * POINT READ through [[snapshot]] (`bucketBy`) prune a
     * [[stageBucketed]] table to one bucket's files by path alone
     * (the `_gb=K` tag) before any file opens. Long and string keys
     * only — their cast-string form is the literal's natural repr;
@@ -1594,13 +1615,12 @@ object TableLog {
       .unionByName(deleteIds.select(col(deleteIds.columns.head).as(idCol)))
       .distinct()
     // read-back through the Catalyst-visible relation pinned at readV,
-    // restricted to the touched buckets (path tags, zero extra I/O) —
-    // the sink-side merge's scan shows its pruned numFiles instead of
+    // restricted to the touched buckets' files (zero extra I/O) — the
+    // sink-side merge's scan shows its pruned numFiles instead of
     // hiding behind a raw path list, and any zone stats compose
     val base =
       if (oldTouched.isEmpty) upserts.limit(0)
-      else TableLogRelation.snapshotDf(spark, root, Some(readV),
-        onlyBuckets = Some(touched))
+      else readActive(spark, root, Some(readV), oldTouched)
     val merged = base.join(doomedIds, Seq(idCol), "left_anti")
       .unionByName(upserts)
     val adds = stageBucketed(merged, root, name, idCol, nBuckets)
@@ -1871,8 +1891,7 @@ object TableLog {
     val base =
       if (oldTouched.isEmpty)
         snapshot(spark, root, Some(readV)).limit(0)
-      else TableLogRelation.snapshotDf(spark, root, Some(readV),
-        onlyBuckets = Some(touched))
+      else readActive(spark, root, Some(readV), oldTouched)
     val cols = base.columns.toSeq
     (matched.collect { case MatchedUpdate(_, set) => set.keys }.flatten ++
       insertSet.keys).foreach(c => require(cols.contains(c),
@@ -1928,7 +1947,7 @@ object TableLog {
     * owns a narrow key interval, and a sidecar parquet — one row per
     * (file, stats column): (file, scol, kind, lo_s, hi_s, n_rows,
     * n_nulls), bounds serialized order-preserving per [[zkindFor]]
-    * kind — lets [[TableLogRelation.snapshotDf]] filters (and
+    * kind — lets [[snapshot]] filters (and
     * [[snapshotWhere]] / [[snapshotPrefix]] over it) drop every file
     * whose interval misses a predicate WITHOUT opening it. Keys may
     * be LONG, STRING, DATE, TIMESTAMP or DOUBLE (the reference's own
@@ -2304,7 +2323,9 @@ object TableLog {
                             asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
     val (window, _) = zwindow("metadataDistinctRange", keyCol, lo, hi)
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
+    // pinned: the boundary scan reads the version the plan came from
+    val at = asOf.orElse(versions(spark, root).lastOption)
+    val (active, dels, zmaps) = replayState(spark, root, at)
     if (dels.nonEmpty) return None
     val zones = collectZoneRowsFrom(spark, root, zmaps)
     // Both named columns must exist in the table before any planning:
@@ -2313,7 +2334,7 @@ object TableLog {
     // data). A column that exists nowhere declines; proceeding would
     // either throw an AnalysisException from the boundary scan or,
     // on a fully-file-aligned empty window, silently estimate 0.
-    val declared = logSchema(spark, root, asOf).map(_.fieldNames.toSet)
+    val declared = logSchema(spark, root, at).map(_.fieldNames.toSet)
     lazy val footerCols: Set[String] = active.headOption.map { p =>
       ParquetMeta.schema(spark, resolve(root, p)).fieldNames.toSet
     }.getOrElse(Set.empty)
@@ -2349,9 +2370,7 @@ object TableLog {
     }
     val scanSet = scanBuilder.result()
     if (scanSet.nonEmpty) {
-      val reader = logSchema(spark, root, asOf)
-        .fold(spark.read)(st => spark.read.schema(st))
-      val bank = reader.parquet(scanSet.map(resolve(root, _)): _*)
+      val bank = readActive(spark, root, at, scanSet)
         .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
         .select(graft.plans.HllRegisters.hllRegisters(
           graft.functions.Sketches.bucketRho(col(sketchCol)),
@@ -2399,13 +2418,15 @@ object TableLog {
     import org.apache.spark.sql.functions._
     val (window, _) = zwindow("metadataAggRange", keyCol, lo, hi)
     require(cols.nonEmpty, "TableLog.metadataAggRange: no columns asked")
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
+    // pinned: the boundary scan reads the version the plan came from
+    val at = asOf.orElse(versions(spark, root).lastOption)
+    val (active, dels, zmaps) = replayState(spark, root, at)
     if (dels.nonEmpty) return None
     val zones = collectZoneRowsFrom(spark, root, zmaps)
     val want = cols.distinct.sorted
     // column validation, cheapest proof first (the metadataDistinctRange
     // rule): declared schema, then sidecar rows, then ONE footer
-    val declared = logSchema(spark, root, asOf)
+    val declared = logSchema(spark, root, at)
     val declaredNames = declared.map(_.fieldNames.toSet)
     lazy val footerSchema: Option[org.apache.spark.sql.types.StructType] =
       active.headOption.map(p =>
@@ -2467,9 +2488,7 @@ object TableLog {
     val scanRow: Option[org.apache.spark.sql.Row] =
       if (toScan.isEmpty) None
       else {
-        val reader = logSchema(spark, root, asOf)
-          .fold(spark.read)(st => spark.read.schema(st))
-        val windowed = reader.parquet(toScan.map(resolve(root, _)): _*)
+        val windowed = readActive(spark, root, at, toScan)
           .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
         val aggs = want.flatMap { c =>
           val k = kindOf(c)
@@ -2834,7 +2853,7 @@ object TableLog {
 
   /** RANGE read with ZONE-MAP file skipping: the snapshot at `asOf`
     * restricted to `lo <= keyCol <= hi` — a plain filter over the
-    * planner-pruned [[TableLogRelation.snapshotDf]] relation, whose
+    * planner-pruned [[snapshot]] relation, whose
     * [[TableLogFileIndex]] drops every file whose stats interval on
     * `keyCol` misses [lo, hi] inside Catalyst. Bounds are any type
     * `lit` accepts (integral, String, LocalDate/sql.Date,
@@ -2844,7 +2863,7 @@ object TableLog {
   def snapshotWhere(spark: SparkSession, root: String, keyCol: String,
                     lo: Any, hi: Any, asOf: Option[Long] = None,
                     idCol: Option[String] = None): DataFrame =
-    TableLogRelation.snapshotDf(spark, root, asOf, idCol)
+    snapshot(spark, root, asOf, idCol)
       .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
 
   /** The smallest string STRICTLY greater than every string with
@@ -2871,7 +2890,7 @@ object TableLog {
   def snapshotPrefix(spark: SparkSession, root: String, keyCol: String,
                      prefix: String, asOf: Option[Long] = None,
                      idCol: Option[String] = None): DataFrame =
-    TableLogRelation.snapshotDf(spark, root, asOf, idCol)
+    snapshot(spark, root, asOf, idCol)
       .filter(col(keyCol).startsWith(prefix))
 
   /** REPLACE WHERE — atomically overwrite exactly the rows with
@@ -2922,11 +2941,9 @@ object TableLog {
     val zones = collectZoneRows(spark, root, Some(readV))
     val touched = pruneWithStats(activeFiles(spark, root, Some(readV)),
       zones, window)
-    val reader = logSchema(spark, root, Some(readV))
-      .fold(spark.read)(st => spark.read.schema(st))
     val survivors =
       if (touched.isEmpty) replacement.limit(0)
-      else reader.parquet(touched.map(resolve(root, _)): _*)
+      else readActive(spark, root, Some(readV), touched)
         .filter(col(keyCol).isNull || col(keyCol) < lit(lo) ||
           col(keyCol) > lit(hi))
     val (files, zm) = stageWithZoneMap(
@@ -3005,15 +3022,13 @@ object TableLog {
       // "unknown", never "zero")
       val droppable = fullMatchWithStats(touched, zones, window)
       val rewrite = touched.filterNot(droppable)
-      // lazy: an all-droppable purge without a feed must stay pure
-      // metadata — not even the schema-ref replay runs
-      lazy val reader = logSchema(spark, root, Some(readV))
-        .fold(spark.read)(st => spark.read.schema(st))
+      // both reads below run only when needed: an all-droppable purge
+      // without a feed must stay pure metadata — not even the
+      // schema-ref replay runs
       val (files, zm) =
         if (rewrite.isEmpty) (Seq.empty[String], Seq.empty[String])
         else {
-          val survivors = reader
-            .parquet(rewrite.map(resolve(root, _)): _*)
+          val survivors = readActive(spark, root, Some(readV), rewrite)
             .filter(col(keyCol).isNull || col(keyCol) < lit(lo) ||
               col(keyCol) > lit(hi))
           // a straddler-by-stats file can still be all-in-range in
@@ -3030,8 +3045,7 @@ object TableLog {
         // the feed's one honest cost: a column-pruned scan of the
         // touched files for the vanishing ids (droppable files
         // included — the DATA path still never rewrites them)
-        val removed = reader
-          .parquet(touched.map(resolve(root, _)): _*)
+        val removed = readActive(spark, root, Some(readV), touched)
           .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
           .select(col(idc), lit("removed").as("status"))
         stageFeed(removed, root, name)

@@ -10,19 +10,23 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftbridge.ParquetMeta
+import org.apache.spark.sql.graftbridge.{BridgeTypes, ParquetMeta}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A CATALYST-VISIBLE snapshot relation over a [[TableLog]] table: the
   * log's active file set wrapped in a custom [[FileIndex]] whose
   * `listFiles` consults the typed zone-map sidecars — so ANY pushed
   * predicate on a stats-covered column prunes files INSIDE the
-  * optimizer, on a plain `snapshotDf.filter(col between ...)`, with no
-  * special read face: the planner prunes on every query (the Delta
-  * `TahoeFileIndex` design). This is graft's ONE zone-pruned read
-  * path — [[TableLog.snapshotWhere]] and [[TableLog.snapshotPrefix]]
-  * are named filters over it, and the pruning rules themselves are
-  * [[TableLog.pruneWithStats]] / [[TableLog.fullMatchWithStats]].
+  * optimizer, on a plain `TableLog.snapshot(...).filter(col between
+  * ...)`, with no special read face: the planner prunes on every query
+  * (the Delta `TahoeFileIndex` design). [[TableLog.snapshot]] is
+  * graft's ONE read path and plans through this index —
+  * [[TableLog.snapshotWhere]] and [[TableLog.snapshotPrefix]] are
+  * named filters over it, the format face and `graft_table(...)` serve
+  * its relation, and the table's own maintenance reads of named active
+  * files ([[TableLog.readActive]]) restrict it. The pruning rules
+  * themselves are [[TableLog.pruneWithStats]] /
+  * [[TableLog.fullMatchWithStats]].
   *
   * What the planner hands `listFiles` is the split conjunction of
   * pushed data filters; [[TableLogFileIndex.rangesOf]] translates the
@@ -53,7 +57,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 class TableLogFileIndex(spark: SparkSession, root: String,
                         asOf: Option[Long],
                         bucketBy: Option[(String, Int)] = None,
-                        onlyBuckets: Option[Set[Int]] = None)
+                        only: Option[Set[String]] = None)
     extends FileIndex {
   import TableLog.kindRepr
 
@@ -76,13 +80,10 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * sentinel) fall back to a stat — for those files alone. */
   protected lazy val active: Seq[(String, FileStatus)] =
     TableLog.activeFilesWithMeta(spark, root, Some(version))
-      // `onlyBuckets` restricts the index to the named bucket dirs by
-      // PATH TAG at construction — the merge read-back's scope (the
-      // touched-bucket set), zero I/O; untagged files stay
-      // (conservative — callers that require a fully bucketed layout
-      // enforce it before reading)
-      .filter { case (rel, _) =>
-        onlyBuckets.forall(bs => TableLog.bucketOf(rel).forall(bs)) }
+      // `only` restricts the index to the named active files (root-
+      // relative refs) at construction — a maintenance read's scope
+      // ([[TableLog.readActive]]), zero I/O
+      .filter { case (rel, _) => only.forall(_.contains(rel)) }
       .map { case (rel, meta) =>
         val p = fsys.makeQualified(new Path(TableLog.resolve(root, rel)))
         rel -> TableLog.parseFileMeta(meta).fold(fsys.getFileStatus(p)) {
@@ -94,7 +95,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     }
 
   /** The pinned active file refs (root-relative) — exposed so
-    * [[TableLogRelation.snapshotDf]] reuses the replay this
+    * [[TableLogRelation.relationAt]] reuses the replay this
     * constructor already paid for instead of re-reading the log, and
     * so [[graft.plans.MetadataOnlyAgg]] can scope a stats answer to
     * the whole snapshot. */
@@ -410,7 +411,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     // a NAMED subclass so `.explain` prints a readable Location line
     // (an anonymous class has an empty simple name)
     class TopKRestrictedFileIndex extends TableLogFileIndex(
-        spark, root, Some(version), bucketBy, onlyBuckets) {
+        spark, root, Some(version), bucketBy, Some(keep)) {
       override protected lazy val active: Seq[(String, FileStatus)] = a
       override protected lazy val zones: Array[TableLog.ZStat] = z
     }
@@ -788,43 +789,28 @@ class TableLogFileIndex(spark: SparkSession, root: String,
 
 object TableLogRelation {
 
-  /** Enable METADATA-ONLY AGGREGATES for this session: a global
-    * `count(*)`/`count(col)`/`min(col)`/`max(col)` over a
-    * [[snapshotDf]] relation answers from the zone-map sidecars with
-    * ZERO files scanned when every active file is stats-covered —
-    * see [[graft.plans.MetadataOnlyAgg]] for the soundness gates.
-    * Idempotent; per-session (`experimental.extraOptimizations`). */
-  def enableMetadataOnlyAggregates(spark: SparkSession): Unit =
-    graft.plans.MetadataOnlyAggSupport.enable(spark)
-
-  /** Enable TOP-K FILE PRUNING for this session: a global
-    * `ORDER BY col [DESC] LIMIT k` over a [[snapshotDf]] relation
-    * reads only the files that can hold the k outermost rows — see
-    * [[graft.plans.MetadataTopK]] for the soundness gates. Idempotent;
-    * per-session (`experimental.extraOptimizations`). */
-  def enableMetadataTopK(spark: SparkSession): Unit =
-    graft.plans.MetadataTopKSupport.enable(spark)
-
-  /** The pinned-version (index, HadoopFsRelation) pair [[snapshotDf]]
-    * plans from — shared with the `spark.read.format` face
-    * ([[graft.sources.TableLogSource]]), which must return a
-    * [[HadoopFsRelation]] (a BaseRelation) rather than a DataFrame. */
+  /** The pinned-version (index, HadoopFsRelation) pair
+    * [[TableLog.snapshot]] plans from — shared with the
+    * `spark.read.format` face ([[graft.sources.TableLogSource]]), which
+    * must return a [[HadoopFsRelation]] (a BaseRelation) rather than a
+    * DataFrame. `only` restricts the index to named active files
+    * ([[TableLog.readActive]]). */
   private[graft] def relationAt(spark: SparkSession, root: String,
       asOf: Option[Long],
       bucketBy: Option[(String, Int)] = None,
-      onlyBuckets: Option[Set[Int]] = None)
+      only: Option[Set[String]] = None)
       : (TableLogFileIndex, HadoopFsRelation) = {
-    val index = new TableLogFileIndex(spark, root, asOf, bucketBy, onlyBuckets)
-    val schema = TableLog.logSchema(spark, root, Some(index.version)).getOrElse {
+    val index = new TableLogFileIndex(spark, root, asOf, bucketBy, only)
+    val schema = TableLog.logSchema(spark, root, Some(index.version))
+        .map(BridgeTypes.nullable).getOrElse {
       // no declared schema: take the files' own uniform schema from
       // ONE footer (files are immutable, a commit's files share one);
       // the index already replayed the log — reuse its refs. A fully
-      // purged version has none: use the last non-empty version's, as
-      // [[TableLog.snapshot]] does
+      // purged version has none: use the last non-empty version's
       val files = Some(index.activeRefs).filter(_.nonEmpty)
         .orElse(TableLog.lastNonEmptyFiles(spark, root, Some(index.version)))
         .getOrElse(sys.error(
-          s"TableLogRelation: $root has no non-empty version at or before " +
+          s"TableLog: $root has no non-empty version at or before " +
             index.version))
       ParquetMeta.schema(spark, TableLog.resolve(root, files.head))
     }
@@ -832,57 +818,11 @@ object TableLogRelation {
       new ParquetFileFormat(), Map.empty[String, String])(spark))
   }
 
-  /** The snapshot at `asOf` as a PLANNER-PRUNED relation: filters on
-    * any stats-covered column skip files inside Catalyst (the
-    * `.explain`-visible form — the scan's file count shrinks with the
-    * predicate). `asOf = None` PINS the latest committed version at
-    * build time — every later action serves exactly that snapshot,
-    * however many commits land meanwhile (build a new relation to see
-    * them). Delete sidecars, when in force at the pinned version,
-    * compose as the same left-anti join [[TableLog.snapshot]] applies
-    * — pruning still happens underneath it; pass `idCol` exactly as
-    * there.
-    *
-    * `bucketBy = Some((col, n))` ATTESTS the table is a
-    * [[TableLog.stageBucketed]] layout on `col` with `n` buckets (the
-    * same attestation [[TableLog.mergeInto]] takes): point predicates
-    * on that column then prune to the matching bucket directories by
-    * path alone — the DynamoDB-style point read, one bucket of a
-    * 100 TB table. A wrong attestation (different column or bucket
-    * count than the writer used) prunes WRONGLY — same contract as
-    * passing the wrong nBuckets to mergeInto.
-    *
-    * `onlyBuckets` restricts the relation to the named `_gb` bucket
-    * dirs at construction (zero I/O, path tags) — the merge
-    * read-back's scope: [[TableLog.mergeInto]] reads exactly its
-    * touched buckets through this, so the read-back is a
-    * Catalyst-visible pruned scan instead of a raw path list.
-    * CAVEAT: files WITHOUT a bucket tag are conservatively INCLUDED
-    * (they may hold any id) — on a mixed bucketed/unbucketed table
-    * this reads more than the named buckets, never less. A caller
-    * that needs bucket-exclusive scope must require the fully
-    * bucketed layout first, exactly as the merges do. */
-  def snapshotDf(spark: SparkSession, root: String,
-                 asOf: Option[Long] = None,
-                 idCol: Option[String] = None,
-                 bucketBy: Option[(String, Int)] = None,
-                 onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (index, rel) = relationAt(spark, root, asOf, bucketBy, onlyBuckets)
-    val at = Some(index.version)
-    val base = org.apache.spark.sql.graftbridge.BridgePlans.ofRows(
+  /** `rel` as a DataFrame — the Catalyst-visible scan every
+    * [[TableLog]] read returns. */
+  private[graft] def rows(spark: SparkSession,
+                          rel: HadoopFsRelation): DataFrame =
+    org.apache.spark.sql.graftbridge.BridgePlans.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LogicalRelation(rel, isStreaming = false))
-    val dels = TableLog.activeDeletes(spark, root, at)
-    if (dels.isEmpty) base
-    else idCol match {
-      case None => sys.error(
-        s"TableLogRelation.snapshotDf: $root has delete sidecars; pass idCol")
-      case Some(id) =>
-        val doomed = spark.read.parquet(
-          dels.map(TableLog.resolve(root, _)): _*)
-        base.join(doomed.select(col(doomed.columns.head).as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
-  }
 }

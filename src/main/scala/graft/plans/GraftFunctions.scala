@@ -107,13 +107,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectTableFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.plans.GraftSql", name), b))
     }
-    // the metadata-tier optimizer rules ride the extension too, so a
-    // pure-SQL session gets zero-scan aggregates and top-k file
-    // pruning on graft_table(...) reads without calling the
-    // enableMetadata* seams; both rules are soundness-gated on
-    // TableLogFileIndex relations and no-op everywhere else, and
-    // re-registration through the enable* seams stays idempotent
-    // (the extraOptimizations list is checked for membership there)
+    // the metadata-tier optimizer rules ride the extension too — the
+    // one channel that registers them — so every session, pure SQL
+    // included, gets zero-scan aggregates and top-k file pruning on
+    // TableLog reads; both rules are soundness-gated on
+    // TableLogFileIndex relations and no-op everywhere else
     e.injectOptimizerRule(_ => MetadataOnlyAgg)
     e.injectOptimizerRule(_ => MetadataTopK)
     // catalog-named tables: INSERT INTO/OVERWRITE on a `USING

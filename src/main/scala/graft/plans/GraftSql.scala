@@ -401,8 +401,7 @@ object GraftSql {
             // pair would let a commit racing in between vanish)
             val readV = tl.versions(s, root).lastOption.getOrElse(
               sys.error(s"GraftSql: UPDATE on empty log at $root"))
-            val snap = graft.operators.TableLogRelation
-              .snapshotDf(s, root, Some(readV))
+            val snap = tl.snapshot(s, root, Some(readV))
             // SET columns resolve like Spark does (case-insensitive);
             // one column assigned twice is ambiguous, refuse it
             val byLower = snap.columns.map(c => c.toLowerCase -> c).toMap
@@ -476,8 +475,7 @@ object GraftSql {
                 nBuckets = buckets.toInt, name = "sqlmerge")
             else {
               val tl = graft.operators.TableLog
-              val cols = graft.operators.TableLogRelation
-                .snapshotDf(s, root).columns.toSeq
+              val cols = tl.snapshot(s, root).columns.toSeq
               val matched: Seq[tl.MergeClause] = clauses.collect {
                 case PUpd(c, None) =>
                   tl.MatchedUpdate(c, cols.map(x => x -> s"s.`$x`").toMap)
@@ -637,8 +635,8 @@ object GraftSql {
 
   /** graft_table(root [, version [, idCol]]) — negative version =
     * latest. The returned plan is the SAME TableLogFileIndex relation
-    * snapshotDf serves, so zone-map skipping and the metadata rules
-    * apply to pure-SQL readers too. */
+    * [[graft.operators.TableLog.snapshot]] serves, so zone-map skipping
+    * and the metadata rules apply to pure-SQL readers too. */
   def graftTableBuilder(es: Seq[Expression]): LogicalPlan = {
     require(es.nonEmpty && es.length <= 3,
       "graft_table(root[, version[, idCol]])")
@@ -646,8 +644,7 @@ object GraftSql {
     val asOf = es.lift(1).map(litLong(_, "graft_table: version"))
       .filter(_ >= 0L)
     val idCol = es.lift(2).map(litString(_, "graft_table: idCol"))
-    graft.operators.TableLogRelation
-      .snapshotDf(SparkSession.active, root, asOf, idCol)
+    graft.operators.TableLog.snapshot(SparkSession.active, root, asOf, idCol)
       .queryExecution.logical
   }
 
@@ -662,7 +659,7 @@ object GraftSql {
       litString(es(1), "graft_table_at: timestamp"))
     val v = graft.operators.TableLog.versionAtTime(spark, root,
       ts.toEpochMilli)
-    graft.operators.TableLogRelation.snapshotDf(spark, root, Some(v))
+    graft.operators.TableLog.snapshot(spark, root, Some(v))
       .queryExecution.logical
   }
 

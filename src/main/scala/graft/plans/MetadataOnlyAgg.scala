@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   Expression, Literal, NamedExpression}
@@ -21,7 +20,7 @@ import graft.operators.TableLogFileIndex
   * grouping column, a single-key GROUP BY ([[TableLogFileIndex
   * .groupAligned]]) — `count(*)` / `count(col)` / `min(col)` /
   * `max(col)` / `sum(integral col)` over a
-  * [[graft.operators.TableLogRelation.snapshotDf]] relation collapses
+  * [[graft.operators.TableLog.snapshot]] relation collapses
   * to a [[LocalRelation]] holding the answer computed from the log's
   * typed zone-map sidecars — ZERO files scanned. At 100 TB,
   * `SELECT max(ts) FROM table` (every incremental consumer's
@@ -54,10 +53,8 @@ import graft.operators.TableLogFileIndex
   *    block it; see [[TableLogFileIndex.statsRowCount]] /
   *    `statsNonNullCount` / `statsMinMax`).
   *
-  * Registered per-session via
-  * [[graft.operators.TableLogRelation.enableMetadataOnlyAggregates]]
-  * (`spark.experimental.extraOptimizations` — the public runtime seam
-  * for extra optimizer rules; idempotent). Stats rows are written by
+  * Registered in every session by [[GraftExtensions]]
+  * (`injectOptimizerRule`). Stats rows are written by
   * the same pass that writes the data files, so trusting them here is
   * exactly the trust every pruned read already extends. */
 object MetadataOnlyAgg extends Rule[LogicalPlan] {
@@ -166,25 +163,5 @@ object MetadataOnlyAgg extends Rule[LogicalPlan] {
               else Some(LocalRelation(agg.output, rows.map(_.get)))
             }).getOrElse(agg)
       }
-  }
-}
-
-/** [[SparkSession.experimental.extraOptimizations]] registration —
-  * kept beside the rule so callers outside `graft.operators` have a
-  * public entry point. */
-object MetadataOnlyAggSupport {
-  /** Idempotently add [[MetadataOnlyAgg]] to the session's extra
-    * optimizer rules — ACROSS channels: a session built with
-    * [[GraftExtensions]] already carries the rule via
-    * injectOptimizerRule (visible in the optimizer's
-    * extendedOperatorOptimizationRules), and registering it again in
-    * extraOptimizations would run the same stats walks one more time
-    * per query for nothing. */
-  def enable(spark: SparkSession): Unit = synchronized {
-    val injected = spark.sessionState.optimizer
-      .extendedOperatorOptimizationRules.contains(MetadataOnlyAgg)
-    val cur = spark.experimental.extraOptimizations
-    if (!injected && !cur.contains(MetadataOnlyAgg))
-      spark.experimental.extraOptimizations = cur :+ MetadataOnlyAgg
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
   Descending, Expression, IntegerLiteral, NullsFirst}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit,
@@ -14,7 +13,7 @@ import graft.operators.TableLogFileIndex
 /** TOP-K FILE PRUNING over a [[graft.operators.TableLog]] snapshot —
   * `ORDER BY col [DESC] LIMIT k` as a Catalyst [[Rule]]: when the
   * sort's FIRST key is a stats-covered column of a
-  * [[graft.operators.TableLogRelation.snapshotDf]] relation, the
+  * [[graft.operators.TableLog.snapshot]] relation, the
   * relation is rewritten to serve only the files that can hold the k
   * outermost rows ([[TableLogFileIndex.topKSurvivors]]) — walk files
   * by their extreme bound, accumulate row counts to k, keep nothing
@@ -109,20 +108,5 @@ object MetadataTopK extends Rule[LogicalPlan] {
           }, hint))
       }
       rewritten.getOrElse(lim)
-  }
-}
-
-/** Registration seam, same shape as [[MetadataOnlyAggSupport]]. */
-object MetadataTopKSupport {
-  /** Idempotently add [[MetadataTopK]] to the session's extra
-    * optimizer rules — across channels, like
-    * [[MetadataOnlyAggSupport.enable]] (a GraftExtensions session
-    * already carries the rule via injectOptimizerRule). */
-  def enable(spark: SparkSession): Unit = synchronized {
-    val injected = spark.sessionState.optimizer
-      .extendedOperatorOptimizationRules.contains(MetadataTopK)
-    val cur = spark.experimental.extraOptimizations
-    if (!injected && !cur.contains(MetadataTopK))
-      spark.experimental.extraOptimizations = cur :+ MetadataTopK
   }
 }

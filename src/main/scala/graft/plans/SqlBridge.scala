@@ -19,6 +19,13 @@ object Bridge {
   * type resolves because this file lives under org.apache.spark.sql. */
 object BridgeTypes {
   type AbstractDataType = org.apache.spark.sql.types.AbstractDataType
+
+  /** Every field nullable, recursively (`asNullable` is
+    * `private[spark]`): a file relation reads a declared schema this
+    * way, as `spark.read.schema(st)` does, so a file written before a
+    * non-null column existed reads it as null. */
+  def nullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
 }
 
 /** Custom-LogicalPlan plumbing that Spark 4 keeps `private[sql]`:

@@ -28,13 +28,13 @@ import graft.operators.{TableLog, TableLogRelation}
   * }}}
   *
   * Reads return the SAME planner-pruned relation as
-  * [[TableLogRelation.snapshotDf]] (a [[TableLogFileIndex]]-backed
+  * [[TableLog.snapshot]] (a [[TableLogFileIndex]]-backed
   * HadoopFsRelation): typed zone-map skipping, zero-stat planning,
   * and the metadata aggregate/top-k rules all apply unchanged —
   * the format face adds convenience, never a second read path.
   * Reads REFUSE a table with delete sidecars in force (a DSv1
-  * BaseRelation cannot carry the anti-join; snapshotDf(idCol) is the
-  * face for that) — refusing beats silently resurrecting deleted rows.
+  * BaseRelation cannot carry the anti-join; TableLog.snapshot(idCol) is
+  * the face for that) — refusing beats silently resurrecting deleted rows.
   *
   * Writes stage then commit atomically, exactly as the library face:
   * `append` adds files; `overwrite` removes the read snapshot's
@@ -183,7 +183,7 @@ class TableLogSource extends RelationProvider
     // refuse rather than resurrect deleted rows
     require(TableLog.activeDeletes(spark, root, Some(index.version)).isEmpty,
       s"TableLogSource: $root has delete sidecars in force at version " +
-        s"${index.version} — read it via TableLogRelation.snapshotDf" +
+        s"${index.version} — read it via TableLog.snapshot" +
         "(spark, root, idCol = Some(...)), which applies them")
     rel
   }

@@ -44,6 +44,14 @@ class ScaleOpsSpec extends AnyFunSuite {
     scans.map(_.relation.location.inputFiles.length.toLong).sum
   }
 
+  /** The snapshot's active files as a plain parquet read — ground
+    * truth for the metadata faces that stays apart from the code under
+    * test (TableLog.snapshot is the relation MetadataOnlyAgg answers
+    * from). */
+  private def rawSnapshot(root: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(graft.operators.TableLog.activeFiles(spark, root)
+      .map(f => s"$root/$f"): _*)
+
   test("saltedJoin equals the plain inner join") {
     val orders = Tables.orders(spark, TestSpark.sf)
     val customer = Tables.customer(spark, TestSpark.sf)
@@ -1557,6 +1565,13 @@ class ScaleOpsSpec extends AnyFunSuite {
     // vacuum at the horizon keeps the in-force schema sidecar
     TableLog.vacuum(spark0, root, retainFrom = v1)
     assert(TableLog.snapshot(spark0, root).columns.length === 4)
+    // a column added NOT NULL (a literal) still null-fills older files:
+    // the declared schema reads as nullable
+    TableLog.evolveAppend(docs.limit(1).select(col("doc_id"), col("text"),
+      col("n_chars"), col("lang"), lit("v2").as("src")), root, "tagged")
+    val tagged = TableLog.snapshot(spark0, root)
+    assert(tagged.schema("src").nullable)
+    assert(tagged.filter(col("src").isNull).count() === docs.count())
   }
 
   test("TableLog.replaceWhere rewrites only zone-touched files and refuses out-of-range rows") {
@@ -2145,7 +2160,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("mergeIntoConditional refuses duplicate source ids; rewrites preserve secondary-column stats") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     // --- duplicate source ids: the Delta multiple-source-rows error
@@ -2172,7 +2187,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.commit(spark0, root2, files, Nil, zmap = zm)
     // purge a window whose boundary files rewrite
     TableLog.deleteWhere(spark0, root2, "doc_id", 120L, 180L, "p", 2)
-    val snap = TableLogRelation.snapshotDf(spark0, root2)
+    val snap = TableLog.snapshot(spark0, root2)
     val q = snap.filter(col("alt_key") >= 0L && col("alt_key") <= 280L) // ids 0..40
     assert(q.count() === 41L)
     q.collect()
@@ -2199,7 +2214,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // OPTIMIZE is a FULL rewrite — it must inherit the outgoing
     // generation's stats coverage the same way
     TableLog.optimizeTable(spark0, root2, "doc_id", "doc_id", "opt", 8)
-    val q2 = TableLogRelation.snapshotDf(spark0, root2)
+    val q2 = TableLog.snapshot(spark0, root2)
       .filter(col("alt_key") >= 0L && col("alt_key") <= 280L)
     assert(q2.count() === 41L)
     assert(scanned(q2) === 1,
@@ -2207,7 +2222,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("TableLogRelation pins its version: a concurrent commit cannot change served rows") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_pin").toString + "/t"
@@ -2215,7 +2230,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       (0L until 100L).map(i => (i, s"t$i")).toDF("doc_id", "text"),
       root, "base", "doc_id", 4)
     TableLog.commit(spark0, root, f1, Nil, zmap = z1)
-    val pinned = TableLogRelation.snapshotDf(spark0, root)
+    val pinned = TableLog.snapshot(spark0, root)
     assert(pinned.count() === 100L)
     // a full rewrite lands AFTER the relation was built
     TableLog.compactTable(spark0, root, "doc_id", "rewrite")
@@ -2228,7 +2243,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(pinned.count() === 100L)
     assert(pinned.filter(col("doc_id") >= 1000L).count() === 0L)
     // a fresh relation sees the new head
-    assert(TableLogRelation.snapshotDf(spark0, root).count() === 110L)
+    assert(TableLog.snapshot(spark0, root).count() === 110L)
   }
 
   test("TableLog.replaceWhere preserves NULL-key rows and refuses NULL-key replacements") {
@@ -2358,7 +2373,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("TableLogRelation: plain filters prune files inside Catalyst via the zone maps") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_rel").toString + "/t"
@@ -2374,7 +2389,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
     // scan-side file count (scannedFiles): the FileIndex's listFiles
     // result is what FileSourceScanExec reads
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) plain long range — the q136 shape
     val longQ = snap.filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
     assert(longQ.count() === 50L)
@@ -2394,12 +2409,12 @@ class ScaleOpsSpec extends AnyFunSuite {
     // 4) unknown predicates prune nothing but stay correct
     assert(snap.filter(col("text") === "t7").count() === 1L)
     // 5) a stats-less commit reads conservatively through the SAME
-    //    relation (refresh = new snapshotDf)
+    //    relation (refresh = new snapshot)
     TableLog.commit(spark0, root, TableLog.stageWrite(
       (1000L until 1010L).map(i => (i, s"x$i",
         java.sql.Date.valueOf(base), s"t$i")).toDF("doc_id", "skey", "day", "text")
         .coalesce(1), root, "b"), Nil)
-    val snap2 = TableLogRelation.snapshotDf(spark0, root)
+    val snap2 = TableLog.snapshot(spark0, root)
     val longQ2 = snap2.filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
     assert(longQ2.count() === 50L)
     // pruned zone files + the one conservative stats-less file
@@ -2407,7 +2422,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // 6) delete sidecars compose on top, pruning intact underneath
     TableLog.commitDeletes(
       Seq(110L, 120L).toDF("doc_id"), root, "purge2")
-    val snap3 = TableLogRelation.snapshotDf(spark0, root, idCol = Some("doc_id"))
+    val snap3 = TableLog.snapshot(spark0, root, idCol = Some("doc_id"))
     val delQ = snap3.filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
     assert(delQ.count() === 48L)
     assert(scannedFiles(delQ) < files.length + 1,
@@ -2722,7 +2737,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("a fully purged table reads empty with its base schema through snapshotDf, snapshotWhere and the source face") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_purged").toString + "/t"
@@ -2734,7 +2749,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.deleteWhere(spark0, root, "doc_id", 0L, 99L, "purge", 2)
     assert(TableLog.activeFiles(spark0, root).isEmpty)
     val faces = Seq(
-      "snapshotDf" -> TableLogRelation.snapshotDf(spark0, root),
+      "snapshot" -> TableLog.snapshot(spark0, root),
       "snapshotWhere" -> TableLog.snapshotWhere(spark0, root, "doc_id", 0L, 99L),
       "source" -> spark0.read.format("graft.sources.TableLogSource").load(root))
     faces.foreach { case (face, got) =>
@@ -2745,7 +2760,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("TableLogFileIndex builds from logged file metadata: zero per-data-file stats; checkpoints fold it; legacy entries fall back") {
-    import graft.operators.{TableLog, TableLogFileIndex, TableLogRelation}
+    import graft.operators.{TableLog, TableLogFileIndex}
     val spark0 = spark
     import spark0.implicits._
     spark0.sparkContext.hadoopConfiguration.set(
@@ -2794,7 +2809,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         "data files — per-file metadata must come from the log")
     // 4) scans through the synthetic statuses read correctly (a wrong
     //    logged length would truncate or over-read a parquet footer)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     assert(snap.count() === 450L)
     assert(snap.filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
       .count() === 50L)
@@ -2819,7 +2834,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val nActive = TableLog.activeFiles(spark0, root).length
     assert(CountingLocalFs.dataFileStats() === nActive,
       "meta-less files must fall back to exactly one stat each")
-    assert(TableLogRelation.snapshotDf(spark0, root).count() === 450L)
+    assert(TableLog.snapshot(spark0, root).count() === 450L)
   }
 
   /** The executed TableLogFileIndex scans of `df`, after running it
@@ -2856,7 +2871,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       .toSet
 
   test("TableLogFileIndex: IN-list point pruning, the InSet rewrite, and IS NULL via n_nulls") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_in").toString + "/t"
@@ -2867,7 +2882,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       statsCols = Seq("maybe"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
     assert(files.length === 8)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) the batch-of-keys probe: 3 exact keys = 3 point intervals —
     //    at most one file each (range-clustered on skey)
     val in3 = snap.filter(col("skey").isin("k0007", "k0203", "k0399"))
@@ -2904,7 +2919,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("TableLogFileIndex: OR disjunctions, IS NOT NULL, and the all-null-file proof prune files") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_or").toString + "/t"
@@ -2917,7 +2932,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       statsCols = Seq("doc_id", "maybe"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
     assert(files.length === 8)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) the outside-a-window shape, same column on both sides: the
     //    two branch intervals collapse into ONE zone disjunction —
     //    only the bottom and top files survive
@@ -2963,14 +2978,10 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("MetadataOnlyAgg: count/min/max answer from the log with ZERO files scanned; every guard keeps the scan") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
-    TableLogRelation.enableMetadataOnlyAggregates(spark0)
-    // double-enable must not double-register — ACROSS channels: this
-    // session carries the rule via GraftExtensions' injectOptimizerRule,
-    // so enable() must see it there and add nothing
-    TableLogRelation.enableMetadataOnlyAggregates(spark0)
+    // one registration, through GraftExtensions' injectOptimizerRule
     assert(spark0.experimental.extraOptimizations
         .count(_ == graft.plans.MetadataOnlyAgg) +
       spark0.sessionState.optimizer.extendedOperatorOptimizationRules
@@ -2985,7 +2996,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
 
 
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) the full answerable battery in one Aggregate — collapses to
     //    a LocalRelation, zero scans
     val m = snap.agg(count(lit(1)).as("n"), count(col("maybe")).as("nn"),
@@ -3039,7 +3050,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val extra = Seq((9999L, "k9999", "v9999", 1.0f, "tx"))
       .toDF("doc_id", "skey", "maybe", "score", "text").coalesce(1)
     TableLog.commit(spark0, root, TableLog.stageWrite(extra, root, "plain"), Nil)
-    val snap2 = TableLogRelation.snapshotDf(spark0, root)
+    val snap2 = TableLog.snapshot(spark0, root)
     val g5 = snap2.agg(count(lit(1)).as("n"))
     assert(g5.collect()(0).getLong(0) === 401L)
     assert(fileScans(g5) > 0, "an uncovered file must force the scan")
@@ -3047,7 +3058,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     //    the shape never matches, the answer stays exact
     TableLog.commitDeletes(spark0.range(1).select(lit(9999L).as("doc_id")),
       root, "purge")
-    val snap3 = TableLogRelation.snapshotDf(spark0, root, idCol = Some("doc_id"))
+    val snap3 = TableLog.snapshot(spark0, root, idCol = Some("doc_id"))
     val g6 = snap3.agg(count(lit(1)).as("n"))
     assert(g6.collect()(0).getLong(0) === 400L)
     assert(fileScans(g6) > 0, "delete sidecars must force the scan")
@@ -3060,7 +3071,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (f2, z2) = TableLog.stageWithZoneMap(allNull, root2, "base", "doc_id", 2,
       statsCols = Seq("maybe", "nval"))
     TableLog.commit(spark0, root2, f2, Nil, zmap = z2)
-    val m2 = TableLogRelation.snapshotDf(spark0, root2)
+    val m2 = TableLog.snapshot(spark0, root2)
       .agg(min(col("maybe")).as("lo"), max(col("maybe")).as("hi"),
         count(col("maybe")).as("nn"), sum(col("nval")).as("ns"))
     val r2 = m2.collect()(0)
@@ -3071,7 +3082,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("decimal zone maps: point/range/IN pruning, cross-scale literals, and metadata min/max") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_dec").toString + "/t"
@@ -3083,7 +3094,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "price", 8)
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
     assert(files.length === 8)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // range: one file of 50 prices spans 12.50
     val band = snap.filter(
       col("price") >= lit("3.00").cast("decimal(12,2)") &&
@@ -3103,7 +3114,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(cross.count() === 2L) // 99.75, 100.00
     assert(scannedFiles(cross) === 1L)
     // metadata min/max answer as DECIMAL with zero files scanned
-    TableLogRelation.enableMetadataOnlyAggregates(spark0)
     val m = snap.agg(min(col("price")).as("lo"), max(col("price")).as("hi"))
     val r = m.collect()(0)
     assert(r.getDecimal(0) === new java.math.BigDecimal("0.25"))
@@ -3117,11 +3127,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("MetadataTopK: ORDER BY ... LIMIT k reads only the files that can hold the top k") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
-    TableLogRelation.enableMetadataTopK(spark0)
-    TableLogRelation.enableMetadataTopK(spark0)
     assert(spark0.experimental.extraOptimizations
         .count(_ == graft.plans.MetadataTopK) +
       spark0.sessionState.optimizer.extendedOperatorOptimizationRules
@@ -3137,7 +3145,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "skey", 8,
       statsCols = Seq("doc_id", "maybe"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) the latest-k probe: top 10 by skey desc live in ONE file
     val top10 = snap.orderBy(col("skey").desc).limit(10)
     assert(top10.select("skey").as[String].collect().toSeq ===
@@ -3193,7 +3201,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (fB, zB) = TableLog.stageWithZoneMap(
       (9L to 15L).map(i => (i, s"b$i")).toDF("v", "tag"), root2, "b", "v", 1)
     TableLog.commit(spark0, root2, fB, Nil, zmap = zB)
-    val snap2 = TableLogRelation.snapshotDf(spark0, root2)
+    val snap2 = TableLog.snapshot(spark0, root2)
     val tied = snap2.orderBy(col("v").desc).limit(7)
     assert(tied.select("v").as[Long].collect().toSeq ===
       Seq(15L, 14L, 13L, 12L, 11L, 10L, 9L))
@@ -3203,7 +3211,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val extra = Seq((500L, "k0500", "v0500", "tx"))
       .toDF("doc_id", "skey", "maybe", "text").coalesce(1)
     TableLog.commit(spark0, root, TableLog.stageWrite(extra, root, "plain"), Nil)
-    val snap3 = TableLogRelation.snapshotDf(spark0, root)
+    val snap3 = TableLog.snapshot(spark0, root)
     val g = snap3.orderBy(col("skey").desc).limit(1)
     assert(g.select("skey").as[String].collect().toSeq === Seq("k0500"))
     assert(keptFiles(g) === 9L, "an uncovered file must disable top-k pruning")
@@ -3211,10 +3219,9 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("MetadataTopK multi-key null ties: a tiebreaker's null rows may " +
       "live in ANY null-bearing file — all of them must survive") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
-    TableLogRelation.enableMetadataTopK(spark0)
     val root = Files.createTempDirectory("graft_tablelog_topk_nt").toString + "/t"
     // file A: 5 null-a rows with the SMALLEST tiebreaker values;
     // file B: 10 null-a rows with larger ones; file C: non-null.
@@ -3230,7 +3237,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         statsCols = Seq("a"))
       TableLog.commit(spark0, root, f, Nil, zmap = zm)
     }
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     val multi = snap.orderBy(col("a"), col("b")).limit(6)
     assert(multi.select("b").as[Long].collect().toSeq ===
       (0L until 6L).toSeq,
@@ -3248,10 +3255,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("MetadataTopK under a filter: the windowed latest-k reads only the " +
       "boundary+cutoff files; strict bounds adjust on discrete kinds; an " +
       "untranslatable conjunct declines; proven-short walks keep all") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
-    TableLogRelation.enableMetadataTopK(spark0)
     val root = Files.createTempDirectory("graft_topk_filt").toString + "/t"
     // 8 files of 100 rows clustered on ts; user carries 10 nulls per
     // file (i % 10 == 0) so the null interplay is exercised
@@ -3261,7 +3267,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "ts", 8,
       statsCols = Seq("user"))
     TableLog.commit(spark0, root, files, Nil, zmap = zm)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // 1) the dashboard probe — latest 20 INSIDE a window: the filter
     //    excludes two files, the walk proves the cutoff inside the
     //    last full file, and only the upper straddler + that file read
@@ -3325,7 +3331,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.commit(spark0, root, f1, Nil, zmap = z1)
     // ground truth: the same aggregates over a real scan of the window
     def scanAgg(lo: Long, hi: Long): Map[String, (Long, Long, String, String, String)] = {
-      val w = TableLog.snapshot(spark0, root)
+      val w = rawSnapshot(root)
         .filter(col("k") >= lo && col("k") <= hi)
       val n = w.count()
       val r = w.agg(
@@ -3401,10 +3407,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("MetadataOnlyAgg through a FILE-ALIGNED filter: the windowed " +
       "aggregate collapses to zero files, coverage is judged per scope, " +
       "straddling windows keep the scan") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
-    TableLogRelation.enableMetadataOnlyAggregates(spark0)
     val dir = Files.createTempDirectory("graft_aligned_agg").toString
     val root = s"$dir/t"
     // one file holding exactly [0, 499] with v covered; four more
@@ -3418,7 +3423,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     mk((0L until 500L).map(i => (i, i % 83)).toDF("k", "v"), "head", 1, Seq("v"))
     mk((500L until 1000L).map(i => (i, i % 83)).toDF("k", "v"), "tail", 4, Seq("v"))
     mk((5000L until 5050L).map(i => (i, i % 83)).toDF("k", "v"), "far", 1, Nil)
-    def snap = TableLogRelation.snapshotDf(spark0, root)
+    def snap = TableLog.snapshot(spark0, root)
     def winAgg(lo: Long, hi: Long) = snap.filter(col("k").between(lo, hi))
       .agg(count(lit(1)).as("n"), count(col("v")).as("nv"),
         min(col("v")).as("mn"), max(col("v")).as("mx"),
@@ -3451,7 +3456,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("float zone maps: pushed literals widen through double — the 1.3f boundary file is never wrongly pruned") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_float").toString + "/t"
@@ -3465,7 +3470,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     TableLog.commit(spark0, root, fA, Nil, zmap = zA)
     val (fB, zB) = TableLog.stageWithZoneMap(mk(14, 20), root, "b", "score", 1)
     TableLog.commit(spark0, root, fB, Nil, zmap = zB)
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     // the boundary probe: `score >= 1.3f` MUST keep file A — a
     // Float.toString literal ("1.3" → double 1.3 > stored max) would
     // wrongly prune it and silently drop the matching doc_id=13 row
@@ -3490,7 +3495,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("OPTIMIZE ZORDER BY: 2-D box and each single dimension prune files; results unchanged") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val root = Files.createTempDirectory("graft_tablelog_zopt").toString + "/t"
@@ -3508,7 +3513,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       parts = 16, zorderWith = Some("gy")) // v2
     val nFiles = TableLog.activeFiles(spark0, root).length
     assert(nFiles >= 8, s"optimize must land multiple files, got $nFiles")
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     def logical(xlo: Long, xhi: Long, ylo: Long, yhi: Long): Long =
       (0L until 4096L).count(i => i % 100 != 0 &&
         i % 64 >= xlo && i % 64 <= xhi &&
@@ -3536,7 +3541,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("snapshotDf bucketBy: point reads scan one bucket dir; driver bucket equals the Column form") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     // the driver-side bucket mirror must agree with the layout's own
@@ -3566,7 +3571,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       TableLog.stageBucketed(base, root, "base", "doc_id", nB), Nil)
     val nFiles = TableLog.activeFiles(spark0, root).length
     assert(nFiles === nB)
-    val snap = TableLogRelation.snapshotDf(spark0, root,
+    val snap = TableLog.snapshot(spark0, root,
       bucketBy = Some(("doc_id", nB)))
     val point = snap.filter(col("doc_id") === 123L)
     assert(point.count() === 1L)
@@ -3580,16 +3585,18 @@ class ScaleOpsSpec extends AnyFunSuite {
     val range = snap.filter(col("doc_id") >= 100L && col("doc_id") <= 105L)
     assert(range.count() === 6L)
     // and without the attestation a point read is merely unpruned
-    val plain = TableLogRelation.snapshotDf(spark0, root)
+    val plain = TableLog.snapshot(spark0, root)
       .filter(col("doc_id") === 123L)
     assert(plain.count() === 1L)
     assert(scannedFiles(plain) === nFiles.toLong)
-    // the merge read-back's relation: onlyBuckets restricts the index
-    // to the touched bucket dirs — the scan's numFiles IS the touched
-    // set, pinned at the read version (what mergeInto reads through)
+    // the merge read-back's relation: readActive restricts the index
+    // to the touched buckets' files — the scan's numFiles IS the
+    // touched set, pinned at the read version (what mergeInto reads
+    // through)
     val touched = Set(3, 7)
-    val rb = TableLogRelation.snapshotDf(spark0, root,
-      asOf = Some(0L), onlyBuckets = Some(touched))
+    val touchedFiles = TableLog.activeFiles(spark0, root, Some(0L))
+      .filter(f => touched.exists(b => f.contains(s"/_gb=$b/")))
+    val rb = TableLog.readActive(spark0, root, Some(0L), touchedFiles)
     assert(scannedFiles(rb) === touched.size.toLong,
       s"bucket-restricted read-back scanned ${scannedFiles(rb)} files")
     assert(rb.count() === base.filter(
@@ -3627,7 +3634,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the ledger already knows every size: v0's bytes_added IS bigLen
     val hist0 = TableLog.history(spark0, root).collect()
     assert(hist0(0).getLong(7) === bigLen)
-    val expect = TableLog.snapshot(spark0, root).orderBy("doc_id")
+    val expect = rawSnapshot(root).orderBy("doc_id")
       .collect().toSeq
     // zone-covered candidates without a keyCol must REFUSE, not
     // silently drop pruning
@@ -3707,7 +3714,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the window — the range face must equal it bit-for-bit
     def scanBank(lo: Long, hi: Long): (Double, Long, Long) = {
       val hx = Sketches.hashHex(col("u"))
-      val r = TableLog.snapshot(spark0, root)
+      val r = rawSnapshot(root)
         .filter(col("k") >= lo && col("k") <= hi)
         .select(Sketches.hllBucket(hx).as("b"), Sketches.hllRho(hx).as("r"))
         .agg(graft.plans.HllRegisters.hllRegisters(
@@ -3759,7 +3766,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       statsCols = Seq("u"), sketchCols = Seq("u"))
     TableLog.commit(spark0, rootS, fS, Nil, zmap = zS)
     val hxS = Sketches.hashHex(col("u"))
-    val expS = TableLog.snapshot(spark0, rootS)
+    val expS = rawSnapshot(rootS)
       .filter(col("sk") >= "k0137" && col("sk") <= "k0861")
       .select(Sketches.hllBucket(hxS).as("b"), Sketches.hllRho(hxS).as("r"))
       .agg(graft.plans.HllRegisters.hllRegisters(
@@ -3789,7 +3796,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // a real scan of the window
     def scanEst(c: String, lo: Long, hi: Long): Double = {
       val hx = Sketches.hashHex(col(c))
-      TableLog.snapshot(spark0, root)
+      rawSnapshot(root)
         .filter(col("k") >= lo && col("k") <= hi)
         .select(Sketches.hllBucket(hx).as("b"), Sketches.hllRho(hx).as("r"))
         .agg(graft.plans.HllRegisters.hllRegisters(
@@ -4200,7 +4207,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("grouped metadata aggregates: a file-aligned GROUP BY collapses " +
       "to zero scans; straddlers and null groups keep the scan") {
-    import graft.operators.{TableLog, TableLogRelation}
+    import graft.operators.TableLog
     val spark0 = spark
     import spark0.implicits._
     val dir = Files.createTempDirectory("graft_tablelog_gagg").toString
@@ -4217,7 +4224,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         statsCols = Seq("amount", "maybe"))
       TableLog.commit(spark0, root, f, Nil, zmap = zm)
     }
-    val snap = TableLogRelation.snapshotDf(spark0, root)
+    val snap = TableLog.snapshot(spark0, root)
     val q = snap.groupBy(col("day"))
       .agg(count(lit(1)).as("n"), count(col("maybe")).as("nn"),
         min(col("amount")).as("lo"), max(col("amount")).as("hi"),
@@ -4246,7 +4253,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (fm, zmm) = TableLog.stageWithZoneMap(mixed, root, "mix", "day", 1,
       statsCols = Seq("amount", "maybe"))
     TableLog.commit(spark0, root, fm, Nil, zmap = zmm)
-    val snap2 = TableLogRelation.snapshotDf(spark0, root)
+    val snap2 = TableLog.snapshot(spark0, root)
     val q2 = snap2.groupBy(col("day")).agg(count(lit(1)).as("n"))
       .orderBy(col("day"))
     assert(q2.collect().map(_.getLong(1)).toSeq === Seq(101L, 101L, 100L))
@@ -4260,7 +4267,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (fn, zn) = TableLog.stageWithZoneMap(nullDf, root2, "b", "day", 1,
       statsCols = Seq("amount"))
     TableLog.commit(spark0, root2, fn, Nil, zmap = zn)
-    val q3 = TableLogRelation.snapshotDf(spark0, root2)
+    val q3 = TableLog.snapshot(spark0, root2)
       .groupBy(col("day")).agg(count(lit(1)).as("n"))
     assert(q3.collect().map(r =>
       Option(r.getDate(0)).map(_.toString).getOrElse("null") -> r.getLong(1))
@@ -4286,8 +4293,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the caller (GraftSql's UPDATE shape) reads at v0 and derives its
     // replacement slice from that pinned snapshot
     val readV = TableLog.versions(spark0, root).last
-    def deriveAt(v: Long) = graft.operators.TableLogRelation
-      .snapshotDf(spark0, root, Some(v))
+    def deriveAt(v: Long) = graft.operators.TableLog
+      .snapshot(spark0, root, Some(v))
       .filter(col("k").between(10L, 20L))
       .withColumn("v", col("v") + 1000L)
     val slice = deriveAt(readV)

@@ -193,7 +193,7 @@ class SqlFaceSpec extends AnyFunSuite {
     val root = freshTable(4)
     val tl = graft.operators.TableLog
     spark.sql(s"CREATE TABLE sqlface_named USING tablelog LOCATION '$root'")
-    // the name serves the SAME planner-pruned relation as snapshotDf
+    // the name serves the SAME planner-pruned relation as TableLog.snapshot
     val byName = spark.table("sqlface_named")
     assert(byName.count() === 300L)
     assert(byName.queryExecution.executedPlan.toString

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.sources.TableLogSource]]): every mode, both time-travel
   * options, zone-map staging through writer options, and the
   * refusals. The read face must be the SAME planner-pruned relation
-  * as snapshotDf — one pruning test proves the path identity. */
+  * as TableLog.snapshot — one pruning test proves the path identity. */
 class TableLogSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val Fmt = "graft.sources.TableLogSource"
@@ -91,7 +91,7 @@ class TableLogSourceSpec extends AnyFunSuite {
       .save(root)
     val snap = spark0.read.format(Fmt).load(root)
     assert(snap.count() === 400L)
-    // pruning through the format face: same FileIndex as snapshotDf
+    // pruning through the format face: same FileIndex as TableLog.snapshot
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -146,9 +146,9 @@ class TableLogSourceSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("delete sidecars"),
       s"got: ${e.getMessage}")
-    // snapshotDf remains the face that applies them
-    assert(graft.operators.TableLogRelation
-      .snapshotDf(spark0, root, idCol = Some("id")).count() === 49L)
+    // TableLog.snapshot remains the face that applies them
+    assert(graft.operators.TableLog
+      .snapshot(spark0, root, idCol = Some("id")).count() === 49L)
     // an APPEND to a table with sidecars in force must SUCCEED and
     // commit exactly once — the write face must not re-run the read
     // face's refusal after its commit already landed (a caller
@@ -157,8 +157,8 @@ class TableLogSourceSpec extends AnyFunSuite {
     Seq((100L, "n")).toDF("id", "v")
       .write.format(Fmt).mode("append").save(root)
     assert(graft.operators.TableLog.versions(spark0, root).max === vBefore + 1)
-    assert(graft.operators.TableLogRelation
-      .snapshotDf(spark0, root, idCol = Some("id")).count() === 50L)
+    assert(graft.operators.TableLog
+      .snapshot(spark0, root, idCol = Some("id")).count() === 50L)
     // mode(ignore) on it is a clean no-op too
     Seq((101L, "x")).toDF("id", "v")
       .write.format(Fmt).mode("ignore").save(root)

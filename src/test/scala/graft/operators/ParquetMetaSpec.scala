@@ -47,10 +47,30 @@ class ParquetMetaSpec extends AnyFunSuite {
     val df = (0L until 400L).map(i => (i, s"t$i")).toDF("id", "text")
     val (files, zm) = TableLog.stageWithZoneMap(df, root, "base", "id", 4)
     TableLog.commit(spark, root, files, Nil, zmap = zm)
-    val (_, nRel) = JobProbe.jobs(spark.sparkContext) {
-      TableLogRelation.snapshotDf(spark, root)
+    val (snap, nRel) = JobProbe.jobs(spark.sparkContext) {
+      TableLog.snapshot(spark, root)
     }
-    assert(nRel === 0, s"snapshotDf construction submitted $nRel jobs")
+    assert(nRel === 0, s"snapshot construction submitted $nRel jobs")
+    // the metadata rules see the snapshot: a count answers from the
+    // zone maps' row counts
+    val (count, nCount) = JobProbe.jobs(spark.sparkContext)(snap.count())
+    assert(count === 400L)
+    assert(nCount === 0, s"snapshot count submitted $nCount jobs")
+    // no declared schema and no zone maps: the schema comes from one
+    // footer on the driver, for a plain and for a bucketed layout
+    val plainRoot = tmp("graft_pm_jobs_plain") + "/t"
+    TableLog.commit(spark, plainRoot,
+      TableLog.stageWrite(df.coalesce(2), plainRoot, "base"), Nil)
+    val bucketRoot = tmp("graft_pm_jobs_bkt") + "/t"
+    TableLog.commit(spark, bucketRoot,
+      TableLog.stageBucketed(df, bucketRoot, "base", "id", 4), Nil)
+    Seq("stageWrite" -> plainRoot, "stageBucketed" -> bucketRoot).foreach {
+      case (layout, r) =>
+        val (s, n) = JobProbe.jobs(spark.sparkContext)(TableLog.snapshot(spark, r))
+        assert(n === 0, s"snapshot construction over a $layout table submitted $n jobs")
+        assert(s.schema.fieldNames.toSeq === Seq("id", "text"), layout)
+        assert(s.count() === 400L, layout)
+    }
     // planning reads the zone maps: the executed plan, then the scan's
     // pruned file listing (which AQE would otherwise defer to the run)
     val ((where, listed), nPlan) = JobProbe.jobs(spark.sparkContext) {
