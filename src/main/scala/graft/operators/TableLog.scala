@@ -25,7 +25,14 @@ import org.apache.spark.sql.graftbridge.ParquetMeta
   *    an insert-only commit names its own adds as its feed instead;
   *  - the snapshot at version V = union of adds minus removes over
   *    entries ≤ V — reading never lists the data directory, only the
-  *    log (O(#commits), not O(#files));
+  *    log (O(#commits), not O(#files)). ONE fold answers "what is true
+  *    at V": [[state]] lists `_log` once, replays the newest checkpoint
+  *    at or below V plus the entries after it, and returns a
+  *    [[LogState]] (active files with their metadata, in-force delete
+  *    sidecars, zone-map refs, schema ref, constraint refs, tags).
+  *    Every reader — snapshot planning, the conflict pins, the
+  *    metadata faces, maintenance — projects from it, and a
+  *    checkpoint is that same state serialized;
   *  - commits are OPTIMISTIC and ATOMIC: the entry body is written to
   *    a temp file and published with an exclusive create-if-absent
   *    (a hard link on file:// — the POSIX claim-with-content
@@ -48,7 +55,9 @@ import org.apache.spark.sql.graftbridge.ParquetMeta
   */
 object TableLog {
 
-  /** One parsed log entry. `tag` is an optional idempotence token —
+  /** One parsed log entry — the step [[state]]'s fold applies (a
+    * checkpoint is parsed by the same reader and read back as a whole
+    * [[LogState]]). `tag` is an optional idempotence token —
     * a streaming committer that might re-run (a micro-batch replayed
     * after a crash) writes its batch identity here and checks
     * [[committedTags]] first, making re-delivery a no-op instead of a
@@ -107,7 +116,7 @@ object TableLog {
     * a fresh table; [[expireLog]] removes entries below a checkpoint,
     * so after expiry this starts at the retention horizon). */
   def versions(spark: SparkSession, root: String): Seq[Long] =
-    versionsIn(fs(spark, root), root)
+    listLog(fs(spark, root), root)._1
 
   /** The LATEST version committed at or before `tsMillis` — Delta's
     * `timestampAsOf` resolution, from the commit files' own
@@ -241,20 +250,20 @@ object TableLog {
 
   def describeDetail(spark: SparkSession, root: String): Seq[org.apache.spark.sql.Row] = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    val v = vs.lastOption.orElse(checkpointVersions(spark, root).lastOption)
-      .getOrElse(sys.error(s"TableLog.describeDetail: empty log at $root"))
-    val files = activeFilesWithMeta(spark, root)
-    val size = files.map { case (p, m) =>
+    // every column from ONE state: a commit landing mid-call must not
+    // report version v with v+1's files
+    val s = state(spark, root)
+    if (s.version < 0) sys.error(s"TableLog.describeDetail: empty log at $root")
+    val size = s.files.map { case (p, m) =>
       parseFileMeta(m).map(_._1).getOrElse(
         f.getFileStatus(new Path(resolve(root, p))).getLen)
     }.sum
     Seq(org.apache.spark.sql.Row(
-      "tablelog", root, v, files.size.toLong, size,
-      activeDeletes(spark, root).size.toLong,
-      activeConstraints(spark, root).size.toLong,
-      activeSchemaRef(spark, root).nonEmpty,
-      vs.size.toLong))
+      "tablelog", root, s.version, s.files.size.toLong, size,
+      s.deletes.size.toLong,
+      constraintsFor(spark, root, s.checks).size.toLong,
+      s.schemaRef.nonEmpty,
+      versions(spark, root).count(_ <= s.version).toLong))
   }
 
   /** Log paths must stay parseable by the line-oriented entry format:
@@ -378,39 +387,36 @@ object TableLog {
     // admission cap (TableChangesSource maxBytesPerTrigger) then
     // weighs a version with zero stat calls
     val cdfMeta = if (cdf == add) addMeta else metaFor(f, root, cdf)
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val pinned = expectActive.nonEmpty || expectDeletes.isDefined ||
+      expectSchema.isDefined || expectChecks.isDefined ||
+      expectNoConflictingAdds.isDefined
     var attempt = 0
     while (attempt < 64) {
-      val v = versions(spark, root).lastOption.getOrElse(-1L) + 1L
-      if (expectActive.nonEmpty || expectDeletes.isDefined ||
-          expectSchema.isDefined || expectChecks.isDefined ||
-          expectNoConflictingAdds.isDefined) {
-        val nowActive =
-          if (v == 0L) Set.empty[String]
-          else activeFiles(spark, root).toSet
-        val gone = expectActive.filterNot(nowActive)
+      // a pinned commit validates against ONE state of the head it
+      // claims after (an empty log folds to the empty state, v0)
+      val head = if (pinned) Some(state(spark, root)) else None
+      val v = head.fold(versions(spark, root).lastOption.getOrElse(-1L))(
+        _.version) + 1L
+      head.foreach { now =>
+        val gone = expectActive.filterNot(now.fileRefs.toSet)
         if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
           s"TableLog.commit: conflict at $root — files read by this " +
             s"rewrite were replaced by a concurrent commit (e.g. " +
             s"${gone.head}); re-read the table and re-derive")
         expectDeletes.foreach { expected =>
-          val now =
-            if (v == 0L) Seq.empty[String]
-            else activeDeletes(spark, root)
-          if (now.toSet != expected.toSet)
+          if (now.deletes.toSet != expected.toSet)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the delete-sidecar " +
                 s"set changed since this rewrite's read (read through " +
-                s"${expected.size}, now ${now.size}); committing it " +
+                s"${expected.size}, now ${now.deletes.size}); committing it " +
                 "would resurrect or cancel deletes. Re-read and re-derive")
         }
         expectSchema.foreach { expected =>
-          val now =
-            if (v == 0L) None else activeSchemaRef(spark, root)
-          if (now != expected)
+          if (now.schemaRef != expected)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the table schema " +
-                s"changed since this writer's read ($expected -> $now); " +
+                s"changed since this writer's read ($expected -> " +
+                s"${now.schemaRef}); " +
                 "a schema derived from the stale shape would silently " +
                 "hide the other evolution's columns. Re-read and re-derive")
         }
@@ -418,14 +424,11 @@ object TableLog {
           // a checked writer validated its batch against the
           // constraint set it read; a constraint added or dropped
           // since would let the batch land un(re)validated
-          val now =
-            if (v == 0L) Seq.empty[String]
-            else activeCheckRefs(f, root, None)
-          if (now.toSet != expected.toSet)
+          if (now.checks.toSet != expected.toSet)
             throw new java.util.ConcurrentModificationException(
               s"TableLog.commit: conflict at $root — the constraint set " +
                 s"changed since this writer's validation (read through " +
-                s"${expected.size} refs, now ${now.size}); the batch " +
+                s"${expected.size} refs, now ${now.checks.size}); the batch " +
                 "must re-validate. Re-read and re-derive")
         }
         expectNoConflictingAdds.foreach { case (readV, conflicts) =>
@@ -443,12 +446,12 @@ object TableLog {
       val reset = if (resetDeletes) 1 else 0
       val tagPart = tag.fold("")(t => s""","tag":"$t"""") +
         op.fold("")(o => s""","op":"$o"""")
-      val body = s"""{"version":$v,"reset":$reset,"add":${arr(add)},""" +
-        s""""addmeta":${arr(addMeta)},""" +
-        s""""remove":${arr(remove)},"deletes":${arr(deletes)},""" +
-        s""""cdf":${arr(cdf)},"cdfmeta":${arr(cdfMeta)},""" +
-        s""""zmap":${arr(zmap)},""" +
-        s""""schema":${arr(schema)},"checks":${arr(checks)}$tagPart}"""
+      val body = s"""{"version":$v,"reset":$reset,"add":${jsonArr(add)},""" +
+        s""""addmeta":${jsonArr(addMeta)},""" +
+        s""""remove":${jsonArr(remove)},"deletes":${jsonArr(deletes)},""" +
+        s""""cdf":${jsonArr(cdf)},"cdfmeta":${jsonArr(cdfMeta)},""" +
+        s""""zmap":${jsonArr(zmap)},""" +
+        s""""schema":${jsonArr(schema)},"checks":${jsonArr(checks)}$tagPart}"""
       val p = entryPath(root, v)
       // The version claim goes through the [[LogStore]] seam: atomic
       // create-if-absent per scheme (POSIX hard link, HDFS exclusive
@@ -533,48 +536,126 @@ object TableLog {
 
   /** The idempotence tags of every committed entry — a replay-prone
     * committer ([[graft.streaming.TableIngest]]) checks membership
-    * before committing its batch. O(#commits) log reads, driver-side
-    * metadata like every other log operation. Tags of entries expired
-    * below a checkpoint survive IN the checkpoint, so the
-    * exactly-once guarantee outlives log truncation. */
-  def committedTags(spark: SparkSession, root: String): Set[String] = {
-    val f = fs(spark, root)
-    val cpTags = checkpoints(f, root)
-      .flatMap(v => readCheckpoint(f, root, v).tags)
-    (cpTags ++ versions(spark, root)
-      .flatMap(v => readEntry(f, entryPath(root, v)).tag)).toSet
+    * before committing its batch. A projection of the latest
+    * [[state]]: O(#entries since the last checkpoint) driver-side log
+    * reads. Tags of entries expired below a checkpoint survive IN the
+    * checkpoint, so the exactly-once guarantee outlives log
+    * truncation. */
+  def committedTags(spark: SparkSession, root: String): Set[String] =
+    state(spark, root).tags.toSet
+
+  /** The table at one version — what [[state]]'s fold returns and
+    * every reader projects from: the active files with their
+    * commit-time metadata ([[LogEntry.addMeta]] format, `-` =
+    * unknown) in replay order; the delete sidecars in force (net of
+    * resets); every zone-map ref the replayed checkpoint and entries
+    * carry, first occurrence first (readers existence-filter them —
+    * [[vacuum]] reclaims maps whose data is gone); the schema ref in
+    * force; the constraint-change refs in version order; and the
+    * idempotence tags. A checkpoint is this value serialized
+    * ([[writeCheckpoint]]). `version` is -1 for a log with neither an
+    * entry nor a checkpoint. */
+  private[graft] final case class LogState(version: Long,
+      files: Seq[(String, String)], deletes: Seq[String],
+      zmaps: Seq[String], schemaRef: Option[String],
+      checks: Seq[String], tags: Seq[String]) {
+    /** The active file refs (root-relative), in replay order. */
+    def fileRefs: Seq[String] = files.map(_._1)
   }
 
-  /** Folded log state at one version — what a reader needs to serve
-    * reads from that version onward without replaying older entries. */
-  final case class Checkpoint(version: Long, files: Seq[String],
-                              deletes: Seq[String], zmap: Seq[String],
-                              tags: Seq[String],
-                              schema: Option[String],
-                              checks: Seq[String],
-                              filesMeta: Seq[String] = Nil)
+  private val emptyState = LogState(-1L, Nil, Nil, Nil, None, Nil, Nil)
+
+  /** The fold step, applied entry by entry in version order on top of
+    * a base state (a checkpoint, or the empty state). Re-adding an
+    * active path keeps its position (LinkedHashMap); a deletes-RESET
+    * drops the sidecars before it ([[compactTable]]); the LAST
+    * schema-carrying entry wins; constraint refs and tags
+    * accumulate. */
+  private final class Fold(base: LogState) {
+    import scala.collection.mutable
+    private var version = base.version
+    private val files = mutable.LinkedHashMap.from(base.files)
+    private var deletes = base.deletes
+    private val zmaps = mutable.LinkedHashSet.from(base.zmaps)
+    private var schemaRef = base.schemaRef
+    private val checks = mutable.ArrayBuffer.from(base.checks)
+    private val tags = mutable.ArrayBuffer.from(base.tags)
+
+    def apply(e: LogEntry): Unit = {
+      version = e.version
+      e.remove.foreach(files -= _)
+      files ++= withMeta(e)
+      deletes = (if (e.reset) Nil else deletes) ++ e.deletes
+      zmaps ++= e.zmap
+      schemaRef = e.schema.headOption.orElse(schemaRef)
+      checks ++= e.checks
+      tags ++= e.tag
+    }
+
+    def nonEmpty: Boolean = files.nonEmpty
+    def fileRefs: Seq[String] = files.keys.toSeq
+    def result: LogState = LogState(version, files.toSeq, deletes,
+      zmaps.toSeq, schemaRef, checks.toSeq, tags.toSeq)
+  }
+
+  /** An entry's adds paired with their metadata: `-` for every add
+    * when the meta list is absent or misaligned (an entry written
+    * before the field existed). */
+  private def withMeta(e: LogEntry): Seq[(String, String)] =
+    e.add.zip(
+      if (e.addMeta.length == e.add.length) e.addMeta else e.add.map(_ => "-"))
+
+  /** THE fold of the log: the table's [[LogState]] at `asOf` (default:
+    * latest). One `_log` listing serves both the entry versions and
+    * the checkpoints; [[replayPlan]] picks the newest checkpoint at or
+    * below `asOf` plus the entries after it, and each of those is read
+    * once. An expired version fails loudly (replayPlan's contract); a
+    * log with neither an entry nor a checkpoint folds to the empty
+    * state (version -1), which the projections serve as their
+    * empty-log answers. */
+  private[graft] def state(spark: SparkSession, root: String,
+                           asOf: Option[Long] = None): LogState = {
+    val f = fs(spark, root)
+    val (vs, cps) = listLog(f, root)
+    if (vs.isEmpty && cps.isEmpty) return emptyState
+    val (cp, replay) = replayPlan(root, vs, cps, asOf)
+    val fold = new Fold(cp.fold(emptyState)(readCheckpoint(f, root, _)))
+    replay.foreach(v => fold(readEntry(f, entryPath(root, v))))
+    fold.result
+  }
+
+  /** One listing of `_log`: (entry versions, checkpoint versions),
+    * each ascending, both empty for a fresh table. */
+  private def listLog(f: FileSystem, root: String): (Seq[Long], Seq[Long]) = {
+    val listed =
+      try f.listStatus(new Path(logDir(root))).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    def named(ext: String) = listed
+      .filter(s => s.getPath.getName.endsWith(ext) && s.getLen > 0)
+      .map(_.getPath.getName.stripSuffix(ext).toLong).sorted
+    (named(".json"), named(".ckpt"))
+  }
 
   private def checkpointPath(root: String, v: Long) =
     new Path(s"${logDir(root)}/$v.ckpt")
 
   /** Checkpoint versions present, ascending. */
   def checkpointVersions(spark: SparkSession, root: String): Seq[Long] =
-    checkpoints(fs(spark, root), root)
+    listLog(fs(spark, root), root)._2
 
-  private def checkpoints(f: FileSystem, root: String): Seq[Long] = {
-    val dir = new Path(logDir(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".ckpt") && s.getLen > 0)
-      .map(_.getPath.getName.stripSuffix(".ckpt").toLong).sorted
-  }
-
+  /** A checkpoint read back as the [[LogState]] it serialized: the
+    * entry line format, with `add`/`addmeta` carrying the files and
+    * `cdf` the tags ([[writeCheckpoint]] writes the same mapping). */
   private def readCheckpoint(f: FileSystem, root: String,
-                             v: Long): Checkpoint = {
-    val e = readEntry(f, checkpointPath(root, v)) // same line format
-    Checkpoint(e.version, e.add, e.deletes, e.zmap, e.cdf,
-      e.schema.headOption, e.checks, e.addMeta)
+                             v: Long): LogState = {
+    val e = readEntry(f, checkpointPath(root, v))
+    LogState(e.version, withMeta(e), e.deletes, e.zmap, e.schema.headOption,
+      e.checks, e.cdf)
   }
+
+  /** `["a","b"]` — the entry line format's string arrays. */
+  private def jsonArr(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   /** FOLD the whole log into one checkpoint file `_log/<V>.ckpt` at
     * the latest version V — the O(1) read entry point that caps the
@@ -582,52 +663,38 @@ object TableLog {
     * [[snapshot]] replays all entries (O(#commits) driver file reads
     * — thousands after a month of streaming commits); with it,
     * readers load the fold and apply only entries AFTER it. The
-    * checkpoint carries active files, in-force delete sidecars (net
-    * of resets), zone-map paths, and all idempotence tags, so every
-    * read path and the exactly-once ingest contract survive a
-    * subsequent [[expireLog]]. Idempotent: checkpointing an
-    * already-checkpointed version is a no-op. Returns V. */
+    * checkpoint is [[state]] at V serialized: active files with their
+    * metadata, in-force delete sidecars (net of resets), the zone-map
+    * refs still on disk, the schema ref, the constraint refs and all
+    * idempotence tags (sorted), so every read path and the
+    * exactly-once ingest contract survive a subsequent [[expireLog]].
+    * Idempotent: checkpointing an already-checkpointed version is a
+    * no-op. Returns V. */
   def writeCheckpoint(spark: SparkSession, root: String): Long = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"TableLog.writeCheckpoint: empty log at $root")
-    val v = vs.last
-    val p = checkpointPath(root, v)
-    if (f.exists(p)) return v
-    val filesMeta = activeFilesWithMeta(spark, root, Some(v))
-    val files = filesMeta.map(_._1)
-    val dels = activeDeletes(spark, root, Some(v))
-    val entries = vs.map(x => readEntry(f, entryPath(root, x)))
-    val zmaps = (checkpoints(f, root).flatMap(c =>
-        readCheckpoint(f, root, c).zmap) ++ entries.flatMap(_.zmap))
-      .distinct.filter(rel => f.exists(new Path(resolve(root, rel))))
-    val tags = committedTags(spark, root).toSeq.sorted
-    tags.foreach(t => validatePaths(Seq(t)))
-    val sch = activeSchemaRef(spark, root, Some(v)).toSeq
-    // constraint refs fold IN VERSION ORDER (their semantics are
-    // last-wins by name, so the fold is the concatenation); entries
-    // AT or BELOW the previous checkpoint are already inside its
-    // fold — re-appending them would double the list per checkpoint
-    // cycle (exponential growth when expireLog lags)
-    val prevCp = checkpoints(f, root).lastOption
-    val cks = prevCp.toSeq
-      .flatMap(c => readCheckpoint(f, root, c).checks) ++
-      entries.filter(e => prevCp.forall(e.version > _)).flatMap(_.checks)
-    // serialize through the ENTRY line format (add=files, cdf=tags)
-    // so one parser serves both artifact kinds
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val body = s"""{"version":$v,"reset":0,"add":${arr(files)},""" +
-      s""""addmeta":${arr(filesMeta.map(_._2))},""" +
-      s""""remove":[],"deletes":${arr(dels)},""" +
-      s""""cdf":${arr(tags)},"zmap":${arr(zmaps)},"schema":${arr(sch)},""" +
-      s""""checks":${arr(cks)}}"""
+    val s = state(spark, root)
+    require(s.version >= 0, s"TableLog.writeCheckpoint: empty log at $root")
+    val p = checkpointPath(root, s.version)
+    if (f.exists(p)) return s.version
+    val tags = s.tags.distinct.sorted
+    validatePaths(tags)
+    val zmaps = liveZmaps(f, root, s)
+    // the ENTRY line format (add=files, cdf=tags), so one parser
+    // serves both artifact kinds
+    val body = s"""{"version":${s.version},"reset":0,""" +
+      s""""add":${jsonArr(s.fileRefs)},""" +
+      s""""addmeta":${jsonArr(s.files.map(_._2))},""" +
+      s""""remove":[],"deletes":${jsonArr(s.deletes)},""" +
+      s""""cdf":${jsonArr(tags)},"zmap":${jsonArr(zmaps)},""" +
+      s""""schema":${jsonArr(s.schemaRef.toSeq)},""" +
+      s""""checks":${jsonArr(s.checks)}}"""
     val tmp = new Path(s"${logDir(root)}/.ckpt-tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, false)
     try { out.write(body.getBytes("UTF-8")) } finally out.close()
     // losing a race to another checkpointer is fine: same version,
     // same folded content
     if (!f.rename(tmp, p)) f.delete(tmp, false)
-    v
+    s.version
   }
 
   /** TRUNCATE the log: delete entry files STRICTLY BELOW checkpoint
@@ -648,20 +715,19 @@ object TableLog {
     doomed
   }
 
-  /** The ACTIVE file set (root-relative) at `asOf` (default: latest). */
-  /** The replay plan for a read at `asOf`: the largest checkpoint at
-    * or below it (if any) plus the CONTIGUOUS entry versions after it
-    * up to `asOf`. Fails loudly when [[expireLog]] removed entries
-    * the read would need — an expired version must error, never
-    * silently under-read. */
-  private def replayPlan(f: FileSystem, root: String,
+  /** The replay plan for a read at `asOf` over one `_log` listing
+    * (`vs` entry versions, `cps` checkpoint versions — [[state]]'s
+    * listing): the largest checkpoint at or below `asOf` (if any) plus
+    * the CONTIGUOUS entry versions after it up to `asOf`. Fails loudly
+    * when [[expireLog]] removed entries the read would need — an
+    * expired version must error, never silently under-read. */
+  private def replayPlan(root: String, vs: Seq[Long], cps: Seq[Long],
                          asOf: Option[Long]): (Option[Long], Seq[Long]) = {
-    val vs = versionsIn(f, root)
     val upTo = asOf.fold(vs)(v => vs.filter(_ <= v))
-    val cp = checkpoints(f, root).filter(cv => asOf.forall(cv <= _))
-      .lastOption
+    val cp = cps.filter(cv => asOf.forall(cv <= _)).lastOption
     // the largest EXISTING entry ≤ asOf. When no entry survives, a
-    // checkpoint may stand in ONLY for its own exact version: a later
+    // checkpoint may stand in ONLY for its own exact version (or, for
+    // a latest read, as the latest version): a later
     // expireLog deletes an earlier checkpoint's entry too, so for an
     // asOf strictly INSIDE the expired gap between two checkpoints
     // (ckpt@5 and ckpt@10 on disk, asOf=7 after expireLog(10)) the
@@ -669,7 +735,7 @@ object TableLog {
     // expired-version-must-error contract requires the loud failure
     // below instead
     val target = upTo.lastOption
-      .orElse(cp.filter(cv => asOf.contains(cv)))
+      .orElse(cp.filter(cv => asOf.forall(_ == cv)))
     require(target.nonEmpty,
       if (cp.nonEmpty)
         s"TableLog: read at $root asOf=$asOf falls in an EXPIRED gap — " +
@@ -688,44 +754,12 @@ object TableLog {
     (cp, needed)
   }
 
-  private def versionsIn(f: FileSystem, root: String): Seq[Long] = {
-    val dir = new Path(logDir(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".json") && s.getLen > 0)
-      .map(_.getPath.getName.stripSuffix(".json").toLong).sorted
-  }
-
+  /** The ACTIVE file set (root-relative) at `asOf` (default: latest). */
   def activeFiles(spark: SparkSession, root: String,
-                  asOf: Option[Long] = None): Seq[String] =
-    activeFilesWithMeta(spark, root, asOf).map(_._1)
-
-  /** The active file set at `asOf` WITH each file's commit-time
-    * metadata string ([[LogEntry.addMeta]] format; `-` = unknown —
-    * pre-format entries or a writer that could not stat). Same replay
-    * and the same ordering as [[activeFiles]]; this is the zero-stat
-    * planning path [[TableLogFileIndex]] builds from. */
-  private[operators] def activeFilesWithMeta(spark: SparkSession,
-      root: String, asOf: Option[Long] = None): Seq[(String, String)] = {
-    val f = fs(spark, root)
-    val (cp, replay) = replayPlan(f, root, asOf)
-    // LinkedHashMap: re-adding an existing path keeps its position,
-    // matching the LinkedHashSet order semantics this replay always had
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(files: Seq[String], meta: Seq[String]): Unit = {
-      val ms = if (meta.length == files.length) meta
-               else files.map(_ => "-")
-      files.zip(ms).foreach { case (p, m) => active(p) = m }
-    }
-    cp.foreach { cv =>
-      val c = readCheckpoint(f, root, cv); fold(c.files, c.filesMeta)
-    }
-    replay.foreach { v =>
-      val e = readEntry(f, entryPath(root, v))
-      e.remove.foreach(active -= _)
-      fold(e.add, e.addMeta)
-    }
-    active.toSeq
+                  asOf: Option[Long] = None): Seq[String] = {
+    val s = state(spark, root, asOf)
+    require(s.version >= 0, s"TableLog: no committed version at $root asOf=$asOf")
+    s.fileRefs
   }
 
   /** The delete-sidecar files (root-relative) in force at `asOf` —
@@ -735,20 +769,8 @@ object TableLog {
     * checkpoint's delete list is already net of resets at its
     * version; a reset AFTER the checkpoint drops it. */
   def activeDeletes(spark: SparkSession, root: String,
-                    asOf: Option[Long] = None): Seq[String] = {
-    val f = fs(spark, root)
-    if (versions(spark, root).isEmpty && checkpoints(f, root).isEmpty)
-      return Seq.empty
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val later = replay.map(v => readEntry(f, entryPath(root, v)))
-    val lastReset = later.filter(_.reset).map(_.version).sorted.lastOption
-    lastReset match {
-      case Some(r) => later.filter(_.version >= r).flatMap(_.deletes)
-      case None =>
-        cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).deletes) ++
-          later.flatMap(_.deletes)
-    }
-  }
+                    asOf: Option[Long] = None): Seq[String] =
+    state(spark, root, asOf).deletes
 
   /** ROW-LEVEL delete without rewriting a single data file — the
     * deletion-vector idea at id granularity: the doomed ids land as a
@@ -777,15 +799,14 @@ object TableLog {
     // list, and the conflict expectation must all describe the same
     // log state, or a commit racing between two un-pinned reads
     // slips through the guard
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.compactTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
+    val read = state(spark, root)
+    if (read.version < 0) sys.error(s"TableLog.compactTable: empty log at $root")
+    val (readV, readFiles) = (read.version, read.fileRefs)
     val current = snapshot(spark, root, Some(readV), Some(idCol))
     val fresh = stageWrite(current, root, name)
     commit(spark, root, add = fresh,
       remove = readFiles, resetDeletes = true, op = Some("COMPACT"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
+      expectActive = readFiles, expectDeletes = Some(read.deletes),
       expectNoConflictingAdds = Some((readV, _ => true)))
   }
 
@@ -816,16 +837,15 @@ object TableLog {
                     statsCols: Seq[String] = Nil,
                     zorderWith: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.optimizeTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
+    val read = state(spark, root)
+    if (read.version < 0) sys.error(s"TableLog.optimizeTable: empty log at $root")
+    val (readV, readFiles) = (read.version, read.fileRefs)
     val current = snapshot(spark, root, Some(readV), Some(idCol))
     // a full rewrite must not LOSE stats coverage: re-declare every
     // column the outgoing generation's zone rows covered (the same
     // rule as the deleteWhere/replaceWhere boundary rewrites), plus
     // any newly requested statsCols
-    val zonesRead = collectZoneRows(spark, root, Some(readV))
+    val zonesRead = collectZoneRows(spark, root, read)
     val inherited = rewriteStatsCols(zonesRead, readFiles, keyCol,
       current.columns.toSeq)
     val inheritedSketch = rewriteSketchCols(zonesRead, readFiles,
@@ -866,7 +886,7 @@ object TableLog {
     commit(spark, root, add = files,
       remove = readFiles, resetDeletes = true, zmap = zm,
       op = Some("OPTIMIZE"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
+      expectActive = readFiles, expectDeletes = Some(read.deletes),
       expectNoConflictingAdds = Some((readV, _ => true)))
   }
 
@@ -905,17 +925,19 @@ object TableLog {
       s"TableLog.compactSmallFiles: targetBytes must be positive, got $targetBytes")
     val threshold = minFileBytes.getOrElse(math.max(1L, targetBytes / 2))
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.compactSmallFiles: empty log at $root"))
+    val read = state(spark, root)
+    if (read.version < 0)
+      sys.error(s"TableLog.compactSmallFiles: empty log at $root")
+    val readV = read.version
     val sized: Seq[(String, Long)] =
-      activeFilesWithMeta(spark, root, Some(readV)).map { case (p, m) =>
+      read.files.map { case (p, m) =>
         p -> parseFileMeta(m).map(_._1).getOrElse(
           f.getFileStatus(new Path(resolve(root, p))).getLen)
       }
     val candidates = sized.filter(_._2 < threshold)
     if (candidates.length < 2) return readV
     val candidatePaths = candidates.map(_._1)
-    val zones = collectZoneRows(spark, root, Some(readV))
+    val zones = collectZoneRows(spark, root, read)
     val candidateSet = candidatePaths.toSet
     val hasStats = zones.exists(z => candidateSet(z.file))
     require(!hasStats || keyCol.isDefined,
@@ -957,40 +979,27 @@ object TableLog {
                   schema: org.apache.spark.sql.types.StructType): String =
     stageJsonSidecar(fs(spark, root), root, "schema", name, schema.json)
 
-  /** The schema ref in force at `asOf`: the LAST schema-carrying
-    * commit at or before it (checkpoints fold the in-force ref, so
-    * evolution survives log expiry). None = pre-evolution table
-    * (readers take the files' own uniform schema). */
-  def activeSchemaRef(spark: SparkSession, root: String,
-                      asOf: Option[Long] = None): Option[String] = {
-    val f = fs(spark, root)
-    // never-evolved fast path: every snapshot consults the schema, so
-    // a table without a schema/ dir must answer in ONE exists() call,
-    // not an O(#commits) log replay (stageSchema creates the dir
-    // before any entry can reference a ref, so absent dir ⇒ no ref)
-    if (!f.exists(new Path(s"$root/schema"))) return None
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return None
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val later = replay
-      .flatMap(v => readEntry(f, entryPath(root, v)).schema.headOption)
-    later.lastOption.orElse(
-      cp.flatMap(cv => readCheckpoint(f, root, cv).schema))
-  }
-
   private def readSchemaFile(f: FileSystem, root: String,
                              rel: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType
       .fromJson(readFully(f, new Path(resolve(root, rel))))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
+  /** The schema `s` declares — its in-force schema ref (the LAST
+    * schema-carrying commit at or before its version; checkpoints fold
+    * it, so evolution survives log expiry) read — or None for a
+    * pre-evolution table (readers take the files' own uniform
+    * schema). */
+  private[operators] def schemaOf(spark: SparkSession, root: String,
+      s: LogState): Option[org.apache.spark.sql.types.StructType] =
+    s.schemaRef.map(readSchemaFile(fs(spark, root), root, _))
+
   /** The schema in force at `asOf`, or None for a pre-evolution
     * table. */
   def logSchema(spark: SparkSession, root: String,
                 asOf: Option[Long] = None
                ): Option[org.apache.spark.sql.types.StructType] =
-    activeSchemaRef(spark, root, asOf)
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
+    schemaOf(spark, root, state(spark, root, asOf))
 
   /** CHECK CONSTRAINTS (the Delta `ALTER TABLE ADD CONSTRAINT CHECK`
     * shape): a named boolean SQL expression every row of every
@@ -1008,28 +1017,18 @@ object TableLog {
     * unvalidated). Raw [[commit]] does not re-validate (the protocol
     * trusts checked writers — same as Delta); constraints are
     * table-level metadata, so [[restoreTable]] leaves them in force
-    * (a restore undoes DATA, not the rules guarding future writes). */
-  /** The constraint-change refs readable at `asOf`, in version order
-    * (the fold input of [[activeConstraints]], and the read-set a
-    * [[checkedAppend]] pins via [[commit]]'s `expectChecks`). */
-  private def activeCheckRefs(f: FileSystem, root: String,
-                              asOf: Option[Long]): Seq[String] = {
-    if (!f.exists(new Path(s"$root/constraints"))) return Seq.empty
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return Seq.empty
-    val (cp, replay) = replayPlan(f, root, asOf)
-    cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).checks) ++
-      replay.flatMap(v => readEntry(f, entryPath(root, v)).checks)
-  }
-
-  /** The constraint-change refs in force (public form of the fold
-    * input): the read-set an external checked writer — e.g.
+    * (a restore undoes DATA, not the rules guarding future writes).
+    *
+    * This returns the constraint-change refs readable at `asOf`, in
+    * version order ([[LogState.checks]]): the fold input of
+    * [[activeConstraints]], and the read-set a checked writer —
+    * [[checkedAppend]], or an external one like
     * [[graft.streaming.CheckedIngest]] — pins via [[commit]]'s
     * `expectChecks` so its validation can't go stale between split
     * and claim. */
   def constraintRefs(spark: SparkSession, root: String,
                      asOf: Option[Long] = None): Seq[String] =
-    activeCheckRefs(fs(spark, root), root, asOf)
+    state(spark, root, asOf).checks
 
   /** Fold an explicit ref list into the in-force name→expr map — the
     * refs-first form lets a checked writer read the log ONCE (refs
@@ -1052,8 +1051,7 @@ object TableLog {
 
   def activeConstraints(spark: SparkSession, root: String,
                         asOf: Option[Long] = None): Map[String, String] =
-    constraintsFor(spark, root,
-      activeCheckRefs(fs(spark, root), root, asOf))
+    constraintsFor(spark, root, constraintRefs(spark, root, asOf))
 
   /** The version whose entry carries idempotence tag `tag`, if its
     * entry is still live (expired entries' tags survive only in the
@@ -1105,8 +1103,10 @@ object TableLog {
       s"TableLog.addCheckConstraint: no double quotes in expr ($expr) — " +
         "use SQL single quotes for string literals")
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.addCheckConstraint: empty log at $root"))
+    val read = state(spark, root)
+    if (read.version < 0)
+      sys.error(s"TableLog.addCheckConstraint: empty log at $root")
+    val readV = read.version
     // the SAME three-valued rule as checkedAppend: a NULL evaluation
     // is NOT satisfied, so existing NULL-evaluating rows refuse the
     // declaration (else the table would sit committed in a state its
@@ -1125,7 +1125,7 @@ object TableLog {
     // slip past it either
     commit(spark, root, add = Nil, remove = Nil, checks = Seq(rel),
       op = Some("ADD_CONSTRAINT"),
-      expectDeletes = Some(activeDeletes(spark, root, Some(readV))),
+      expectDeletes = Some(read.deletes),
       expectNoConflictingAdds = Some((readV, _ => true)))
   }
 
@@ -1155,7 +1155,7 @@ object TableLog {
     // is validated against) and the `expectChecks` pin (what the
     // commit requires unchanged) — reading them twice could validate
     // against a newer set than the pin and conflict spuriously
-    val readRefs = activeCheckRefs(fs(spark, root), root, None)
+    val readRefs = constraintRefs(spark, root)
     val cs = constraintsFor(spark, root, readRefs).toSeq.sortBy(_._1)
     if (cs.nonEmpty) {
       val counts = df.select(cs.map { case (n, e) =>
@@ -1176,6 +1176,19 @@ object TableLog {
       op = Some("CHECKED_APPEND"), expectChecks = Some(readRefs))
   }
 
+  /** The latest schema ref and the schema a widening derives from —
+    * the declared one, else the active files' own (one footer read;
+    * `noFiles` refuses a table with neither) — both from ONE state, so
+    * the ref a writer pins (`expectSchema`) is the one it widened. */
+  private def headSchema(spark: SparkSession, root: String, noFiles: String)
+      : (Option[String], org.apache.spark.sql.types.StructType) = {
+    val s = state(spark, root)
+    (s.schemaRef, schemaOf(spark, root, s).getOrElse {
+      require(s.files.nonEmpty, noFiles)
+      ParquetMeta.schema(spark, s.fileRefs.map(resolve(root, _)): _*)
+    })
+  }
+
   /** ADD-COLUMNS-AND-APPEND in one atomic commit: `df` may carry
     * columns the table has never seen; the committed schema becomes
     * table-schema ∪ df-schema (overlapping names must type-match —
@@ -1191,15 +1204,8 @@ object TableLog {
     // evolutions would otherwise each widen the SAME base and the
     // later commit would silently hide the earlier one's columns —
     // the commit conflicts (expectSchema) instead
-    val refAtRead = activeSchemaRef(spark, root)
-    val cur = refAtRead
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
-      .getOrElse {
-        val files = activeFiles(spark, root)
-        require(files.nonEmpty,
-          s"TableLog.evolveAppend: $root has no active files to evolve from")
-        ParquetMeta.schema(spark, files.map(resolve(root, _)): _*)
-      }
+    val (refAtRead, cur) = headSchema(spark, root,
+      s"TableLog.evolveAppend: $root has no active files to evolve from")
     val byName = cur.map(fld => fld.name -> fld).toMap
     df.schema.foreach { fld =>
       byName.get(fld.name).foreach { old =>
@@ -1242,16 +1248,9 @@ object TableLog {
                  name: String = "alter",
                  tag: Option[String] = None): Long = {
     require(cols.nonEmpty, "TableLog.addColumns: no columns to add")
-    val refAtRead = activeSchemaRef(spark, root)
-    val cur = refAtRead
-      .map(rel => readSchemaFile(fs(spark, root), root, rel))
-      .getOrElse {
-        val files = activeFiles(spark, root)
-        require(files.nonEmpty,
-          s"TableLog.addColumns: $root has no schema ref and no active " +
-            "files — nothing to derive the current schema from")
-        ParquetMeta.schema(spark, files.map(resolve(root, _)): _*)
-      }
+    val (refAtRead, cur) = headSchema(spark, root,
+      s"TableLog.addColumns: $root has no schema ref and no active " +
+        "files — nothing to derive the current schema from")
     // CASE-INSENSITIVE collision check (Delta's rule): Spark resolves
     // case-insensitively by default, so committing both `text` and
     // `TEXT` would make every later SELECT fail AMBIGUOUS_REFERENCE —
@@ -1281,14 +1280,13 @@ object TableLog {
     * silently deleting them. Returns the new version. */
   def truncateTable(spark: SparkSession, root: String,
                     tag: Option[String] = None): Long = {
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.truncateTable: empty log at $root"))
-    val readFiles = activeFiles(spark, root, Some(readV))
-    val readDels = activeDeletes(spark, root, Some(readV))
-    commit(spark, root, add = Nil, remove = readFiles,
+    val read = state(spark, root)
+    if (read.version < 0)
+      sys.error(s"TableLog.truncateTable: empty log at $root")
+    commit(spark, root, add = Nil, remove = read.fileRefs,
       resetDeletes = true, tag = tag, op = Some("TRUNCATE"),
-      expectActive = readFiles, expectDeletes = Some(readDels),
-      expectNoConflictingAdds = Some((readV, _ => true)))
+      expectActive = read.fileRefs, expectDeletes = Some(read.deletes),
+      expectNoConflictingAdds = Some((read.version, _ => true)))
   }
 
   /** RESTORE: roll the table BACK to the content of version `toV` as
@@ -1307,27 +1305,27 @@ object TableLog {
   def restoreTable(spark: SparkSession, root: String, toV: Long,
                    tag: Option[String] = None): Long = {
     val f = fs(spark, root)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.restoreTable: empty log at $root"))
+    val cur = state(spark, root)
+    if (cur.version < 0) sys.error(s"TableLog.restoreTable: empty log at $root")
+    val readV = cur.version
     require(toV <= readV,
       s"TableLog.restoreTable: version $toV is not committed (latest $readV)")
-    val target = activeFiles(spark, root, Some(toV))
-    val targetDels = activeDeletes(spark, root, Some(toV))
+    val at = state(spark, root, Some(toV))
+    val (target, targetDels) = (at.fileRefs, at.deletes)
     // the restored head must be FULLY servable: data files, delete
     // sidecars, AND the schema ref it re-declares — vacuum keeps only
     // the refs retained versions read, so any of the three can be
     // gone (a superseded schema ref included)
-    val targetSchema = activeSchemaRef(spark, root, Some(toV))
+    val targetSchema = at.schemaRef
     val missing = (target ++ targetDels ++ targetSchema)
       .filterNot(rel => f.exists(new Path(resolve(root, rel))))
     require(missing.isEmpty,
       s"TableLog.restoreTable: version $toV is not restorable — vacuum " +
         s"reclaimed ${missing.size} of its files (e.g. ${missing.head})")
-    val current = activeFiles(spark, root, Some(readV))
-    val currentDels = activeDeletes(spark, root, Some(readV))
+    val current = cur.fileRefs
     val schemaSeq = targetSchema match {
       case Some(ref) => Seq(ref) // re-declare toV's ref (last one wins)
-      case None if activeSchemaRef(spark, root, Some(readV)).isDefined =>
+      case None if cur.schemaRef.isDefined =>
         // rolling back PAST an evolution: the format has no schema
         // tombstone, so re-declare toV's file schema explicitly or the
         // post-toV evolution's ref would stay in force and the
@@ -1358,20 +1356,33 @@ object TableLog {
       remove = current.filterNot(target.toSet),
       deletes = targetDels, resetDeletes = true, op = Some("RESTORE"),
       tag = tag, schema = schemaSeq,
-      expectActive = current, expectDeletes = Some(currentDels),
+      expectActive = current, expectDeletes = Some(cur.deletes),
       expectNoConflictingAdds = Some((readV, _ => true)))
   }
 
   /** The active file set of the most recent non-empty version at or
     * before `upTo` — the empty-snapshot schema fallback shared by
     * [[snapshot]] (through [[TableLogRelation.relationAt]]) and
-    * [[restoreTable]]. */
+    * [[restoreTable]]. ONE forward fold over the retained versions:
+    * the state at the oldest, then each later entry once. */
   private[operators] def lastNonEmptyFiles(spark: SparkSession, root: String,
                                 upTo: Option[Long]): Option[Seq[String]] = {
-    val vs = versions(spark, root)
-    upTo.fold(vs)(v => vs.filter(_ <= v)).reverse
-      .map(v => activeFiles(spark, root, Some(v)))
-      .find(_.nonEmpty)
+    val f = fs(spark, root)
+    val all = versions(spark, root)
+    val vs = upTo.fold(all)(v => all.filter(_ <= v))
+    vs.headOption.flatMap { first =>
+      val fold = new Fold(state(spark, root, Some(first)))
+      // the last non-empty set is the one a later entry EMPTIED (taken
+      // just before a removing entry applies) unless the fold ends
+      // non-empty — so only removing entries copy the set
+      var lastNonEmpty = Option.empty[Seq[String]]
+      vs.tail.foreach { v =>
+        val e = readEntry(f, entryPath(root, v))
+        if (e.remove.nonEmpty && fold.nonEmpty) lastNonEmpty = Some(fold.fileRefs)
+        fold(e)
+      }
+      if (fold.nonEmpty) Some(fold.fileRefs) else lastNonEmpty
+    }
   }
 
   /** TIME-TRAVEL read: the table exactly as of version `asOf`
@@ -1412,7 +1423,7 @@ object TableLog {
                bucketBy: Option[(String, Int)] = None): DataFrame = {
     val (index, rel) = TableLogRelation.relationAt(spark, root, asOf, bucketBy)
     val base = TableLogRelation.rows(spark, rel)
-    val dels = activeDeletes(spark, root, Some(index.version))
+    val dels = index.logState.deletes
     if (dels.isEmpty) base
     else idCol match {
       case None => sys.error(
@@ -1633,12 +1644,14 @@ object TableLog {
     * (readV, active files at readV). */
   private def mergeReadSet(spark: SparkSession, root: String,
                            face: String): (Long, Seq[String]) = {
-    require(activeDeletes(spark, root).isEmpty,
+    // the sidecar guard and the read set come from ONE state: a delete
+    // committed between two reads must not slip past the guard
+    val read = state(spark, root)
+    require(read.deletes.isEmpty,
       s"TableLog.$face: $root has delete sidecars in force — " +
         "compactTable first so merge reads files, not filtered views")
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.$face: empty log at $root"))
-    val active = activeFiles(spark, root, Some(readV))
+    if (read.version < 0) sys.error(s"TableLog.$face: empty log at $root")
+    val (readV, active) = (read.version, read.fileRefs)
     val untagged = active.filterNot(bucketOf(_).isDefined)
     require(untagged.isEmpty,
       s"TableLog.$face: un-bucketed active files at $root " +
@@ -2082,20 +2095,6 @@ object TableLog {
     (files, stageUnder(melted, root, "zmap", name))
   }
 
-  /** The zone-map sidecar refs readable at `asOf` — every zmap ref a
-    * surviving entry or checkpoint carries, existence-filtered
-    * ([[vacuum]] reclaims maps whose data files are all gone; a
-    * missing map degrades to a conservative unpruned read, never an
-    * error). Shared by [[collectZoneRows]] and [[cloneTable]]. */
-  private def inForceZmaps(f: FileSystem, root: String,
-                           asOf: Option[Long]): Seq[String] = {
-    val (cp, replay) = replayPlan(f, root, asOf)
-    (cp.toSeq.flatMap(cv => readCheckpoint(f, root, cv).zmap) ++
-        replay.flatMap(v => readEntry(f, entryPath(root, v)).zmap))
-      .distinct
-      .filter(rel => f.exists(new Path(resolve(root, rel))))
-  }
-
   /** One parsed zone-stats row: which file, which column, the value
     * kind, serialized bounds (None where stats are absent: a file of
     * ALL-null keys has null min/max), the null count (None = unknown,
@@ -2110,22 +2109,18 @@ object TableLog {
                                  sum: Option[String] = None,
                                  hll: Option[String] = None)
 
-  /** One collected read of the in-force zone-map sidecars at `asOf`.
-    * O(#files × #statsCols) driver metadata — shared by
-    * [[TableLogFileIndex]], [[replaceWhere]] and [[deleteWhere]] so
-    * each plans from ONE sidecar read. */
-  private[operators] def collectZoneRows(spark: SparkSession, root: String,
-                              asOf: Option[Long]): Array[ZStat] =
-    collectZoneRowsFrom(spark, root,
-      inForceZmaps(fs(spark, root), root, asOf))
-
-  /** [[collectZoneRows]] over a PRE-RESOLVED in-force zmap ref list —
-    * the [[replayState]] composition path, so one replay serves both
-    * the ref discovery and this read. A row that names no column or
+  /** One collected read of the zone-map sidecars `s` names — its
+    * [[LogState.zmaps]], existence-filtered here, at read time
+    * ([[vacuum]] reclaims maps whose data files are all gone; a
+    * missing map degrades to a conservative unpruned read, never an
+    * error). O(#files × #statsCols) driver metadata — shared by
+    * [[TableLogFileIndex]], the metadata faces and the rewrites, each
+    * planning from ONE sidecar read. A row that names no column or
     * kind (a sidecar this writer never produced) is skipped: its file
     * then has no stats and reads in full. */
-  private def collectZoneRowsFrom(spark: SparkSession, root: String,
-                                  zmaps: Seq[String]): Array[ZStat] = {
+  private[operators] def collectZoneRows(spark: SparkSession, root: String,
+                                         st: LogState): Array[ZStat] = {
+    val zmaps = liveZmaps(fs(spark, root), root, st)
     if (zmaps.isEmpty) Array.empty
     else {
       val zm = ParquetMeta.read(spark, zmaps.map(resolve(root, _)): _*)
@@ -2145,41 +2140,9 @@ object TableLog {
     }
   }
 
-  /** ONE log replay serving every projection the metadata faces need
-    * — active files, in-force delete sidecars, in-force zmap refs —
-    * reading each retained entry ONCE. [[metadataDistinct]] /
-    * [[metadataDistinctRange]] / [[metadataProfile]] previously
-    * composed [[activeDeletes]] + [[activeFiles]] +
-    * [[collectZoneRows]], each replaying the log independently: ~3×
-    * the listStatus/open round-trips per probe on a path whose whole
-    * point is O(metadata) cost. Folds mirror [[activeFilesWithMeta]],
-    * [[activeDeletes]] and [[inForceZmaps]] exactly. */
-  private def replayState(spark: SparkSession, root: String,
-                          asOf: Option[Long])
-      : (Seq[String], Seq[String], Seq[String]) = {
-    val f = fs(spark, root)
-    if (versionsIn(f, root).isEmpty && checkpoints(f, root).isEmpty)
-      return (Nil, Nil, Nil)
-    val (cp, replay) = replayPlan(f, root, asOf)
-    val cpData = cp.map(cv => readCheckpoint(f, root, cv))
-    val entries = replay.map(v => readEntry(f, entryPath(root, v)))
-    val active = scala.collection.mutable.LinkedHashSet.empty[String]
-    cpData.foreach(_.files.foreach(active += _))
-    entries.foreach { e =>
-      e.remove.foreach(active -= _)
-      e.add.foreach(active += _)
-    }
-    val lastReset = entries.filter(_.reset).map(_.version).sorted.lastOption
-    val dels = lastReset match {
-      case Some(r) => entries.filter(_.version >= r).flatMap(_.deletes)
-      case None =>
-        cpData.toSeq.flatMap(_.deletes) ++ entries.flatMap(_.deletes)
-    }
-    val zmaps = (cpData.toSeq.flatMap(_.zmap) ++ entries.flatMap(_.zmap))
-      .distinct
-      .filter(rel => f.exists(new Path(resolve(root, rel))))
-    (active.toSeq, dels, zmaps)
-  }
+  /** The zone-map refs of `s` still on disk. */
+  private def liveZmaps(f: FileSystem, root: String, s: LogState): Seq[String] =
+    s.zmaps.filter(rel => f.exists(new Path(resolve(root, rel))))
 
   /** Merge one serialized HLL bank into `merged` by elementwise max.
     * Returns false — and `merged` is left UNTOUCHED — on wrong
@@ -2264,10 +2227,10 @@ object TableLog {
                        cols: Seq[String],
                        asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
-    val activeSet = active.toSet
+    val s = state(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val zones = collectZoneRows(spark, root, s)
+    val activeSet = s.fileRefs.toSet
     val m = graft.functions.Sketches.M
     val want = cols.distinct.sorted
     val banks: Seq[(String, Seq[Long])] = want.flatMap { c =>
@@ -2324,17 +2287,18 @@ object TableLog {
     import org.apache.spark.sql.functions._
     val (window, _) = zwindow("metadataDistinctRange", keyCol, lo, hi)
     // pinned: the boundary scan reads the version the plan came from
-    val at = asOf.orElse(versions(spark, root).lastOption)
-    val (active, dels, zmaps) = replayState(spark, root, at)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
+    val s = state(spark, root, asOf)
+    val at = asOf.orElse(Some(s.version))
+    if (s.deletes.nonEmpty) return None
+    val active = s.fileRefs
+    val zones = collectZoneRows(spark, root, s)
     // Both named columns must exist in the table before any planning:
     // cheapest proof first — the declared log schema, then a sidecar
     // row naming the column, then ONE parquet footer (metadata, not
     // data). A column that exists nowhere declines; proceeding would
     // either throw an AnalysisException from the boundary scan or,
     // on a fully-file-aligned empty window, silently estimate 0.
-    val declared = logSchema(spark, root, at).map(_.fieldNames.toSet)
+    val declared = schemaOf(spark, root, s).map(_.fieldNames.toSet)
     lazy val footerCols: Set[String] = active.headOption.map { p =>
       ParquetMeta.schema(spark, resolve(root, p)).fieldNames.toSet
     }.getOrElse(Set.empty)
@@ -2419,14 +2383,15 @@ object TableLog {
     val (window, _) = zwindow("metadataAggRange", keyCol, lo, hi)
     require(cols.nonEmpty, "TableLog.metadataAggRange: no columns asked")
     // pinned: the boundary scan reads the version the plan came from
-    val at = asOf.orElse(versions(spark, root).lastOption)
-    val (active, dels, zmaps) = replayState(spark, root, at)
-    if (dels.nonEmpty) return None
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
+    val s = state(spark, root, asOf)
+    val at = asOf.orElse(Some(s.version))
+    if (s.deletes.nonEmpty) return None
+    val active = s.fileRefs
+    val zones = collectZoneRows(spark, root, s)
     val want = cols.distinct.sorted
     // column validation, cheapest proof first (the metadataDistinctRange
     // rule): declared schema, then sidecar rows, then ONE footer
-    val declared = logSchema(spark, root, at)
+    val declared = schemaOf(spark, root, s)
     val declaredNames = declared.map(_.fieldNames.toSet)
     lazy val footerSchema: Option[org.apache.spark.sql.types.StructType] =
       active.headOption.map(p =>
@@ -2582,10 +2547,10 @@ object TableLog {
   def metadataProfile(spark: SparkSession, root: String,
                       asOf: Option[Long] = None): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val (active, dels, zmaps) = replayState(spark, root, asOf)
-    if (dels.nonEmpty) return None
-    val activeSet = active.toSet
-    val zones = collectZoneRowsFrom(spark, root, zmaps)
+    val s = state(spark, root, asOf)
+    if (s.deletes.nonEmpty) return None
+    val activeSet = s.fileRefs.toSet
+    val zones = collectZoneRows(spark, root, s)
       .filter(z => activeSet(z.file))
     val m = graft.functions.Sketches.M
     // a bound must PARSE under its kind's comparator before the fold
@@ -2924,7 +2889,9 @@ object TableLog {
                    asOf: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions._
     val (window, _) = zwindow("replaceWhere", keyCol, lo, hi)
-    require(activeDeletes(spark, root).isEmpty,
+    // the sidecar guard and the plan read ONE state, at the read version
+    val read = state(spark, root, asOf)
+    require(read.deletes.isEmpty,
       s"TableLog.replaceWhere: $root has delete sidecars in force — " +
         "compactTable first so the rewrite cannot resurrect deleted rows")
     // NULL keys are outside every range: as replacement rows they are
@@ -2936,11 +2903,10 @@ object TableLog {
       s"TableLog.replaceWhere: replacement rows outside [$lo, $hi] on " +
         s"'$keyCol' (or with NULL key) — they would widen the " +
         "overwrite beyond the predicate")
-    val readV = asOf.getOrElse(versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.replaceWhere: empty log at $root")))
-    val zones = collectZoneRows(spark, root, Some(readV))
-    val touched = pruneWithStats(activeFiles(spark, root, Some(readV)),
-      zones, window)
+    if (read.version < 0) sys.error(s"TableLog.replaceWhere: empty log at $root")
+    val readV = asOf.getOrElse(read.version)
+    val zones = collectZoneRows(spark, root, read)
+    val touched = pruneWithStats(read.fileRefs, zones, window)
     val survivors =
       if (touched.isEmpty) replacement.limit(0)
       else readActive(spark, root, Some(readV), touched)
@@ -3000,21 +2966,23 @@ object TableLog {
                   feedIdCol: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
     val (window, emptyWindow) = zwindow("deleteWhere", keyCol, lo, hi)
-    val readV = versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLog.deleteWhere: empty log at $root"))
+    // ONE state: the sidecar guard below and the plan read the same
+    // version
+    val read = state(spark, root)
+    if (read.version < 0) sys.error(s"TableLog.deleteWhere: empty log at $root")
+    val readV = read.version
     // ONE zone-sidecar read plans the whole purge (touched set AND
     // the droppable classification)
-    val zones = collectZoneRows(spark, root, Some(readV))
+    val zones = collectZoneRows(spark, root, read)
     val touched =
       if (emptyWindow) Seq.empty[String] // an empty window deletes nothing
-      else pruneWithStats(activeFiles(spark, root, Some(readV)), zones,
-        window)
+      else pruneWithStats(read.fileRefs, zones, window)
     if (touched.isEmpty) readV // provably nothing in range: NO-OP
     else {
       // the rewrite below would resurrect sidecar-deleted rows; the
       // guard sits AFTER the no-op return so a non-intersecting
       // window stays side-effect-free even with sidecars in force
-      require(activeDeletes(spark, root).isEmpty,
+      require(read.deletes.isEmpty,
         s"TableLog.deleteWhere: $root has delete sidecars in force — " +
           "compactTable first so the rewrite cannot resurrect deleted rows")
       // provably-all-in-range files: interval inside [lo, hi] and a
@@ -3192,7 +3160,7 @@ object TableLog {
   def vacuum(spark: SparkSession, root: String, retainFrom: Long,
              dryRun: Boolean = false): Seq[String] = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
+    val (vs, cps) = listLog(f, root)
     val retained = vs.filter(_ >= retainFrom)
     // an empty horizon would compute an empty keep set and delete
     // every file the CURRENT snapshot reads — refuse instead
@@ -3200,17 +3168,19 @@ object TableLog {
       s"TableLog.vacuum: no committed version >= $retainFrom at $root " +
         s"(latest: ${vs.lastOption.getOrElse(-1L)}) — nothing would be " +
         "retained and the live snapshot would be destroyed")
-    // change-feed sidecars belong to their own commit: retained
-    // versions keep theirs (so changes() over the retained range stays
-    // servable); pre-horizon feeds reclaim with their data files
-    val keep = retained.flatMap { v =>
-      val e = readEntry(f, entryPath(root, v))
-      // the schema IN FORCE at v may live in a pre-horizon commit —
-      // keep it as long as any retained version reads through it
-      activeFiles(spark, root, Some(v)) ++
-        activeDeletes(spark, root, Some(v)) ++ e.cdf ++ e.zmap ++
-        activeSchemaRef(spark, root, Some(v))
-    }.toSet
+    val entries = vs.map(v => readEntry(f, entryPath(root, v)))
+    // what ANY retained version reads, folded forward ONCE: the state
+    // at the horizon (the schema IN FORCE there may live in a
+    // pre-horizon commit — kept while a retained version reads through
+    // it), plus each retained entry's adds, delete sidecars and schema
+    // ref — every one is in force at its own version. Change-feed
+    // sidecars belong to their own commit: retained versions keep
+    // theirs (so changes() over the retained range stays servable);
+    // pre-horizon feeds reclaim with their data files
+    val horizon = state(spark, root, Some(retained.head))
+    val keep = (horizon.fileRefs ++ horizon.deletes ++ horizon.schemaRef ++
+      entries.filter(_.version >= retained.head)
+        .flatMap(e => e.add ++ e.deletes ++ e.schema ++ e.cdf ++ e.zmap)).toSet
     // a zone map follows its DATA files: doomed only when every file
     // its commit added is gone from all retained versions (readers
     // existence-filter zmap paths, so a reclaimed map degrades to a
@@ -3219,7 +3189,7 @@ object TableLog {
     // pre-horizon but removed later is referenced by NO surviving
     // entry's add list — only the checkpoint knows it, and without
     // this it would leak on disk forever
-    val cpRef = checkpoints(f, root).flatMap { cv =>
+    val cpRef = cps.flatMap { cv =>
       val c = readCheckpoint(f, root, cv)
       // a zone map follows its data files HERE too: a checkpoint-
       // folded zmap ref (its adding entry is expired, so the
@@ -3229,15 +3199,14 @@ object TableLog {
       // are still active would be reclaimed and every later range
       // read / deleteWhere would silently degrade to a conservative
       // full scan
-      val zm = if (c.files.exists(keep)) Nil else c.zmap
-      c.files ++ c.deletes ++ zm ++ c.schema
+      val zm = if (c.fileRefs.exists(keep)) Nil else c.zmaps
+      c.fileRefs ++ c.deletes ++ zm ++ c.schemaRef
     }
     // constraint sidecars (entry `checks` refs) are deliberately NOT
     // reclaimable: the in-force fold may read through pre-horizon
     // refs, and they are O(#constraint-changes) bytes — metadata, not
     // data
-    val everRef = (vs.flatMap { v =>
-      val e = readEntry(f, entryPath(root, v))
+    val everRef = (entries.flatMap { e =>
       val zm = if (e.add.exists(keep)) Nil else e.zmap
       e.add ++ e.deletes ++ e.cdf ++ zm ++ e.schema
     } ++ cpRef).toSet
@@ -3251,39 +3220,6 @@ object TableLog {
     doomed
   }
 
-  /** Reclaim ORPHANED staged directories — stage dirs whose commit
-    * never happened (a crashed writer between [[stageWrite]] and
-    * [[commit]], a conflict-refused rewrite that was not retried).
-    * [[vacuum]] cannot see them: it reads the log, and an orphan is
-    * by definition in NO entry — the one storage leak the log cannot
-    * account for (the stageWrite scaladoc's "cost only storage until
-    * manually cleaned"; Delta's VACUUM walks the directory for the
-    * same reason). The sweep reads the `_log/_stages/` MANIFEST
-    * [[stageMarker]] maintains — O(#outstanding stages), the data
-    * tree is never listed; markers of committed or vanished targets
-    * retire on the spot so the manifest stays bounded. `fullWalk =
-    * true` forces the pre-manifest exhaustive walk (O(#files) —
-    * the migration path for stages older than the manifest, and the
-    * audit proving the manifest lost nothing). A stage dir is orphaned when
-    * NONE of its files appear in any log entry or checkpoint
-    * (add/remove/deletes/cdf/zmap — removed files are still
-    * referenced history until vacuum reclaims them) AND its
-    * modification time is older than `olderThanMs` — the age guard
-    * keeps an in-flight stage→commit race out of the doomed set (pick
-    * an horizon comfortably above your longest commit latency).
-    * Un-referenced schema/constraint sidecar FILES (a crashed
-    * [[evolveAppend]]) reclaim the same way. Returns the deleted
-    * root-relative paths; `dryRun = true` returns the same list
-    * deleting nothing (and skips the empty-dir prune) — the same
-    * audit mode as [[vacuum]]'s. Markers whose TARGET does not exist
-    * retire on the separate `absentOlderThanMs` horizon (default
-    * 8 × olderThanMs, clamped to AT LEAST olderThanMs — a shorter
-    * absent horizon would reintroduce the very race it closes) — long
-    * enough that a writer stalled between marker and data write
-    * cannot have its marker retired before the partial dir appears
-    * (the one leak that would otherwise need a `fullWalk` audit to
-    * find). Garbage/unparseable markers retire on the same long
-    * horizon: a zero-byte marker may be a stageMarker mid-write. */
   /** MANIFEST-mode sweep: candidates come from the `_log/_stages/`
     * markers [[stageMarker]] wrote — O(#outstanding stages) tiny
     * reads + one stat each, NEVER a walk of the data tree. A marker
@@ -3374,6 +3310,39 @@ object TableLog {
     doomed.result().sorted
   }
 
+  /** Reclaim ORPHANED staged directories — stage dirs whose commit
+    * never happened (a crashed writer between [[stageWrite]] and
+    * [[commit]], a conflict-refused rewrite that was not retried).
+    * [[vacuum]] cannot see them: it reads the log, and an orphan is
+    * by definition in NO entry — the one storage leak the log cannot
+    * account for (the stageWrite scaladoc's "cost only storage until
+    * manually cleaned"; Delta's VACUUM walks the directory for the
+    * same reason). The sweep reads the `_log/_stages/` MANIFEST
+    * [[stageMarker]] maintains — O(#outstanding stages), the data
+    * tree is never listed; markers of committed or vanished targets
+    * retire on the spot so the manifest stays bounded. `fullWalk =
+    * true` forces the pre-manifest exhaustive walk (O(#files) —
+    * the migration path for stages older than the manifest, and the
+    * audit proving the manifest lost nothing). A stage dir is orphaned when
+    * NONE of its files appear in any log entry or checkpoint
+    * (add/remove/deletes/cdf/zmap — removed files are still
+    * referenced history until vacuum reclaims them) AND its
+    * modification time is older than `olderThanMs` — the age guard
+    * keeps an in-flight stage→commit race out of the doomed set (pick
+    * an horizon comfortably above your longest commit latency).
+    * Un-referenced schema/constraint sidecar FILES (a crashed
+    * [[evolveAppend]]) reclaim the same way. Returns the deleted
+    * root-relative paths; `dryRun = true` returns the same list
+    * deleting nothing (and skips the empty-dir prune) — the same
+    * audit mode as [[vacuum]]'s. Markers whose TARGET does not exist
+    * retire on the separate `absentOlderThanMs` horizon (default
+    * 8 × olderThanMs, clamped to AT LEAST olderThanMs — a shorter
+    * absent horizon would reintroduce the very race it closes) — long
+    * enough that a writer stalled between marker and data write
+    * cannot have its marker retired before the partial dir appears
+    * (the one leak that would otherwise need a `fullWalk` audit to
+    * find). Garbage/unparseable markers retire on the same long
+    * horizon: a zero-byte marker may be a stageMarker mid-write. */
   def gcOrphans(spark: SparkSession, root: String,
                 olderThanMs: Long, dryRun: Boolean = false,
                 fullWalk: Boolean = false,
@@ -3390,12 +3359,13 @@ object TableLog {
     // safe retirement horizons are ≥ the data one)
     val absentCutoff = now -
       math.max(absentOlderThanMs.getOrElse(8L * olderThanMs), olderThanMs)
-    val referenced: Set[String] = (versions(spark, root).flatMap { v =>
+    val (vs, cps) = listLog(f, root)
+    val referenced: Set[String] = (vs.flatMap { v =>
       val e = readEntry(f, entryPath(root, v))
       e.add ++ e.remove ++ e.deletes ++ e.cdf ++ e.zmap ++ e.schema ++ e.checks
-    } ++ checkpoints(f, root).flatMap { cv =>
+    } ++ cps.flatMap { cv =>
       val c = readCheckpoint(f, root, cv)
-      c.files ++ c.deletes ++ c.zmap ++ c.schema ++ c.checks
+      c.fileRefs ++ c.deletes ++ c.zmaps ++ c.schemaRef ++ c.checks
     }).toSet
     // MANIFEST mode (the default whenever markers exist): sweep from
     // `_log/_stages/` at O(#stage entries) — the data tree is never
@@ -3508,28 +3478,28 @@ object TableLog {
                  tag: Option[String] = None): Long = {
     import org.apache.spark.sql.functions._
     val fDst = fs(spark, dstRoot)
-    require(versionsIn(fDst, dstRoot).isEmpty &&
-        checkpoints(fDst, dstRoot).isEmpty,
+    val (dstVersions, dstCheckpoints) = listLog(fDst, dstRoot)
+    require(dstVersions.isEmpty && dstCheckpoints.isEmpty,
       s"TableLog.cloneTable: $dstRoot already has a log — clone only " +
         "into a fresh root (the clone's history starts at its v0)")
     val fSrc = fs(spark, srcRoot)
-    val srcV = asOf.getOrElse(versions(spark, srcRoot).lastOption
-      .getOrElse(sys.error(s"TableLog.cloneTable: empty log at $srcRoot")))
+    val src = state(spark, srcRoot, asOf)
+    if (src.version < 0) sys.error(s"TableLog.cloneTable: empty log at $srcRoot")
     // absolutize the source root once so borrowed refs resolve from
     // the clone's root regardless of the working directory
     val srcAbs = fSrc.makeQualified(new Path(srcRoot)).toUri.getPath
     def borrow(rel: String): String =
       if (rel.startsWith("/")) rel else s"$srcAbs/$rel" // clone-of-clone passes through
-    val files = activeFiles(spark, srcRoot, Some(srcV)).map(borrow)
-    val dels = activeDeletes(spark, srcRoot, Some(srcV)).map(borrow)
+    val files = src.fileRefs.map(borrow)
+    val dels = src.deletes.map(borrow)
     // the schema JSON is copied (bytes, not data): the clone must not
     // dangle on a source-side vacuum of a superseded schema ref
-    val schemaSeq = logSchema(spark, srcRoot, Some(srcV))
+    val schemaSeq = schemaOf(spark, srcRoot, src)
       .map(st => stageSchema(spark, dstRoot, "clone", st)).toSeq
     // zone maps name their files ROOT-RELATIVE to the source; re-key
     // them to the borrowed absolute refs so range reads prune on
     // the clone from the first read (O(#files) metadata rewrite)
-    val zmRefs = inForceZmaps(fSrc, srcRoot, Some(srcV))
+    val zmRefs = liveZmaps(fSrc, srcRoot, src)
     val zmapSeq =
       if (zmRefs.isEmpty) Nil
       else {
@@ -3541,7 +3511,7 @@ object TableLog {
       }
     // constraints carry like the schema: re-stage the FOLDED in-force
     // set as the clone's own sidecars (bytes, not data)
-    val checkSeq = activeConstraints(spark, srcRoot, Some(srcV)).toSeq
+    val checkSeq = constraintsFor(spark, srcRoot, src.checks).toSeq
       .sortBy(_._1).map { case (n, e) =>
         stageConstraint(fDst, dstRoot, s"""{"cname":"$n","expr":"$e"}""")
       }

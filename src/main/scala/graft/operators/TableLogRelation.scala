@@ -48,12 +48,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Scale shape: the index PINS the snapshot version at construction
   * (asOf = None resolves to the latest committed version THEN — a
   * concurrent commit between relation build and query execution can
-  * neither drop rows nor mix file generations) and materializes the
-  * active statuses + zone stats once — O(#files) driver metadata, the
-  * same order as the log replay that produced it; each `listFiles`
-  * is then a pure driver-side interval check, no log replay and no
-  * Spark job per planning pass. Row-group pushdown inside surviving
-  * files is unchanged parquet behavior. */
+  * neither drop rows nor mix file generations). Version, active
+  * files, zone-map refs, schema ref and delete sidecars all come from
+  * ONE [[TableLog.state]] fold; the active statuses and zone stats
+  * are materialized from it once — O(#files) driver metadata — and
+  * each `listFiles` is then a pure driver-side interval check, no
+  * log replay and no Spark job per planning pass. Row-group pushdown
+  * inside surviving files is unchanged parquet behavior. */
 class TableLogFileIndex(spark: SparkSession, root: String,
                         asOf: Option[Long],
                         bucketBy: Option[(String, Int)] = None,
@@ -61,10 +62,17 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     extends FileIndex {
   import TableLog.kindRepr
 
+  /** The log state this index serves — the ONE fold every projection
+    * below (and [[TableLogRelation.relationAt]]'s schema, and
+    * [[TableLog.snapshot]]'s delete sidecars) reads. */
+  private[graft] lazy val logState: TableLog.LogState = {
+    val s = TableLog.state(spark, root, asOf)
+    if (s.version < 0) sys.error(s"TableLogFileIndex: empty log at $root")
+    s
+  }
+
   /** The pinned snapshot version this index serves. */
-  val version: Long = asOf.getOrElse(
-    TableLog.versions(spark, root).lastOption.getOrElse(
-      sys.error(s"TableLogFileIndex: empty log at $root")))
+  val version: Long = asOf.getOrElse(logState.version)
 
   private val fsys = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -79,7 +87,7 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * entry predates the metadata field (or recorded the unknown
     * sentinel) fall back to a stat — for those files alone. */
   protected lazy val active: Seq[(String, FileStatus)] =
-    TableLog.activeFilesWithMeta(spark, root, Some(version))
+    logState.files
       // `only` restricts the index to the named active files (root-
       // relative refs) at construction — a maintenance read's scope
       // ([[TableLog.readActive]]), zero I/O
@@ -95,17 +103,17 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     }
 
   /** The pinned active file refs (root-relative) — exposed so
-    * [[TableLogRelation.relationAt]] reuses the replay this
-    * constructor already paid for instead of re-reading the log, and
-    * so [[graft.plans.MetadataOnlyAgg]] can scope a stats answer to
-    * the whole snapshot. */
+    * [[TableLogRelation.relationAt]] reuses the fold this index
+    * already paid for instead of re-reading the log, and so
+    * [[graft.plans.MetadataOnlyAgg]] can scope a stats answer to the
+    * whole snapshot. */
   private[graft] def activeRefs: Seq[String] = active.map(_._1)
 
   /** Zone stats collected ONCE — listFiles must not re-read sidecars
     * (one driver-side parquet read per sidecar) inside every planning
     * pass. */
   protected lazy val zones: Array[TableLog.ZStat] =
-    TableLog.collectZoneRows(spark, root, Some(version))
+    TableLog.collectZoneRows(spark, root, logState)
 
   /** Per-file row counts from the typed zone sidecars, for every
     * active file covered by exactly one consistent n_rows. COVERAGE
@@ -406,12 +414,14 @@ class TableLogFileIndex(spark: SparkSession, root: String,
     * still applies inside the kept set, and a fixed-point re-match of
     * the top-k rule sees keep == activeCount and leaves it alone. */
   private[graft] def restrictedTo(keep: Set[String]): TableLogFileIndex = {
+    val st = logState
     val a = active.filter { case (rel, _) => keep(rel) }
     val z = zones
     // a NAMED subclass so `.explain` prints a readable Location line
     // (an anonymous class has an empty simple name)
     class TopKRestrictedFileIndex extends TableLogFileIndex(
         spark, root, Some(version), bucketBy, Some(keep)) {
+      override private[graft] lazy val logState: TableLog.LogState = st
       override protected lazy val active: Seq[(String, FileStatus)] = a
       override protected lazy val zones: Array[TableLog.ZStat] = z
     }
@@ -801,11 +811,11 @@ object TableLogRelation {
       only: Option[Set[String]] = None)
       : (TableLogFileIndex, HadoopFsRelation) = {
     val index = new TableLogFileIndex(spark, root, asOf, bucketBy, only)
-    val schema = TableLog.logSchema(spark, root, Some(index.version))
+    val schema = TableLog.schemaOf(spark, root, index.logState)
         .map(BridgeTypes.nullable).getOrElse {
       // no declared schema: take the files' own uniform schema from
       // ONE footer (files are immutable, a commit's files share one);
-      // the index already replayed the log — reuse its refs. A fully
+      // the index already folded the log — reuse its refs. A fully
       // purged version has none: use the last non-empty version's
       val files = Some(index.activeRefs).filter(_.nonEmpty)
         .orElse(TableLog.lastNonEmptyFiles(spark, root, Some(index.version)))

@@ -181,7 +181,7 @@ class TableLogSource extends RelationProvider
     val (index, rel) = TableLogRelation.relationAt(spark, root, asOf)
     // a BaseRelation cannot compose the delete-sidecar anti-join —
     // refuse rather than resurrect deleted rows
-    require(TableLog.activeDeletes(spark, root, Some(index.version)).isEmpty,
+    require(index.logState.deletes.isEmpty,
       s"TableLogSource: $root has delete sidecars in force at version " +
         s"${index.version} — read it via TableLog.snapshot" +
         "(spark, root, idCol = Some(...)), which applies them")
@@ -233,8 +233,8 @@ class TableLogSource extends RelationProvider
         // must not cancel a delete sidecar committed concurrently
         val readV = versions.lastOption.getOrElse(
           TableLog.checkpointVersions(spark, root).max)
-        val before = TableLog.activeFiles(spark, root, Some(readV))
-        val dels = TableLog.activeDeletes(spark, root, Some(readV))
+        val read = TableLog.state(spark, root, Some(readV))
+        val (before, dels) = (read.fileRefs, read.deletes)
         val (files, zm) = stage()
         TableLog.commit(spark, root, files, remove = before, zmap = zm,
           resetDeletes = true, op = Some("OVERWRITE"),

@@ -14,10 +14,12 @@ import graft.operators.TableLog
   * lands once instead of drifting across sinks. */
 private[streaming] object Ingest {
 
-  /** Committed-tag cache: each root's tag set is read from the log
-    * ONCE per sink instance (lazily, on the first batch) and
-    * maintained in memory afterwards — per-batch cost stays O(1) log
-    * reads over the stream's whole life, not O(#commits) per batch.
+  /** Committed-tag cache: each root's tag set — the tags of its
+    * latest log state ([[TableLog.committedTags]]: the newest
+    * checkpoint's plus those of the entries after it) — is read ONCE
+    * per sink instance (lazily, on the first batch) and maintained in
+    * memory afterwards — per-batch cost stays O(1) log reads over the
+    * stream's whole life, not O(#commits) per batch.
     * A restart re-reads once; concurrent committers with OTHER
     * streamIds never collide, so the cache cannot go stale for this
     * stream's own tags. */

@@ -2837,6 +2837,53 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(TableLog.snapshot(spark0, root).count() === 450L)
   }
 
+  test("TableLog folds the log once: snapshot planning and writeCheckpoint open each needed entry once, vacuum a constant number of times") {
+    import graft.operators.TableLog
+    val spark0 = spark
+    import spark0.implicits._
+    spark0.sparkContext.hadoopConfiguration.set(
+      "fs.graftcnt.impl", classOf[CountingLocalFs].getName)
+    val nCommits = 12
+    def entry(v: Int) = "%020d.json".format(v.toLong)
+    // a zone-mapped table of nCommits one-file commits; the second
+    // variant checkpoints mid-way, so its folds start from the
+    // checkpoint and replay only the entries after it
+    Seq(None, Some(5)).foreach { cp =>
+      val local = Files.createTempDirectory("graft_tablelog_opens").toString
+      val root = s"graftcnt://$local/t"
+      (0 until nCommits).foreach { k =>
+        val (f, z) = TableLog.stageWithZoneMap(
+          (k * 10L until k * 10L + 10L).map(i => (i, s"t$i"))
+            .toDF("doc_id", "text").coalesce(1), root, s"c$k", "doc_id", 1)
+        TableLog.commit(spark0, root, f, Nil, zmap = z)
+        if (cp.contains(k)) TableLog.writeCheckpoint(spark0, root)
+      }
+      val foldOnce = ((cp.fold(0)(_ + 1) until nCommits).map(entry) ++
+        cp.map(c => s"$c.ckpt")).map(_ -> 1).toMap
+      // 1) the snapshot, the planner's zone pruning and the count read
+      //    ONE fold: every needed entry (and the checkpoint) once
+      CountingLocalFs.reset()
+      assert(TableLog.snapshot(spark0, root)
+        .filter(col("doc_id").between(30L, 49L)).count() === 20L)
+      assert(CountingLocalFs.logOpens() === foldOnce,
+        s"cp=$cp: snapshot + planning opened ${CountingLocalFs.logOpens()}")
+      // 2) vacuum over every version folds forward once: a bounded
+      //    number of opens per entry, however many versions it retains
+      CountingLocalFs.reset()
+      assert(TableLog.vacuum(spark0, root, retainFrom = 0L).isEmpty)
+      val vacuumOpens = CountingLocalFs.logOpens()
+      assert(vacuumOpens.keySet === ((0 until nCommits).map(entry) ++
+        cp.map(c => s"$c.ckpt")).toSet, s"cp=$cp: $vacuumOpens")
+      assert(vacuumOpens.values.forall(_ <= 2),
+        s"cp=$cp: vacuum re-read entries per retained version: $vacuumOpens")
+      // 3) the checkpoint serializes one fold
+      CountingLocalFs.reset()
+      assert(TableLog.writeCheckpoint(spark0, root) === nCommits - 1L)
+      assert(CountingLocalFs.logOpens() === foldOnce,
+        s"cp=$cp: writeCheckpoint opened ${CountingLocalFs.logOpens()}")
+    }
+  }
+
   /** The executed TableLogFileIndex scans of `df`, after running it
     * (df.inputFiles is the UNPRUNED index listing by contract, so
     * pruning proofs read the scans). */
@@ -4337,8 +4384,10 @@ class SingleDriverTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 /** A local filesystem that COUNTS getFileStatus calls on data parquet
   * files — the proof harness for [[graft.operators.TableLogFileIndex]]
   * building statuses from the log's commit-time metadata instead of
-  * one stat RPC per active file. Registered under the `graftcnt`
-  * scheme by the spec below; instantiated reflectively by Hadoop. */
+  * one stat RPC per active file — and opens of log entries and
+  * checkpoints, the proof that each read folds the log once.
+  * Registered under the `graftcnt` scheme by the specs above;
+  * instantiated reflectively by Hadoop. */
 class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftcnt"
   override def getUri: java.net.URI = java.net.URI.create("graftcnt:///")
@@ -4347,13 +4396,30 @@ class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     CountingLocalFs.record(p)
     super.getFileStatus(p)
   }
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.recordOpen(p)
+    super.open(p, bufferSize)
+  }
 }
 object CountingLocalFs {
   private val dataStats = new java.util.concurrent.atomic.AtomicInteger(0)
   def record(p: org.apache.hadoop.fs.Path): Unit =
     if (p.toUri.getPath.contains("/data/") &&
         p.getName.endsWith(".parquet")) dataStats.incrementAndGet()
-  def reset(): Unit = dataStats.set(0)
+  /** Opens of log entries (`.json`) and checkpoints (`.ckpt`) under `_log`,
+    * by file name. */
+  private val logOpenCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  def recordOpen(p: org.apache.hadoop.fs.Path): Unit =
+    if (p.getParent != null && p.getParent.getName == "_log" &&
+        (p.getName.endsWith(".json") || p.getName.endsWith(".ckpt")))
+      logOpenCounts.merge(p.getName, 1, (a: Integer, b: Integer) => a + b)
+  def reset(): Unit = { dataStats.set(0); logOpenCounts.clear() }
   def dataFileStats(): Int = dataStats.get()
+  def logOpens(): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    logOpenCounts.asScala.map { case (k, v) => k -> v.intValue }.toMap
+  }
 
 }

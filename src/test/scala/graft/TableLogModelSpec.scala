@@ -19,7 +19,11 @@ import graft.operators.TableLog
   * interactions (deletes folded by compaction, restore resetting
   * sidecar state, truncate + time travel, schema widening over old
   * versions, zone-mapped vs plain appends) that example-based specs
-  * cover only pairwise. Seeds are FIXED: failures reproduce. */
+  * cover only pairwise. Checkpoints and log expiry are ops too, so
+  * later reads fold from a checkpoint: time travel must then serve
+  * every version at or above the expiry horizon (and a checkpoint's
+  * own version), and fail loudly below it. Seeds are FIXED: failures
+  * reproduce. */
 class TableLogModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -35,6 +39,8 @@ class TableLogModelSpec extends AnyFunSuite {
     var nextCol = 0
     val histByVersion = mutable.Map.empty[Long, (Map[Long, Long], Boolean)]
     val opLog = mutable.ArrayBuffer.empty[String]
+    val checkpointed = mutable.SortedSet.empty[Long]
+    var horizon = 0L // versions below it were expired from the log
 
     def df(rows: Seq[(Long, Long)]) = rows.toDF("id", "v").coalesce(1)
     def head: Long = TableLog.versions(spark, root).last
@@ -55,24 +61,42 @@ class TableLogModelSpec extends AnyFunSuite {
       opLog += s"append($n)"
     }
 
+    // fold the head into a checkpoint: later reads start from it
+    def checkpointOp(): Unit = {
+      checkpointed += TableLog.writeCheckpoint(spark, root)
+      opLog += s"writeCheckpoint(${checkpointed.last})"
+    }
+    // expire every entry below a checkpoint above the horizon
+    def expireOp(): Unit = {
+      horizon = rnd.shuffle(checkpointed.filter(_ > horizon).toSeq).head
+      TableLog.expireLog(spark, root, horizon)
+      opLog += s"expireLog($horizon)"
+    }
+
     // first op is always an append so every later op has a table
     appendOp(); record()
 
-    (1 until nOps).foreach { _ =>
+    (1 until nOps).foreach { i =>
       val choice = rnd.nextInt(100)
-      if (choice < 30) appendOp()
-      else if (choice < 45 && cur.nonEmpty) {
+      // besides the random draws, every sequence checkpoints a third of
+      // the way in and expires the log two thirds in, so its last
+      // third reads — and commits deletes, restores, truncates and
+      // widenings — through a checkpoint-based fold
+      if (i == nOps / 3) checkpointOp()
+      else if (i == 2 * nOps / 3 && checkpointed.exists(_ > horizon)) expireOp()
+      else if (choice < 26) appendOp()
+      else if (choice < 40 && cur.nonEmpty) {
         // sidecar deletes of a random sample of live ids
         val ids = rnd.shuffle(cur.keys.toSeq).take(1 + rnd.nextInt(8))
         TableLog.commitDeletes(ids.toDF("id"), root, s"d$nextId")
         cur = cur -- ids
         sidecars = true
         opLog += s"commitDeletes(${ids.size})"
-      } else if (choice < 60 && cur.nonEmpty) {
+      } else if (choice < 52 && cur.nonEmpty) {
         TableLog.compactTable(spark, root, "id", s"c$nextId")
         sidecars = false
         opLog += "compact"
-      } else if (choice < 75 && !sidecars) {
+      } else if (choice < 64 && !sidecars) {
         // range purge; may be a NO-OP commit-wise when nothing
         // intersects (deleteWhere returns the current version)
         val lo = rnd.nextLong(math.max(1L, nextId))
@@ -83,27 +107,32 @@ class TableLogModelSpec extends AnyFunSuite {
         cur = cur.filter { case (id, _) => id < lo || id > hi }
         opLog += (if (head == before) s"deleteWhere($lo,$hi,noop)"
                   else s"deleteWhere($lo,$hi)")
-      } else if (choice < 85) {
+      } else if (choice < 71) {
         TableLog.truncateTable(spark, root)
         cur = Map.empty
         sidecars = false
         opLog += "truncate"
-      } else if (choice < 95 && histByVersion.nonEmpty) {
-        val v = rnd.shuffle(histByVersion.keys.toSeq).head
+      } else if (choice < 77) checkpointOp()
+      else if (choice < 83 && checkpointed.exists(_ > horizon)) expireOp()
+      else if (choice < 92) {
+        // restore only to a version the log still serves
+        val v = rnd.shuffle(histByVersion.keys.filter(_ >= horizon).toSeq).head
         TableLog.restoreTable(spark, root, v)
         val (st, sc) = histByVersion(v)
         cur = st; sidecars = sc
         opLog += s"restore($v)"
-      } else {
+      } else if (nextCol > 0 || cur.nonEmpty) {
         // metadata-only schema widening: must not disturb row reads,
-        // at the head or via time travel below
+        // at the head or via time travel below. It needs a schema to
+        // widen: a declared one (any earlier widening leaves one in
+        // force, restore included) or live files to read it from
         nextCol += 1
         TableLog.addColumns(spark, root,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField(
               s"extra$nextCol", org.apache.spark.sql.types.StringType))))
         opLog += "addColumns"
-      }
+      } else appendOp()
       record()
 
       val got = TableLog.snapshot(spark, root, None, Some("id"))
@@ -112,14 +141,21 @@ class TableLogModelSpec extends AnyFunSuite {
         s"seed=$seed live snapshot diverged after: ${opLog.mkString(" -> ")}")
     }
 
-    // TIME TRAVEL: every recorded version must replay to the state
-    // the model held when it was committed
+    // TIME TRAVEL: every version the log still serves — at or above
+    // the expiry horizon, or a checkpoint's own version — must replay
+    // to the state the model held when it was committed; an expired
+    // version must fail loudly, never serve some other state
     histByVersion.toSeq.sortBy(_._1).foreach { case (v, (st, _)) =>
-      val got = TableLog.snapshot(spark, root, Some(v), Some("id"))
+      def read = TableLog.snapshot(spark, root, Some(v), Some("id"))
         .select(col("id"), col("v")).as[(Long, Long)].collect().toMap
-      assert(got === st,
-        s"seed=$seed version $v time travel diverged; ops: ${opLog.mkString(" -> ")}")
+      if (v >= horizon || checkpointed(v))
+        assert(read === st,
+          s"seed=$seed version $v time travel diverged; ops: ${opLog.mkString(" -> ")}")
+      else intercept[IllegalArgumentException](read)
     }
+    assert(checkpointed.nonEmpty && horizon > 0L,
+      s"seed=$seed never folded a read from a checkpoint: ${opLog.mkString(" -> ")}")
+    info(opLog.mkString(" -> "))
   }
 
   test("seeded random op sequences: live snapshot and every version's " +

@@ -193,7 +193,7 @@ class ParquetMetaSpec extends AnyFunSuite {
         TableLog.ZStat(r.getString(0), r.getString(1), r.getString(2), s(3), s(4),
           l(5), l(6), s(7), s(8))
       }
-    val got = TableLog.collectZoneRows(spark, root, None)
+    val got = TableLog.collectZoneRows(spark, root, TableLog.state(spark, root))
     assert(got.sortBy(_.toString).toSeq === want.sortBy(_.toString).toSeq)
     // every shape is present: banks, null banks, and unknown row counts
     assert(got.exists(_.hll.isDefined) && got.exists(z => z.scol == "v" && z.hll.isEmpty))
