@@ -244,13 +244,11 @@ object Dedup extends org.apache.spark.internal.Logging {
       val l = lists.toDF(id, arr)
       if (broadcastable) l else l.hint("shuffle_hash")
     }
-    cand
+    jaccardAbove(cand
       .join(listsAs("d1", "a1"), "d1")
       .join(listsAs("d2", "a2"), "d2")
-      .withColumn("inter", size(array_intersect(col("a1"), col("a2"))).cast("long"))
-      .withColumn("jaccard", col("inter") / (col("n1") + col("n2") - col("inter")))
-      .filter(col("jaccard") > threshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
+      .withColumn("inter", size(array_intersect(col("a1"), col("a2"))).cast("long")),
+      threshold)
   }
 
   /** Attach exact Jaccard from per-doc shingle counts; filter.
@@ -259,10 +257,14 @@ object Dedup extends org.apache.spark.internal.Logging {
     * corpus scale. AQE broadcasts it at small sf on its own; at scale
     * it becomes a (narrow, two-column) shuffle join keyed on doc id. */
   private def withJaccard(inter: DataFrame, sizes: DataFrame, threshold: Double): DataFrame =
-    inter
+    jaccardAbove(inter
       .join(sizes.toDF("d1", "n1"), "d1")
-      .join(sizes.toDF("d2", "n2"), "d2")
-      .withColumn("jaccard", col("inter") / (col("n1") + col("n2") - col("inter")))
+      .join(sizes.toDF("d2", "n2"), "d2"), threshold)
+
+  /** (d1, d2, jaccard) of the `(d1, d2, n1, n2, inter)` rows whose
+    * exact Jaccard clears `threshold`. */
+  private def jaccardAbove(t: DataFrame, threshold: Double): DataFrame =
+    t.withColumn("jaccard", col("inter") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") > threshold)
       .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
 
@@ -282,15 +284,18 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** MinHash + LSH banding near-dup candidates, verified by exact
     * Jaccard over shingles. bands × rowsPerBand = signature length. */
   /** (doc_id, band, band_hash) LSH band keys — band b hashes the
-    * signature's b-th slice. The map-only projection both the inline
-    * pair join and the materialized band store build from. */
+    * signature's b-th slice. The map-only projection the inline pair
+    * join builds from; the band store keeps the keys unexploded. */
   def bandedSignatures(docs: DataFrame, idCol: String, textCol: String,
                        k: Int, bands: Int, rowsPerBand: Int): DataFrame =
     minhashSignatures(docs, idCol, textCol, k, bands * rowsPerBand)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+      .select(col("doc_id"), posexplode(bandHashes(col("sig"), bands, rowsPerBand)))
       .toDF("doc_id", "band", "band_hash")
+
+  /** Band b's key is the xxhash64 of the signature's b-th slice. */
+  private def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
 
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       k: Int, bands: Int, rowsPerBand: Int,
@@ -315,83 +320,77 @@ object Dedup extends org.apache.spark.internal.Logging {
   }
 
   /** Materialized MinHash dedup store — the incremental-ingest shape:
-    * a corpus's LSH band keys and shingle-hash posting lists persisted
-    * once, so each ingest batch dedups against ALL history at
+    * a corpus's LSH band keys and shingle hashes persisted once, so
+    * each ingest batch dedups against ALL history at
     * O(batch + matches), never O(corpus). The q97 pattern (build-once
     * artifacts + delta application) applied to the dedup family; the
     * reference dedups each consumed record against its processed-keys
     * store (consumer.py:57-92) — this is that operation when "seen
     * before" means near-duplicate, not key-equal.
     *
-    * Layout under `path` (all batch-partitioned so [[appendBatch]] is
-    * an idempotent dynamic-partition overwrite of one batch dir):
-    *  - `bands/batch=N/`    — (doc_id, band, band_hash)
-    *  - `shingles/batch=N/` — (doc_id, s) 8-byte shingle hashes
-    *  - `sizes/batch=N/`    — (doc_id, n_shingles)
-    */
+    * The store is ONE [[TableLog]] table at `path`, one row per doc:
+    * `(doc_id, band_hashes: array<long>, shingles: array<long>)` —
+    * [[bandedSignatures]]' band keys before their posexplode and
+    * [[shingleHashTable]]'s sorted distinct hashes before their
+    * explode. A batch's bands and shingles land in one commit, so no
+    * reader sees one without the other; readers explode the arrays,
+    * and a doc's shingle count is `size(shingles)`. */
   object MinhashStore {
     def build(docs: DataFrame, idCol: String, textCol: String, path: String,
               k: Int, bands: Int, rowsPerBand: Int): Unit =
       appendBatch(docs, idCol, textCol, path, k, bands, rowsPerBand, batch = 0L)
 
-    /** Add one ingest batch's keys to the store. Idempotent: re-running
-      * a batch id rewrites exactly its `batch=N` directories (dynamic
-      * partition overwrite), leaving every other batch byte-untouched.
-      * Removals/updates compose with [[graft.operators.Versioning
-      * .datasetDiff]] upstream: feed only added/changed docs, retire
-      * stale ids by rewriting their original batch. */
+    /** Add one ingest batch's docs to the store: one commit tagged
+      * with the batch id ([[graft.streaming.TableIngest.appendSink]]),
+      * so re-running a batch id whose commit landed is a no-op.
+      * [[build]] is batch 0. */
     def appendBatch(docs: DataFrame, idCol: String, textCol: String,
                     path: String, k: Int, bands: Int, rowsPerBand: Int,
-                    batch: Long): Unit = {
-      val sh = shingleHashTable(docs, idCol, textCol, k)
-      graft.sources.Sinks.writePartitionedDynamic(
-        bandedSignatures(docs, idCol, textCol, k, bands, rowsPerBand)
-          .withColumn("batch", lit(batch)),
-        s"$path/bands", Seq("batch"), constantPartitions = true)
-      graft.sources.Sinks.writePartitionedDynamic(
-        sh.withColumn("batch", lit(batch)), s"$path/shingles", Seq("batch"), constantPartitions = true)
-      graft.sources.Sinks.writePartitionedDynamic(
-        sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-          .withColumn("batch", lit(batch)),
-        s"$path/sizes", Seq("batch"), constantPartitions = true)
+                    batch: Long): Unit =
+      graft.streaming.TableIngest.appendSink(path, "store")(
+        rows(docs, idCol, textCol, k, bands, rowsPerBand), batch)
+
+    /** The store's rows for `docs`: one map-only projection, docs
+      * shorter than `k` tokens (no shingle, no signature) dropped. */
+    private def rows(docs: DataFrame, idCol: String, textCol: String, k: Int,
+                     bands: Int, rowsPerBand: Int): DataFrame = {
+      val toks = TextFunctions.tokens(col(textCol))
+      docs.filter(size(toks) >= k)
+        .select(col(idCol).as("doc_id"),
+          graft.plans.MinHashTokens.minhashTokens(toks, k, bands * rowsPerBand).as("sig"),
+          graft.plans.SortedShingleHashes.sortedShingleHashes(toks, k).as("shingles"))
+        .select(col("doc_id"),
+          bandHashes(col("sig"), bands, rowsPerBand).as("band_hashes"),
+          col("shingles"))
     }
 
     /** Near-dup pairs of `delta` against the store AND within `delta`
       * itself — the per-ingest-batch dedup query. Output is identical
       * to running [[minhashLshPairs]] over (store corpus ∪ delta) and
       * keeping the pairs that touch a delta doc (the spec proves it).
+      * The store is read at its latest version, which must not hold
+      * `delta` yet ([[graft.streaming.DedupIngest]] commits its pairs
+      * before the batch's store rows).
       *
       * Scale shape: the delta's band keys BROADCAST onto the store's
-      * band table — the store never shuffles (one map-side-join scan
+      * band keys — the store never shuffles (one map-side-join scan
       * of 8-byte keys, not corpus text); candidate verification joins
       * the posting lists against the (small) candidate frame — AQE
       * broadcasts it, so the store's shingle scan never shuffles
-      * either; delta×delta is the tiny inline join.
-      *
-      * @param excludeBatch ignore this store batch id — REQUIRED when
-      *        re-running a batch whose [[appendBatch]] may already
-      *        have landed (a streaming replay after a crash):
-      *        otherwise the batch's own shingle rows appear on BOTH
-      *        sides of the union and inflate intersection counts.
-      *        The partition filter prunes the `batch=N` dirs at the
-      *        scan, so the guard costs nothing when N never landed. */
+      * either; delta×delta is the tiny inline join. Each posting row
+      * carries its doc's shingle count, so verification needs no
+      * per-doc size join. */
     def incrementalPairs(delta: DataFrame, idCol: String, textCol: String,
                          path: String, k: Int, bands: Int, rowsPerBand: Int,
-                         threshold: Double,
-                         excludeBatch: Option[Long] = None): DataFrame = {
-      val sp = delta.sparkSession
-      def part(sub: String): DataFrame = {
-        val raw = sp.read.parquet(s"$path/$sub")
-        excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= b)).drop("batch")
-      }
-      val storeBands = part("bands")
-      val storeSh = part("shingles")
-      val storeSizes = part("sizes")
-      val dBands = bandedSignatures(delta, idCol, textCol, k, bands, rowsPerBand)
-      val dSh = shingleHashTable(delta, idCol, textCol, k)
-      val dSizes = dSh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+                         threshold: Double): DataFrame = {
+      val store = TableLog.snapshot(delta.sparkSession, path)
+      val d = rows(delta, idCol, textCol, k, bands, rowsPerBand)
+      def bandsOf(r: DataFrame) =
+        r.select(col("doc_id"), posexplode(col("band_hashes")))
+          .toDF("doc_id", "band", "band_hash")
+      val dBands = bandsOf(d)
       // old×new: store streams, delta broadcasts; orient ids so d1 < d2
-      val oldNew = storeBands.as("x").join(
+      val oldNew = bandsOf(store).as("x").join(
           broadcast(dBands.as("y")),
           col("x.band") === col("y.band") &&
             col("x.band_hash") === col("y.band_hash") &&
@@ -405,13 +404,14 @@ object Dedup extends org.apache.spark.internal.Logging {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       val cand = oldNew.unionByName(newNew).distinct()
-      val sh = storeSh.unionByName(dSh)
-      val sizes = storeSizes.unionByName(dSizes)
-      val inter = cand
-        .join(sh.toDF("d1", "s"), "d1")
-        .join(sh.toDF("d2", "s"), Seq("d2", "s"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-      withJaccard(inter, sizes, threshold)
+      val sh = store.unionByName(d).select(col("doc_id"),
+        size(col("shingles")).cast("long").as("n"),
+        explode(col("shingles")).as("s"))
+      jaccardAbove(cand
+        .join(sh.toDF("d1", "n1", "s"), "d1")
+        .join(sh.toDF("d2", "n2", "s"), Seq("d2", "s"))
+        .groupBy("d1", "d2", "n1", "n2").agg(count(lit(1)).as("inter")),
+        threshold)
     }
   }
 

@@ -376,7 +376,8 @@ object Pagination {
           .filter(col("pbucket") === lastBucket)
           .withColumn("pbucket", lit(lastBucket))
       else ranked.limit(0)
-    // per-writer dynamic overwrite (see Sinks.writePartitionedDynamic)
+    // dynamic overwrite scoped to THIS write via the per-writer
+    // option — never a session-conf mutation (racy under concurrency)
     ranked.unionByName(oldTopUp)
       .write.option("partitionOverwriteMode", "dynamic")
       .partitionBy("pbucket").mode("overwrite")

@@ -1177,17 +1177,31 @@ object TableLog {
   }
 
   /** The latest schema ref and the schema a widening derives from —
-    * the declared one, else the active files' own (one footer read;
-    * `noFiles` refuses a table with neither) — both from ONE state, so
-    * the ref a writer pins (`expectSchema`) is the one it widened. */
+    * the declared one, else the files' own ([[filesSchema]], what
+    * [[snapshot]] reads the head with; `noFiles` refuses a table with
+    * neither) — both from ONE state, so the ref a writer pins
+    * (`expectSchema`) is the one it widened. */
   private def headSchema(spark: SparkSession, root: String, noFiles: String)
       : (Option[String], org.apache.spark.sql.types.StructType) = {
     val s = state(spark, root)
-    (s.schemaRef, schemaOf(spark, root, s).getOrElse {
-      require(s.files.nonEmpty, noFiles)
-      ParquetMeta.schema(spark, s.fileRefs.map(resolve(root, _)): _*)
-    })
+    val cur = schemaOf(spark, root, s)
+      .orElse(filesSchema(spark, root, s.version, s.fileRefs))
+    require(cur.isDefined, noFiles)
+    (s.schemaRef, cur.get)
   }
+
+  /** A never-evolved table's schema at `version`: one footer of its
+    * files `refs`, or — for a version that removed every file (a
+    * truncate) — of the last non-empty version's. None when no version
+    * up to `version` held a file. The one derivation both readers
+    * ([[TableLogRelation.relationAt]]) and wideners ([[headSchema]])
+    * use, so a head the one serves the other can widen. */
+  private[operators] def filesSchema(spark: SparkSession, root: String,
+      version: Long, refs: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    Some(refs).filter(_.nonEmpty)
+      .orElse(lastNonEmptyFiles(spark, root, Some(version)))
+      .map(files => ParquetMeta.schema(spark, resolve(root, files.head)))
 
   /** ADD-COLUMNS-AND-APPEND in one atomic commit: `df` may carry
     * columns the table has never seen; the committed schema becomes
@@ -1361,12 +1375,12 @@ object TableLog {
   }
 
   /** The active file set of the most recent non-empty version at or
-    * before `upTo` — the empty-snapshot schema fallback shared by
-    * [[snapshot]] (through [[TableLogRelation.relationAt]]) and
-    * [[restoreTable]]. ONE forward fold over the retained versions:
-    * the state at the oldest, then each later entry once. */
-  private[operators] def lastNonEmptyFiles(spark: SparkSession, root: String,
-                                upTo: Option[Long]): Option[Seq[String]] = {
+    * before `upTo` — the empty-head schema fallback shared by
+    * [[filesSchema]] and [[restoreTable]]. ONE forward fold over the
+    * retained versions: the state at the oldest, then each later
+    * entry once. */
+  private def lastNonEmptyFiles(spark: SparkSession, root: String,
+                              upTo: Option[Long]): Option[Seq[String]] = {
     val f = fs(spark, root)
     val all = versions(spark, root)
     val vs = upTo.fold(all)(v => all.filter(_ <= v))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftbridge.{BridgeTypes, ParquetMeta}
+import org.apache.spark.sql.graftbridge.BridgeTypes
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A CATALYST-VISIBLE snapshot relation over a [[TableLog]] table: the
@@ -815,14 +815,11 @@ object TableLogRelation {
         .map(BridgeTypes.nullable).getOrElse {
       // no declared schema: take the files' own uniform schema from
       // ONE footer (files are immutable, a commit's files share one);
-      // the index already folded the log — reuse its refs. A fully
-      // purged version has none: use the last non-empty version's
-      val files = Some(index.activeRefs).filter(_.nonEmpty)
-        .orElse(TableLog.lastNonEmptyFiles(spark, root, Some(index.version)))
+      // the index already folded the log — reuse its refs
+      TableLog.filesSchema(spark, root, index.version, index.activeRefs)
         .getOrElse(sys.error(
           s"TableLog: $root has no non-empty version at or before " +
             index.version))
-      ParquetMeta.schema(spark, TableLog.resolve(root, files.head))
     }
     (index, HadoopFsRelation(index, StructType(Nil), schema, None,
       new ParquetFileFormat(), Map.empty[String, String])(spark))

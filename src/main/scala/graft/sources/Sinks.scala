@@ -18,34 +18,6 @@ object Sinks {
     df.repartition(partitionCols.map(col): _*)
       .write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
-  /** [[writePartitioned]] with DYNAMIC partition overwrite scoped to
-    * THIS write via the per-writer option — never by mutating the
-    * session conf (a save/set/restore of
-    * `spark.sql.sources.partitionOverwriteMode` races any concurrent
-    * stream/job on the same session and can leave `dynamic` set
-    * globally, silently changing unrelated overwrite semantics). The
-    * idempotent `batch=N`-overwrite discipline of the streaming
-    * ingest sinks rides on this.
-    *
-    * `constantPartitions = true` declares that every row of THIS
-    * write shares one partition-column tuple (the streaming sinks'
-    * `batch=N` literal): repartitioning by a constant hashes every
-    * row to ONE task — a single-writer throughput ceiling on large
-    * batches — so the upstream partitioning is kept instead and each
-    * task writes its own file into the single target directory
-    * (file count bounded by the upstream partition count, not
-    * tasks × directories). */
-  def writePartitionedDynamic(df: DataFrame, path: String,
-                              partitionCols: Seq[String],
-                              constantPartitions: Boolean = false): Unit = {
-    val shaped =
-      if (constantPartitions) df
-      else df.repartition(partitionCols.map(col): _*)
-    shaped.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(path)
-  }
-
   /** Plain columnar snapshot (dims, small results). */
   def writeSnapshot(df: DataFrame, path: String, mode: String = "overwrite"): Unit =
     df.coalesce(1).write.mode(mode).parquet(path)

@@ -1,38 +1,34 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, TableLog}
 
 /** Streaming near-dup ingest — the q106 incremental dedup as a
   * Structured Streaming `foreachBatch` sink: every micro-batch dedups
   * against ALL history via the materialized MinHash band store
   * ([[graft.operators.Dedup.MinhashStore]]), publishes its pair
-  * verdicts, then adds its own keys to the store. The reference's
+  * verdicts, then adds its own docs to the store. The reference's
   * consumer checks each record against its processed-keys store as it
   * arrives (consumer.py:57-92); this is that loop when "seen before"
   * means near-duplicate and the stream carries documents.
   *
-  * Per batch N, against a store holding batches < N:
-  *   1. `incrementalPairs(batch, excludeBatch = N)` — old×new pairs
-  *      (store band keys never shuffle; the batch broadcasts) plus
-  *      new×new pairs within the batch;
-  *   2. pairs land at `pairsPath/batch=N/` (dynamic partition
-  *      overwrite);
-  *   3. `appendBatch(batch, N)` adds the batch's bands/shingles/sizes
-  *      under `batch=N` dirs.
+  * Both outputs are [[TableLog]] tables. Per batch N, in commit order:
+  *   1. pairs — `incrementalPairs(batch)` against the store's latest
+  *      version (store band keys never shuffle; the batch broadcasts)
+  *      plus new×new pairs within the batch, appended to `pairsPath`
+  *      as (d1, d2, jaccard, batch) in one commit tagged `pairs-bN`;
+  *   2. store — `appendBatch(batch, N)`, one commit tagged `store-bN`.
   *
-  * Exactly-once from at-least-once: foreachBatch may REPLAY a batch id
-  * after a crash, and the replay may arrive with steps 2 and/or 3
-  * already landed. Every write is keyed by the batch id and is an
-  * idempotent dynamic-partition overwrite of exactly the `batch=N`
-  * directories, and step 1 excludes `batch=N` from the store read —
-  * so a replay recomputes the same pairs against the same history and
-  * rewrites the same dirs with the same content, whatever the crash
-  * point. State is the STORE, not the state store: nothing ages out
-  * of a watermark horizon (contrast [[EventPipeline
+  * Exactly-once from at-least-once: foreachBatch may REPLAY the last
+  * batch after a crash, with either commit already landed. Each
+  * commit's tag makes its replay a no-op, and the commit order
+  * ([[Ingest.link]]) proves the store read of a pairs commit that is
+  * still missing holds exactly the batches before N — so the replay
+  * recomputes the same pairs against the same history, whatever the
+  * crash point. State is the STORE, not the state store: nothing ages
+  * out of a watermark horizon (contrast [[EventPipeline
   * .dedupStreamByContent]], whose fingerprint state is bounded by the
   * watermark), and a restart resumes against the full history for
   * free.
@@ -53,28 +49,21 @@ object DedupIngest {
   def sink(storePath: String, pairsPath: String, idCol: String,
            textCol: String, k: Int, bands: Int, rowsPerBand: Int,
            threshold: Double): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      val sp = batch.sparkSession
-      if (!batch.isEmpty) {
-        val b = batch.persist() // read by pairs (twice) + append
-        try {
-          val bandsPath = new Path(s"$storePath/bands")
-          val hasHistory =
-            bandsPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-              .exists(bandsPath)
-          val pairs =
-            if (hasHistory)
-              Dedup.MinhashStore.incrementalPairs(b, idCol, textCol,
-                storePath, k, bands, rowsPerBand, threshold,
-                excludeBatch = Some(batchId))
-            else // first batch ever: history is empty, in-batch only
-              Dedup.minhashLshPairs(b, idCol, textCol, k, bands,
-                rowsPerBand, threshold)
-          graft.sources.Sinks.writePartitionedDynamic(
-            pairs.withColumn("batch", lit(batchId)), pairsPath, Seq("batch"), constantPartitions = true)
-          Dedup.MinhashStore.appendBatch(b, idCol, textCol, storePath,
-            k, bands, rowsPerBand, batch = batchId)
-        } finally b.unpersist()
+    val tags = new Ingest.TagCache(pairsPath)
+    (batch, batchId) => Ingest.materialized(batch) { b =>
+      val sp = b.sparkSession
+      Ingest.link(sp, tags, pairsPath, s"pairs-b$batchId") {
+        val pairs =
+          if (TableLog.versions(sp, storePath).nonEmpty)
+            Dedup.MinhashStore.incrementalPairs(b, idCol, textCol,
+              storePath, k, bands, rowsPerBand, threshold)
+          else // first batch ever: history is empty, in-batch only
+            Dedup.minhashLshPairs(b, idCol, textCol, k, bands,
+              rowsPerBand, threshold)
+        pairs.withColumn("batch", lit(batchId))
       }
+      Dedup.MinhashStore.appendBatch(b, idCol, textCol, storePath,
+        k, bands, rowsPerBand, batch = batchId)
+    }
   }
 }

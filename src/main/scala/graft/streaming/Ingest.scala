@@ -6,9 +6,10 @@ import graft.operators.TableLog
 
 /** Shared exactly-once plumbing for the [[graft.operators.TableLog]]-
   * backed streaming sinks ([[TableIngest]], [[MergeIngest]]'s CDC
-  * and last-writer-wins sinks, [[CheckedIngest]], [[EvolvingIngest]]):
-  * the committed-tag cache
-  * that turns at-least-once foreachBatch replays into no-ops, and the
+  * and last-writer-wins sinks, [[CheckedIngest]], [[EvolvingIngest]],
+  * [[DedupIngest]], [[PackIngest]], [[DriftIngest]]): the committed-tag
+  * cache that turns at-least-once foreachBatch replays into no-ops,
+  * the tagged links of a multi-table sink's commit chain, and the
   * conflict-retry loop for commits that carry expect-pins. One owner
   * for the discipline — a fix to the tag scheme or the retry bound
   * lands once instead of drifting across sinks. */
@@ -35,6 +36,46 @@ private[streaming] object Ingest {
     }
     def mark(tag: String): Unit = seen += tag
   }
+
+  /** Run `body` on `batch` materialized ONCE: one job runs the
+    * batch's source plan (a Kafka batch is fetched once, not once per
+    * action) and caches it for every output derived from it. An empty
+    * batch (a watermark-only trigger) runs nothing else and commits
+    * nothing. */
+  def materialized(batch: DataFrame)(body: DataFrame => Unit): Unit = {
+    val b = batch.persist()
+    // the cached plan's rows, counted: building the cache IS the one
+    // job (a Dataset count() would add its aggregation's own jobs)
+    try if (b.queryExecution.toRdd.count() > 0L) body(b)
+    finally b.unpersist()
+  }
+
+  /** The table at `root` at its latest version, or None before its
+    * first commit. */
+  def latest(sp: SparkSession, root: String): Option[DataFrame] =
+    if (TableLog.versions(sp, root).isEmpty) None
+    else Some(TableLog.snapshot(sp, root))
+
+  /** One link of a multi-table sink's COMMIT CHAIN: unless `tag` is
+    * committed, stage `out` (one job) and commit it under `tag` — even
+    * when it holds no rows, so the tag alone records that the link
+    * landed. `replace` also removes the table's active files (a whole-
+    * table replace, pinned against a concurrent one).
+    *
+    * A sink commits its links in dependency order, each table read by
+    * a link committed after it. foreachBatch only ever replays the
+    * last batch, so when a link's tag is missing, so is every later
+    * link's: the tables it reads still stand at the previous batch,
+    * and their latest version is the right input — whatever the crash
+    * point, the replay recomputes what first delivery would have. */
+  def link(sp: SparkSession, tags: TagCache, root: String, tag: String,
+           replace: Boolean = false)(out: => DataFrame): Unit =
+    if (!tags.known(sp, tag)) {
+      val prior = if (replace) TableLog.state(sp, root).fileRefs else Nil
+      TableLog.commit(sp, root, add = TableLog.stageNonEmpty(out, root, tag),
+        remove = prior, tag = Some(tag), expectActive = prior)
+      tags.mark(tag)
+    }
 
   /** A sink whose commits name their own data files as the change
     * feed (`cdf == add`) records no ids of its own: [[TableLog.changes]]

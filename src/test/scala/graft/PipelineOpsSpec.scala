@@ -222,23 +222,4 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("target predicate matched no tokens"))
   }
-
-  test("constant-partition dynamic writes keep upstream parallelism") {
-    import graft.sources.Sinks
-    val df = spark.range(0, 1000, 1, 8).toDF("id")
-      .withColumn("batch", lit(3L))
-    val root = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    def parquetFiles(p: String) =
-      new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-    // declared-constant partition: the 8 upstream partitions each
-    // write their own file — no single-writer ceiling
-    Sinks.writePartitionedDynamic(df, s"$root/multi", Seq("batch"),
-      constantPartitions = true)
-    assert(parquetFiles(s"$root/multi/batch=3") === 8,
-      "constant-partition write collapsed upstream parallelism")
-    // default path still repartitions by the columns (the multi-valued
-    // key layout), which for a constant key is one file
-    Sinks.writePartitionedDynamic(df, s"$root/single", Seq("batch"))
-    assert(parquetFiles(s"$root/single/batch=3") === 1)
-  }
 }

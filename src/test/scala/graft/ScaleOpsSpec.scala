@@ -808,7 +808,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("incremental minhash dedup over the band store equals the full-corpus run") {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, TableLog}
     val docs = Tables.documents(spark, TestSpark.sf)
     val path = Files.createTempDirectory("graft_mhstore").toString + "/store"
     val v1 = docs.filter(col("doc_id") % 31 =!= 0)
@@ -823,18 +823,17 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(inc.exceptAll(full).count() === 0)
     assert(full.exceptAll(inc).count() === 0)
     // appendBatch extends history idempotently: after absorbing the
-    // delta (twice — the rerun must be a no-op overwrite), the store
-    // is row-identical to a fresh build over the full corpus
+    // delta (twice — the rerun's tag is committed, so it is a no-op),
+    // the store is row-identical to a fresh build over the full corpus
     Dedup.MinhashStore.appendBatch(delta, "doc_id", "text", path, 3, 16, 4, batch = 1L)
     Dedup.MinhashStore.appendBatch(delta, "doc_id", "text", path, 3, 16, 4, batch = 1L)
+    assert(TableLog.versions(spark, path) === Seq(0L, 1L))
     val freshPath = Files.createTempDirectory("graft_mhfresh").toString + "/store"
     Dedup.MinhashStore.build(docs, "doc_id", "text", freshPath, 3, 16, 4)
-    for (part <- Seq("bands", "shingles", "sizes")) {
-      val grown = spark.read.parquet(s"$path/$part").drop("batch")
-      val fresh = spark.read.parquet(s"$freshPath/$part").drop("batch")
-      assert(grown.exceptAll(fresh).count() === 0, s"$part: extra rows after append")
-      assert(fresh.exceptAll(grown).count() === 0, s"$part: missing rows after append")
-    }
+    val grown = TableLog.snapshot(spark, path)
+    val fresh = TableLog.snapshot(spark, freshPath)
+    assert(grown.exceptAll(fresh).count() === 0, "extra rows after append")
+    assert(fresh.exceptAll(grown).count() === 0, "missing rows after append")
   }
 
   test("tokenBudgetMixture keeps a budget-respecting md5-order prefix per source") {

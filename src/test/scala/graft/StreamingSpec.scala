@@ -41,6 +41,49 @@ class StreamingSpec extends AnyFunSuite {
     (active(toV) -- active(fromV)).map(rel => localPath(s"$root/$rel"))
   }
 
+  /** The table at `root` holds exactly one commit per batch: versions
+    * 0 until `batches`, tagged `<prefix>-b0` … in order. */
+  private def assertOneCommitPerBatch(root: String, prefix: String,
+                                      batches: Int): Unit = {
+    import graft.operators.TableLog
+    assert(TableLog.versions(spark, root) === (0L until batches))
+    assert((0 until batches).map(b =>
+      TableLog.versionOfTag(spark, root, s"$prefix-b$b")) ===
+      (0 until batches).map(b => Some(b.toLong)))
+  }
+
+  /** Every crash point of a multi-table sink's last batch. For each
+    * table k of `tables` (paths under `landed`, in commit order), a
+    * copy of the landed store loses the newest `_log` entry of table k
+    * and of every later table — the state a crash just before commit
+    * k leaves, its staged files orphaned. `replay(copy)` then replays
+    * the last batch through a fresh sink instance (a restart's empty
+    * tag cache). The copy must then read `expected` through `answer`
+    * and hold exactly one commit per batch in each table, and a second
+    * replay must add no version. */
+  private def replayEachCrashPoint[A](landed: String, tables: Seq[String],
+      batches: Int, expected: A)(replay: String => Unit)(
+      answer: String => A): Unit = {
+    import graft.operators.TableLog
+    tables.indices.foreach { k =>
+      val d = java.nio.file.Files.createTempDirectory("graft_crash").toString
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(landed), new java.io.File(d))
+      tables.drop(k).foreach { t =>
+        val newest = new java.io.File(s"$d/$t/_log").listFiles()
+          .filter(_.getName.endsWith(".json")).maxBy(_.getName)
+        assert(newest.delete())
+      }
+      replay(d)
+      assert(answer(d) === expected, s"crash before the ${tables(k)} commit")
+      tables.foreach(t =>
+        assertOneCommitPerBatch(s"$d/$t", t.split('/').last, batches))
+      replay(d)
+      tables.foreach(t =>
+        assert(TableLog.versions(spark, s"$d/$t") === (0L until batches)))
+    }
+  }
+
   /** Run a streaming df to a memory sink, feeding `batches` one
     * micro-batch at a time. */
   private def runBatches(mkDf: MemoryStream[Event] => DataFrame, name: String,
@@ -773,7 +816,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(batch1: _*); q.processAllAvailable()
     q.stop()
 
-    def pairSet() = spark.read.parquet(pairsP)
+    def pairSet(d: String = dir) = graft.operators.TableLog.snapshot(spark, s"$d/pairs")
       .select("d1", "d2", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // every pair lands exactly once, in the batch of its LATER member:
@@ -787,19 +830,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === full)
     // the exact cross-batch duplicate is banding-proof (every band
     // matches) and must be attributed to the later batch
-    val b1 = spark.read.parquet(pairsP).filter(col("batch") === 1)
+    val b1 = graft.operators.TableLog.snapshot(spark, pairsP)
+      .filter(col("batch") === 1)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(b1.contains((1L, 4L)))
 
-    // replay batch 1 AFTER everything landed (the worst crash point:
-    // pairs written, store appended, checkpoint not committed) — the
-    // sink must rewrite the same dirs with the same content
+    // replay batch 1 AFTER everything landed (pairs and store
+    // committed, checkpoint not): both tags are known, nothing lands
     snk(batch1.toDF("doc_id", "text"), 1L)
     assert(pairSet() === full)
-    val storeBatches = spark.read.parquet(s"$store/bands")
-      .select(col("batch").cast("long")) // partition col infers as int
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(storeBatches === Set(0L, 1L))
+    assertOneCommitPerBatch(store, "store", 2)
+    assertOneCommitPerBatch(pairsP, "pairs", 2)
+    replayEachCrashPoint(dir, Seq("pairs", "store"), 2, full)(d =>
+      graft.streaming.DedupIngest.sink(s"$d/store", s"$d/pairs", "doc_id",
+        "text", k = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)(
+        batch1.toDF("doc_id", "text"), 1L))(pairSet(_))
   }
 
   test("TableIngest: one atomic commit per batch, O(delta) feed, replay exactly-once") {
@@ -1226,7 +1271,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(b1.toSeq: _*); q.processAllAvailable()
     q.stop()
 
-    def finalPsi() = spark.read.parquet(s"$dir/store/psi")
+    def finalPsi(d: String = dir) = graft.operators.TableLog.snapshot(spark, s"$d/store/psi")
       .filter(col("batch") === 1)
       .select("dim", "psi", "status", "mean_a", "mean_b").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
@@ -1248,14 +1293,16 @@ class StreamingSpec extends AnyFunSuite {
       assert(s._3 === o._3, s"status mismatch at dim ${s._1}")
       assert(math.abs(s._4 - o._4) <= 1e-3 && math.abs(s._5 - o._5) <= 1e-3)
     }
-    // worst-point replay (hist + psi landed, checkpoint uncommitted):
-    // the sink must fold batch 1 exactly once and rewrite identical rows
+    // replay after everything landed (hist, cum and psi committed,
+    // checkpoint not): batch 1 folds exactly once, nothing lands
     snk(b1.toSeq.toDF("vec_id", "embedding"), 1L)
     assert(finalPsi().toSeq === streamed.toSeq)
-    val histBatches = spark.read.parquet(s"$dir/store/hist")
-      .select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(histBatches === Set(0L, 1L))
+    Seq("hist", "cum", "psi").foreach(t =>
+      assertOneCommitPerBatch(s"$dir/store/$t", t, 2))
+    replayEachCrashPoint(dir, Seq("store/hist", "store/cum", "store/psi"), 2,
+        streamed.toSeq)(d =>
+      graft.streaming.DriftIngest.sink(s"$d/ref", s"$d/store", "embedding")(
+        b1.toSeq.toDF("vec_id", "embedding"), 1L))(finalPsi(_).toSeq)
   }
 
   test("PackIngest: id-ordered stream packs exactly like the one-shot batch; replay stable") {
@@ -1280,7 +1327,7 @@ class StreamingSpec extends AnyFunSuite {
     batches.foreach { b => mem.addData(b.toSeq: _*); q.processAllAvailable() }
     q.stop()
 
-    def streamedAssign() = spark.read.parquet(s"$dir/store/assign")
+    def streamedAssign(d: String = dir) = graft.operators.TableLog.snapshot(spark, s"$d/store/assign")
       .select("doc_id", "seq_id", "cum").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val streamed = streamedAssign()
@@ -1296,14 +1343,71 @@ class StreamingSpec extends AnyFunSuite {
       "continuous packing must equal the one-shot batch packing")
     // sequences are final: a doc's seq_id never exceeds its cum bound
     streamed.foreach { case (_, (sid, _)) => assert(sid >= 0L) }
-    // worst-point replay of the last batch (assign + base landed,
-    // checkpoint uncommitted): identical assignments, no double-fold
+    // replay of the last batch after everything landed (assign and
+    // base committed, checkpoint not): identical assignments, no
+    // double-fold
     snk(batches.last.toSeq.toDF("source", "doc_id", "n_tokens", "__tie"), 2L)
     assert(streamedAssign() === streamed)
-    val baseBatches = spark.read.parquet(s"$dir/store/base")
-      .select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(baseBatches === Set(0L, 1L, 2L))
+    Seq("assign", "base").foreach(t =>
+      assertOneCommitPerBatch(s"$dir/store/$t", t, 3))
+    replayEachCrashPoint(dir, Seq("store/assign", "store/base"), 3, oneShot)(d =>
+      graft.streaming.PackIngest.sink(s"$d/store", seqLen)(
+        batches.last.toSeq.toDF("source", "doc_id", "n_tokens", "__tie"), 2L))(
+      streamedAssign(_))
+  }
+
+  test("DedupIngest, DriftIngest, PackIngest: a micro-batch's source plan " +
+       "runs once; a replay or an empty batch is one job and commits nothing") {
+    import org.apache.spark.graftspec.JobProbe
+    import graft.operators.TableLog
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_source_once")
+      .toFile.getAbsolutePath
+    // every evaluation of a batch row's plan counts once
+    val runs = spark.sparkContext.longAccumulator("source_rows")
+    val seen = udf { (id: Long) => runs.add(1L); id }.asNondeterministic()
+    val texts = Seq("the quick brown fox jumps over the lazy dog tonight",
+      "the quick brown fox jumps over the lazy dog today",
+      "completely different content with no overlap at all here")
+    val docs = spark.range(0, texts.size, 1, 2)
+      .select(seen(col("id") + 1).as("doc_id"),
+        element_at(typedLit(texts), (col("id") + 1).cast("int")).as("text"))
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf)
+      .filter(col("vec_id") % 4 === 0)
+      .select(seen(col("vec_id")).as("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+    graft.streaming.DriftIngest.writeReference(
+      graft.sources.Tables.embeddings(spark, TestSpark.sf)
+        .filter(col("vec_id") % 4 === 1), "embedding", s"$dir/ref")
+    val packed = graft.sources.Tables.documents(spark, TestSpark.sf)
+      .filter(col("doc_id") % 3 === 0)
+      .select(col("source"), seen(col("doc_id")).as("doc_id"),
+        size(graft.functions.TextFunctions.tokens(coalesce(col("text"), lit(""))))
+          .cast("long").as("n_tokens"),
+        md5(coalesce(col("text"), lit(""))).as("__tie"))
+    val cases = Seq(
+      ("dedup", docs, Seq("store", "pairs"),
+        graft.streaming.DedupIngest.sink(s"$dir/dedup/store",
+          s"$dir/dedup/pairs", "doc_id", "text", k = 3, bands = 16,
+          rowsPerBand = 4, threshold = 0.5)),
+      ("drift", emb, Seq("hist", "cum", "psi"),
+        graft.streaming.DriftIngest.sink(s"$dir/ref", s"$dir/drift",
+          "embedding")),
+      ("pack", packed, Seq("assign", "base"),
+        graft.streaming.PackIngest.sink(s"$dir/pack", 64L)))
+    cases.foreach { case (name, batch, tables, snk) =>
+      def versions = tables.map(t => TableLog.versions(spark, s"$dir/$name/$t"))
+      val rows = batch.count()
+      runs.reset()
+      snk(batch, 0L)
+      assert(runs.value === rows, s"$name: the batch's plan ran more than once")
+      assert(versions.forall(_ == Seq(0L)))
+      val (_, nReplay) = JobProbe.jobs(spark.sparkContext)(snk(batch, 0L))
+      assert(nReplay === 1, s"$name: a replay runs only its materialization")
+      val (_, nEmpty) = JobProbe.jobs(spark.sparkContext)(
+        snk(batch.filter(rand(1L) < -1.0), 1L)) // empty, but still planned
+      assert(nEmpty === 1, s"$name: an empty batch runs only its materialization")
+      assert(versions.forall(_ == Seq(0L)), s"$name: an empty batch committed")
+    }
   }
 
   test("tablechanges source: commit feeds stream as micro-batches, restart resumes from the WAL, feed-less commits fail loudly") {

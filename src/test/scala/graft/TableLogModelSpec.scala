@@ -121,18 +121,18 @@ class TableLogModelSpec extends AnyFunSuite {
         val (st, sc) = histByVersion(v)
         cur = st; sidecars = sc
         opLog += s"restore($v)"
-      } else if (nextCol > 0 || cur.nonEmpty) {
+      } else {
         // metadata-only schema widening: must not disturb row reads,
-        // at the head or via time travel below. It needs a schema to
-        // widen: a declared one (any earlier widening leaves one in
-        // force, restore included) or live files to read it from
+        // at the head or via time travel below. It widens the schema
+        // the head reads with — a declared one, else the files' own,
+        // the last non-empty version's after a truncate
         nextCol += 1
         TableLog.addColumns(spark, root,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField(
               s"extra$nextCol", org.apache.spark.sql.types.StringType))))
         opLog += "addColumns"
-      } else appendOp()
+      }
       record()
 
       val got = TableLog.snapshot(spark, root, None, Some("id"))
@@ -156,6 +156,24 @@ class TableLogModelSpec extends AnyFunSuite {
     assert(checkpointed.nonEmpty && horizon > 0L,
       s"seed=$seed never folded a read from a checkpoint: ${opLog.mkString(" -> ")}")
     info(opLog.mkString(" -> "))
+  }
+
+  test("a truncated never-evolved table widens with the schema its " +
+      "snapshot serves: truncate -> addColumns -> append -> snapshot") {
+    val spark0 = spark
+    import spark0.implicits._
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val root = Files.createTempDirectory("graft_trunc_alter").toString + "/t"
+    TableLog.commit(spark, root, TableLog.stageWrite(
+      Seq((1L, 7L)).toDF("id", "v").coalesce(1), root, "a"), Nil)
+    TableLog.truncateTable(spark, root)
+    TableLog.addColumns(spark, root,
+      StructType(Seq(StructField("note", StringType))))
+    TableLog.commit(spark, root, TableLog.stageWrite(
+      Seq((2L, 14L, "n")).toDF("id", "v", "note").coalesce(1), root, "b"), Nil)
+    val got = TableLog.snapshot(spark, root)
+    assert(got.columns.toSeq === Seq("id", "v", "note"))
+    assert(got.as[(Long, Long, String)].collect().toSeq === Seq((2L, 14L, "n")))
   }
 
   test("seeded random op sequences: live snapshot and every version's " +
